@@ -2,15 +2,21 @@
 survivor counts.
 
 Pages come from the library's own deterministic page builder
-(``narowi_ocr_spark.sources.pages.build_page``); the seed selects the
-page-id range, so the same seed always gives the same bytes. Defects are
-planted by ``pmod(xxhash64(url), 40)`` classes (``pmod``, not ``%``: a
-signed hash under ``%`` is negative half the time and plants half the
-rate), and the generator records how many rows each stage of the
-release must keep.
+(``narowi_ocr_spark.sources.pages.build_page``), written to parquet by
+one plain Python process per core; the seed selects the page-id range,
+so the same seed always gives the same bytes. A release corpus has
+defects planted by class ``pmod(xxhash64(url), 40)``, Spark's hash
+computed here in Python (``pmod``, not ``%`` on the signed hash in a
+language whose ``%`` keeps the sign: that plants half the rate). Each
+class keeps exactly its share of the base pages, so every seed plants
+the same counts and only the page content varies; the run checks the
+classes again with Spark's own ``F.pmod(F.xxhash64("url"), 40)``. The
+generator records how many rows each stage of the release must keep.
 
 Corpora are cached under the work directory by name, seed, size and a
-digest of this file plus the page builder.
+digest of this file plus the page builder. No generator step touches
+Spark, so the benchmark's session does the same set-up with or without
+the cache.
 """
 
 from __future__ import annotations
@@ -21,13 +27,7 @@ import os
 import shutil
 import subprocess
 import sys
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from narowi_ocr_spark.schema import PAGES_SCHEMA
 from narowi_ocr_spark.sources import pages as _pages
 
 # Pages per seed: seed s draws ids from [s' * SEED_STRIDE, ...), with
@@ -37,7 +37,9 @@ SEED_STRIDE = 1_000_000
 SEED_SPACE = 100_000
 WARM_LO = SEED_SPACE * SEED_STRIDE
 CLASSES = 40  # planting modulus: one class is 2.5% of base pages
+SPARK_XXHASH_SEED = 42  # the seed of Spark's xxhash64()
 KEEP_CORPORA = 6  # cached corpora kept in the work directory
+PROSE_VOCAB = 64  # release pages: prose over a wide vocabulary
 
 # release corpus classes (by pmod(xxhash64(url), 40))
 HEAD = range(0, 10)  # 25%: gets 1 exact mirror + NEAR_VARIANTS near-dups
@@ -68,106 +70,174 @@ def _digest() -> str:
     return h.hexdigest()[:12]
 
 
-def _base(spark: SparkSession, lo: int, n: int, parts: int, prose: bool) -> DataFrame:
-    vocab = 64 if prose else 1
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [_pages.build_page(int(i), vocab, prose) for i in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return spark.range(lo, lo + n, numPartitions=parts).mapInPandas(
-        gen, PAGES_SCHEMA
-    )
+_M64 = 2**64 - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
 
 
-def _write_part(path: str, lo: int, hi: int) -> None:
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxhash64(data: bytes, seed: int = SPARK_XXHASH_SEED) -> int:
+    """XXH64 of ``data`` as a signed 64-bit integer: what Spark's
+    ``xxhash64`` returns for a string column (its UTF-8 bytes, seed 42)."""
+    n, i = len(data), 0
+    word = lambda j: int.from_bytes(data[j : j + 8], "little")  # noqa: E731
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_round(v[k], word(i + 8 * k)) for k in range(4)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for lane in v:
+            h = ((h ^ _round(0, lane)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h = (_rotl(h ^ _round(0, word(i)), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h = (_rotl(h ^ (int.from_bytes(data[i : i + 4], "little") * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h = _rotl(h ^ (data[i] * _P5 & _M64), 11) * _P1 & _M64
+        i += 1
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - 2**64 if h >> 63 else h
+
+
+def page_class(url: str) -> int:
+    """``pmod(xxhash64(url), CLASSES)``: a class in [0, CLASSES)."""
+    return xxhash64(url.encode("utf-8")) % CLASSES  # a positive modulus: pmod
+
+
+def _html_page(paras: list[str]) -> bytes:
+    return ("<html><body>" + "".join(f"<p>{p}</p>" for p in paras) + "</body></html>").encode()
+
+
+def _with_line(row: dict, line: str) -> dict:
+    """The page with one more content paragraph."""
+    html = row["html"].decode().replace("<footer>", f"<p>{line}</p><footer>")
+    return dict(row, html=html.encode(), text=row["text"] + "\n" + line)
+
+
+_REPLACED = {
+    REPETITIVE: ([REP_PARA] * 6, None),
+    NON_ENGLISH: ([DE_PARA] * 4, None),
+    LOW_QUALITY: ([LQ_PARA] * 3, None),
+    PII: (None, PII_LINE),
+    BLOCKLISTED: (None, BLOCK_LINE),
+    C4_BRACE: (None, BRACE_LINE),
+}
+
+
+def _planted(row: dict, k: int) -> list[dict]:
+    """The rows a base page of class ``k`` becomes: reject and PII
+    classes are rewritten in place; a cluster head also gains an exact
+    mirror and NEAR_VARIANTS near variants."""
+    paras, line = _REPLACED.get(k, (None, None))
+    if paras:
+        row = dict(row, html=_html_page(paras), text="\n".join(paras))
+    elif line:
+        row = _with_line(row, line)
+    out = [row]
+    if k in HEAD:
+        out.append(dict(row, url="https://mirror.example/x/" + row["url"]))
+        for j, near in enumerate(NEAR_LINES[:NEAR_VARIANTS]):
+            out.append(dict(_with_line(row, near), url=f"https://near{j}.example/x/" + row["url"]))
+    return out
+
+
+_NAMES = ["url", "warc_ts", "html", "text", "lang"]
+
+
+def _write_table(rows: list[dict], path: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    rows = list(zip(*(_pages.build_page(i) for i in range(lo, hi))))
-    names = ["url", "warc_ts", "html", "text", "lang"]
     types = [pa.string(), pa.timestamp("us", tz="UTC"), pa.binary(), pa.string(), pa.string()]
-    table = pa.table([pa.array(c, t) for c, t in zip(rows, types)], names=names)
-    pq.write_table(table, f"{path}/part-{lo:012d}.parquet")
+    cols = [pa.array([r[c] for r in rows], t) for c, t in zip(_NAMES, types)]
+    pq.write_table(pa.table(cols, names=_NAMES), path)
 
 
-def _write_fixture_pages(path: str, lo: int, n: int, files: int) -> None:
-    """Fixture pages (no planted defects), one parquet file per id range,
-    written by one plain Python process per core: no Spark job, so the
-    session's first job is the warm-up pass whether or not the corpus
-    was cached."""
+def _write_part(path: str, lo: int, hi: int, mode: str, quota: int) -> None:
+    """Pages ``lo .. hi-1``. ``fixture``: as built. ``release``: prose
+    pages of the classes still short of ``quota`` (the lowest ids of
+    each class win, so each writer keeps up to ``quota`` per class and
+    the parent trims), with each page's class in ``k``."""
+    prose = mode == "release"
+    rows, taken = [], {}
+    for i in range(lo, hi):
+        row = dict(zip(_NAMES, _pages.build_page(i, PROSE_VOCAB if prose else 1, prose)))
+        if prose:
+            k = row["k"] = page_class(row["url"])
+            if taken.get(k, 0) >= quota:
+                continue
+            taken[k] = taken.get(k, 0) + 1
+        rows.append(row)
+    if prose:
+        with open(f"{path}/part-{lo:012d}.json", "w") as f:
+            json.dump([dict(r, html=r["html"].decode(), warc_ts=r["warc_ts"].isoformat()) for r in rows], f)
+    else:
+        _write_table(rows, f"{path}/part-{lo:012d}.parquet")
+
+
+def _run_writers(path: str, lo: int, n: int, parts: int, mode: str, quota: int = 0) -> None:
+    """Pages ``lo .. lo+n-1`` in ``parts`` id ranges, one file each,
+    written by one plain Python process per core."""
     os.makedirs(path)
-    bounds = [lo + n * f // files for f in range(files + 1)]
+    bounds = [lo + n * f // parts for f in range(parts + 1)]
     ranges = [f"{a}:{b}" for a, b in zip(bounds, bounds[1:])]
     cores = len(os.sched_getaffinity(0))
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(sys.path))
     procs = [
-        subprocess.Popen([sys.executable, __file__, path, *ranges[w::cores]], env=env)
+        subprocess.Popen(
+            [sys.executable, __file__, path, mode, str(quota), *ranges[w::cores]],
+            env=env,
+        )
         for w in range(cores)
     ]
     if any([p.wait() for p in procs]):
-        raise RuntimeError(f"fixture page writer failed under {path}")
+        raise RuntimeError(f"page writer failed under {path}")
 
 
-def _html_page(paras: list[str]) -> F.Column:
-    body = "".join(f"<p>{p}</p>" for p in paras)
-    return F.encode(
-        F.concat(F.lit("<html><body>"), F.lit(body), F.lit("</body></html>")),
-        "utf-8",
-    )
+def _release_pages(root: str, lo: int, n_base: int, files: int) -> dict:
+    """Write the release corpus of ``n_base`` base pages (a multiple of
+    CLASSES) under ``root/pages``; returns the planted class counts."""
+    from datetime import datetime
 
-
-def _with_line(line: str) -> tuple[F.Column, F.Column]:
-    """(html, text) of a base page with one more content paragraph."""
-    html = F.encode(
-        F.regexp_replace(
-            F.decode("html", "utf-8"), "<footer>", f"<p>{line}</p><footer>"
-        ),
-        "utf-8",
-    )
-    return html, F.concat(F.col("text"), F.lit("\n" + line))
-
-
-def _release_table(base: DataFrame) -> DataFrame:
-    """Base pages with planted defects: cluster heads gain an exact
-    mirror and near variants (appended rows); six reject/PII classes are
-    rewritten in place."""
-    k = F.col("k")
-    replaced = {
-        REPETITIVE: (_html_page([REP_PARA] * 6), F.lit("\n".join([REP_PARA] * 6))),
-        PII: _with_line(PII_LINE),
-        NON_ENGLISH: (_html_page([DE_PARA] * 4), F.lit("\n".join([DE_PARA] * 4))),
-        LOW_QUALITY: (_html_page([LQ_PARA] * 3), F.lit("\n".join([LQ_PARA] * 3))),
-        BLOCKLISTED: _with_line(BLOCK_LINE),
-        C4_BRACE: _with_line(BRACE_LINE),
-    }
-    html, text = F.col("html"), F.col("text")
-    for cls, (h, t) in replaced.items():
-        html = F.when(k == cls, h).otherwise(html)
-        text = F.when(k == cls, t).otherwise(text)
-    cols = ["url", "warc_ts", "html", "text", "lang"]
-    out = base.select("url", "warc_ts", html.alias("html"), text.alias("text"), "lang")
-    heads = base.where(k < len(HEAD))
-    copies = [
-        heads.select(
-            F.concat(F.lit("https://mirror.example/x/"), "url").alias("url"),
-            "warc_ts", "html", "text", "lang",
-        )
-    ]
-    for j, line in enumerate(NEAR_LINES[:NEAR_VARIANTS]):
-        h, t = _with_line(line)
-        copies.append(
-            heads.select(
-                F.concat(F.lit(f"https://near{j}.example/x/"), "url").alias("url"),
-                "warc_ts", h.alias("html"), t.alias("text"), "lang",
-            )
-        )
-    for c in copies:
-        out = out.unionByName(c.select(*cols))
-    return out
+    quota = n_base // CLASSES
+    raw = os.path.join(root, "candidates")
+    # candidates average 4 * quota + 20 per class: every class fills up
+    _run_writers(raw, lo, CLASSES * (4 * quota + 20), 4 * len(os.sched_getaffinity(0)), "release", quota)
+    cands = []
+    for name in sorted(os.listdir(raw)):
+        with open(os.path.join(raw, name)) as f:
+            cands.extend(json.load(f))
+    shutil.rmtree(raw)
+    by_class: dict[int, int] = {}
+    rows = []
+    for r in cands:  # id order: files and rows are in page-id order
+        k = r.pop("k")
+        if by_class.get(k, 0) < quota:
+            by_class[k] = by_class.get(k, 0) + 1
+            r.update(html=r["html"].encode(), warc_ts=datetime.fromisoformat(r["warc_ts"]))
+            rows.extend(_planted(r, k))
+    if sorted(by_class.values()) != [quota] * CLASSES:
+        raise RuntimeError(f"class quotas not met under {root}: {by_class}")
+    path = os.path.join(root, "pages")
+    os.makedirs(path)
+    for f in range(files):
+        _write_table(rows[f::files], f"{path}/part-{f:05d}.parquet")
+    return by_class
 
 
 def expected_release(n_base: int, by_class: dict[int, int]) -> dict[str, int]:
@@ -189,51 +259,46 @@ def expected_release(n_base: int, by_class: dict[int, int]) -> dict[str, int]:
     }
 
 
-def build(
-    spark: SparkSession,
-    workdir: str,
-    kind: str,
-    seed: int,
-    n_base: int,
-    files: int,
-    warm: bool = False,
-) -> tuple[str, dict]:
-    """(parquet path, meta) of the ``kind`` ('extract' or 'release')
-    corpus for ``seed``, or of its warm-up slice (``warm``, the same for
-    every seed); generated once and cached. ``meta['expected']`` holds
-    the planted survivor counts of a release corpus."""
-    lo = WARM_LO if warm else (seed % SEED_SPACE) * SEED_STRIDE
+def _root(workdir: str, kind: str, seed: int, n_base: int, files: int, warm: bool) -> str:
     tag = f"{kind}-{'warm' if warm else f's{seed}'}-n{n_base}-f{files}-{_digest()}"
-    root = os.path.join(workdir, "corpus", tag)
-    meta_path = os.path.join(root, "meta.json")
-    if os.path.exists(meta_path):
+    return os.path.join(workdir, "corpus", tag)
+
+
+def prepare(workdir: str, kind: str, seed: int, size: dict) -> tuple[list, bool]:
+    """[(parquet path, meta)] of the warm-up slice (the same for every
+    seed) and of the ``kind`` ('extract' or 'release') corpus for
+    ``seed``, and whether both were cached; missing ones are generated.
+    ``meta['expected']`` holds the planted survivor counts of a release
+    corpus."""
+    out, cached = [], True
+    for n_base, files, warm in (
+        (size["warm_base"], size["warm_files"], True),
+        (size["n_base"], size["files"], False),
+    ):
+        if kind == "release":
+            n_base -= n_base % CLASSES
+        root = _root(workdir, kind, seed, n_base, files, warm)
+        meta_path = os.path.join(root, "meta.json")
+        if not os.path.exists(meta_path):
+            cached = False
+            shutil.rmtree(root, ignore_errors=True)
+            lo = WARM_LO if warm else (seed % SEED_SPACE) * SEED_STRIDE
+            meta = {"kind": kind, "seed": seed, "id_lo": lo, "n_base": n_base, "files": files}
+            if kind == "extract":
+                _run_writers(os.path.join(root, "pages"), lo, n_base, files, "fixture")
+                meta["pages"] = n_base
+            else:
+                by_class = _release_pages(root, lo, n_base, files)
+                meta["planted"] = {str(c): n for c, n in sorted(by_class.items())}
+                meta["expected"] = expected_release(n_base, by_class)
+                meta["pages"] = meta["expected"]["pages"]
+            with open(meta_path, "w") as f:
+                json.dump(meta, f)
         os.utime(root)
         with open(meta_path) as f:
-            return os.path.join(root, "pages"), json.load(f)
-    shutil.rmtree(root, ignore_errors=True)
-    path = os.path.join(root, "pages")
-    meta = {"kind": kind, "seed": seed, "id_lo": lo, "n_base": n_base, "files": files}
-    if kind == "extract":
-        _write_fixture_pages(path, lo, n_base, files)
-        meta["pages"] = n_base
-    else:
-        base = (
-            _base(spark, lo, n_base, files, prose=True)
-            .withColumn("k", F.pmod(F.xxhash64("url"), F.lit(CLASSES)))
-            .localCheckpoint(eager=True)
-        )
-        by_class = {
-            int(r["k"]): int(r["count"])
-            for r in base.groupBy("k").count().collect()
-        }
-        _release_table(base).repartition(files).write.parquet(path)
-        meta["planted"] = {str(c): n for c, n in sorted(by_class.items())}
-        meta["expected"] = expected_release(n_base, by_class)
-        meta["pages"] = meta["expected"]["pages"]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
+            out.append((os.path.join(root, "pages"), json.load(f)))
     _prune(os.path.join(workdir, "corpus"))
-    return path, meta
+    return out, cached
 
 
 def _prune(corpus_dir: str) -> None:
@@ -246,6 +311,7 @@ def _prune(corpus_dir: str) -> None:
 
 
 if __name__ == "__main__":
-    # python3 corpus.py <dir> <lo:hi>...: write those fixture page files
-    for r in sys.argv[2:]:
-        _write_part(sys.argv[1], *map(int, r.split(":")))
+    # python3 corpus.py <dir> <fixture|release> <quota> <lo:hi>...: write
+    # those page files
+    for r in sys.argv[4:]:
+        _write_part(sys.argv[1], *map(int, r.split(":")), sys.argv[2], int(sys.argv[3]))

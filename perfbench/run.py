@@ -8,10 +8,11 @@ Run from the repository root. The last stdout line is one JSON object
 {correct, attempted, failed, metrics}: with ``--trace 0`` the
 end-to-end metrics (pages_per_s, cpu_ms_per_page, peak_rss_mb,
 setup_s), with ``--trace 1`` the per-layer metrics of a traced run.
-The line before it is the run's provenance (git sha or source digest,
-cores, master, versions, parameter fingerprint, host noise per timed
-window). A full record, with the spans of a traced run, is written to
-``.bench_work/results/``.
+The line before it holds the run's provenance (git sha or source digest,
+cores, master, versions, parameter fingerprint), its set-up split
+(session, warm-up, corpus generation and whether the corpus was cached)
+and the host noise per timed window. A full record, with the spans of a
+traced run, is written to ``.bench_work/results/``.
 
 Workloads (each generated from ``--seed``, run at local[nproc]):
   extract  plans.pipeline.extract_pages over fixture pages in several
@@ -26,21 +27,26 @@ Workloads (each generated from ``--seed``, run at local[nproc]):
            reach delivery.
 
 Set-up (``setup_s``) is session start plus one warm-up pass of the same
-code over a disjoint small slice, so JIT and codegen compile cost lands
-there and not in the timed passes; corpus generation is excluded. The
-timed window then repeats passes until ``--seconds`` have elapsed
-(at least one) and reports the median pass. CPU and peak memory cover
-the whole process tree (driver, JVM, Python workers); memory is summed
-as PSS so pages shared between forked processes count once.
+code over a disjoint slice, so JIT and codegen compile cost lands
+there and not in the timed passes. Corpora are generated (or found in
+the cache) before the session starts, without Spark, and are not part
+of set-up. The timed window then repeats passes until ``--seconds``
+have elapsed (at least one) and reports the median pass. CPU and peak
+memory cover the whole process tree (driver, JVM, Python workers);
+memory is summed as PSS so pages shared between forked processes count
+once.
 
-The traced run (``--trace 1``) makes one untraced pass, then the same
-work again as one span per layer call, each under its own Spark job
-group; executor CPU, GC, shuffle, spill, output bytes and task skew come
-from the session's own event log. The release trace also materializes
-each cleaning gate alone over the 00_docs checkpoint. ``cpu_s`` is
-executor (JVM) CPU from the log; ``tree_cpu_s`` is process-tree CPU over
-the span, which also counts the Python workers. ``trace.overhead_share``
-is the traced wall time over the untraced pass, minus one.
+The traced run (``--trace 1``) first runs the same work as one span per
+layer call, each under its own Spark job group, then the untraced timed
+passes; executor CPU, GC, shuffle, spill, output bytes and task skew
+come from the session's own event log. The release trace also
+materializes each cleaning gate alone over the 00_docs checkpoint.
+``cpu_s`` is executor (JVM) CPU from the log; ``tree_cpu_s`` is
+process-tree CPU over the span, which also counts the Python workers.
+``trace.overhead_share`` is the traced root span's wall time over the
+median untraced pass, minus one. Passes still speed up from one to the
+next after the warm-up (by up to about 15% on a release), so one traced
+pass resolves the overhead only to about that drift.
 
 Sizes are set so that a run of either workload ends well inside three
 minutes on 4 cores, set-up included.
@@ -70,7 +76,7 @@ DEADLINE_S = 165  # hard stop; with teardown still below the 180 s a run may tak
 
 # sizes: pages per timed pass / warm-up pass, and parquet files
 SIZES = {
-    "extract": {"n_base": 24_000, "files": 16, "warm_base": 8_000, "warm_files": 8},
+    "extract": {"n_base": 24_000, "files": 16, "warm_base": 24_000, "warm_files": 16},
     "release": {"n_base": 600, "files": 8, "warm_base": 80, "warm_files": 4},
 }
 
@@ -175,19 +181,17 @@ def provenance(spark, args, pages: int) -> dict:
     }
 
 
-def start_spark(args, cores: int):
+def start_spark(app_name: str, cores: int, event_log: bool):
     from narowi_ocr_spark.config import get_spark
 
     conf = {
         "spark.sql.files.maxPartitionBytes": "8m",
+        # below the library's 8g default: the host is shared
         "spark.driver.memory": "2g",
         "spark.sql.warehouse.dir": os.path.join(WORK, "warehouse"),
         "spark.ui.showConsoleProgress": "false",
-        # a fixed, pre-touched heap: the JVM's resident size no longer
-        # depends on when G1 chose to grow it, so peak_rss_mb is steady
-        "spark.driver.extraJavaOptions": "-Xms2g -XX:+AlwaysPreTouch",
     }
-    if args.trace:
+    if event_log:
         conf.update(
             {
                 "spark.eventLog.enabled": "true",
@@ -197,7 +201,7 @@ def start_spark(args, cores: int):
             }
         )
     spark = get_spark(
-        app_name=f"perfbench-{args.workload}",
+        app_name=app_name,
         master=f"local[{cores}]",
         shuffle_partitions=cores,
         extra_conf=conf,
@@ -274,7 +278,7 @@ def main() -> int:
     stamp = f"{args.workload}-s{args.seed}-t{args.trace}-{int(time.time())}"
     with open(os.path.join(WORK, "results", stamp + ".json"), "w") as f:
         json.dump(record, f, indent=1)
-    print(json.dumps({"provenance": record["provenance"], "windows": record["windows"]}))
+    print(json.dumps({k: record[k] for k in ("provenance", "setup", "windows")}))
     print(json.dumps(record["result"]))
     sys.stdout.flush()
     if not record["result"]["correct"]:
@@ -294,18 +298,20 @@ def run(args) -> dict:
         size["n_base"] = args.pages
         size["warm_base"] = max(args.pages // 8, 40)
     me = os.getpid()
+    kind = args.workload
+
+    # corpora first, generated (if not cached) without Spark: the
+    # benchmark's session then starts the same way in every run
+    t = time.perf_counter()
+    [(warm_path, _), (path, meta)], cached = corpus.prepare(WORK, kind, args.seed, size)
+    gen_s = time.perf_counter() - t
+    n_pages = meta["pages"]
 
     t = time.perf_counter()
-    spark = start_spark(args, cores)
+    spark = start_spark(f"perfbench-{kind}", cores, event_log=bool(args.trace))
     session_s = time.perf_counter() - t
     app_id = spark.sparkContext.applicationId
 
-    kind = args.workload
-    t = time.perf_counter()
-    warm_path, _ = corpus.build(
-        spark, WORK, kind, args.seed, size["warm_base"], size["warm_files"], warm=True
-    )
-    gen_s = time.perf_counter() - t
     failures: list[str] = []
     attempted = failed = 0
     out_root = os.path.join(WORK, "release-out", str(me))
@@ -329,22 +335,24 @@ def run(args) -> dict:
             failures.extend(f"pass {i}: {b}" for b in bad)
             shutil.rmtree(out, ignore_errors=True)
 
-    # set-up: one warm-up pass of the same code over the warm-up slice.
-    # The slice is cached after a checkout's first run and the seed's
-    # corpus is built only after set-up, so set-up does the same work
-    # whether or not the corpus was cached.
-    warm_df = spark.read.parquet(warm_path)
+    # set-up: one warm-up pass of the same code over the warm-up slice
     t = time.perf_counter()
-    one_pass(-1, warm_path, warm_df)
+    one_pass(-1, warm_path, spark.read.parquet(warm_path))
     warm_s = time.perf_counter() - t
     setup_s = session_s + warm_s
 
-    t = time.perf_counter()
-    path, meta = corpus.build(spark, WORK, kind, args.seed, size["n_base"], size["files"])
-    n_pages = meta["pages"]
-    gen_s += time.perf_counter() - t
-
     pages_df = spark.read.parquet(path)
+    spans = traced_counts = None
+    if args.trace:
+        # the traced composition runs right before the untraced passes it
+        # is compared with; being first, it is the colder of the two
+        tr = wl.Tracer(spark, f"{app_id}-{args.seed}", lambda: tree_cpu_s(me))
+        traced_out = f"{out_root}/traced"
+        if kind == "extract":
+            wl.traced_extract(tr, pages_df, n_pages)
+        else:
+            traced_counts = wl.traced_release(spark, tr, path, traced_out)
+
     windows, walls, cpus, peak = [], [], [], 0.0
     manifests = []
     t_window = time.perf_counter()
@@ -361,7 +369,7 @@ def run(args) -> dict:
             windows[-1]["stage_seconds"] = m["stage_seconds"]
         check(i, m)
         i += 1
-        if args.trace or time.perf_counter() - t_window >= args.seconds:
+        if time.perf_counter() - t_window >= args.seconds:
             break
 
     if kind == "extract":
@@ -370,25 +378,24 @@ def run(args) -> dict:
         failed += bad
         if bad:
             failures.append(f"extract: {bad} of {n_pages} pages not byte-identical")
+    else:
+        bad = wl.class_failures(spark, path, meta["planted"])
+        attempted += 1
+        failed += len(bad)
+        failures.extend(bad)
 
-    spans = None
     if args.trace:
-        tr = wl.Tracer(spark, f"{app_id}-{args.seed}", lambda: tree_cpu_s(me))
-        out = f"{out_root}/traced"
-        if kind == "extract":
-            wl.traced_extract(tr, pages_df, n_pages)
-        else:
-            counts = wl.traced_release(spark, tr, path, out)
+        if kind == "release":
             want = dict(meta["expected"], train=manifests[-1]["stages"]["train"])
             bad = [
-                f"traced {k}: got {counts.get(k)} expected {v}"
+                f"traced {k}: got {traced_counts.get(k)} expected {v}"
                 for k, v in want.items()
-                if counts.get(k) != v
+                if traced_counts.get(k) != v
             ]
             attempted += len(want)
             failed += len(bad)
             failures.extend(bad)
-            wl.traced_gates(spark, tr, out)
+            wl.traced_gates(spark, tr, traced_out)
             wl.traced_extract(tr, pages_df, n_pages)
         spans = tr.spans
 
@@ -400,7 +407,7 @@ def run(args) -> dict:
 
     if args.trace:
         log = os.path.join(WORK, "events", app_id)
-        metrics = layer_metrics(spans, log, walls[0])
+        metrics = layer_metrics(spans, log, statistics.median(walls))
         os.remove(log)  # parsed; the spans and metrics go to the record
     else:
         metrics = {
@@ -420,7 +427,12 @@ def run(args) -> dict:
         "result": result,
         "failures": failures,
         "provenance": prov,
-        "setup": {"session_s": session_s, "warm_s": warm_s, "corpus_s": gen_s},
+        "setup": {
+            "session_s": session_s,
+            "warm_s": warm_s,
+            "corpus_s": gen_s,
+            "corpus_cached": cached,
+        },
         "windows": windows,
         "corpus": meta,
         "spans": spans,

@@ -7,6 +7,7 @@ with one span (and one Spark job group) per layer call.
 
 from __future__ import annotations
 
+import json
 import time
 from contextlib import contextmanager
 
@@ -16,7 +17,7 @@ from pyspark.sql import functions as F
 import run_release_job as rj  # tools/ is put on sys.path by run.py
 from narowi_ocr_spark.plans.pipeline import extract_pages
 
-from corpus import PII_EMAIL
+from corpus import CLASSES, PII_EMAIL
 
 FULL_GATES = True
 APPLY_C4 = True
@@ -87,6 +88,21 @@ def release_checks(
     return failed
 
 
+def class_failures(spark: SparkSession, path: str, planted: dict) -> list[str]:
+    """The generator's page classes must be Spark's own
+    ``pmod(xxhash64(url), CLASSES)`` over the corpus's base pages."""
+    base = spark.read.parquet(path).where(
+        ~F.col("url").rlike(r"^https://(mirror|near[0-9])\.example/x/")
+    )
+    got = {
+        str(r["k"]): r["count"]
+        for r in base.groupBy(
+            F.pmod(F.xxhash64("url"), F.lit(CLASSES)).alias("k")
+        ).count().collect()
+    }
+    return [] if got == planted else [f"classes: Spark gives {got}, planted {planted}"]
+
+
 # ------------------------------------------------------------ tracing
 
 
@@ -149,6 +165,7 @@ def traced_release(spark: SparkSession, tr: Tracer, path: str, out: str) -> dict
         lsh_candidate_pairs,
     )
     from narowi_ocr_spark.operators.shards import shard_manifest
+    from narowi_ocr_spark.sources.sink import partition_histogram
     from narowi_ocr_spark.sources.wet import write_wet
 
     ck = f"{out}/checkpoints"
@@ -213,6 +230,14 @@ def traced_release(spark: SparkSession, tr: Tracer, path: str, out: str) -> dict
         with tr.span("release.wet") as c:
             write_wet(rj.build_wet(assigned), f"{out}/wet", mode="overwrite")
             c["rows_out"] = counts["train"]
+        # run_release's last step: rows per delivered partition, and the
+        # manifest write (the traced output directory is fresh)
+        hist = [r.asDict() for r in partition_histogram(
+            spark.read.parquet(f"{out}/shards")
+        ).collect()]
+        spark.sparkContext.parallelize(
+            [json.dumps({"stages": counts, "partition_histogram": hist})], 1
+        ).saveAsTextFile(f"{out}/release_manifest")
         released.unpersist()
     return counts
 
