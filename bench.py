@@ -31,6 +31,30 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+FORCED_EXIT_CODE = 3
+
+
+def teardown_watchdog(seconds: float):
+    """Start a daemon timer that force-exits the process if it is still
+    alive after ``seconds``. At sf0.1 scale session teardown has been
+    observed to linger minutes (shuffle-dir cleanup + non-daemon gateway
+    threads); the timer keeps a harness collecting the stdout line from
+    stalling. The forced exit is nonzero (``FORCED_EXIT_CODE``) with a
+    ``bench: FORCED_EXIT`` marker on stderr, so a hung teardown is
+    visible; clean exits are unaffected."""
+    import threading
+
+    def _forced_exit() -> None:
+        sys.stderr.write(f"bench: FORCED_EXIT teardown still running after {seconds:g} s\n")
+        sys.stderr.flush()
+        os._exit(FORCED_EXIT_CODE)
+
+    t = threading.Timer(seconds, _forced_exit)
+    t.daemon = True
+    t.start()
+    return t
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -507,17 +531,10 @@ def main() -> None:
             }
         )
     )
-    # Teardown watchdog: the JSON above is the deliverable; at sf0.1
-    # scale session teardown has been observed to linger minutes on
-    # this box (shuffle-dir cleanup + non-daemon gateway threads). A
-    # daemon timer force-exits if stop() hangs so a harness collecting
-    # the stdout line never stalls; clean exits are unaffected.
-    import threading
-
+    # the JSON above is the deliverable; stop() must not stall the
+    # harness collecting it
     sys.stdout.flush()
-    t = threading.Timer(60.0, lambda: os._exit(0))
-    t.daemon = True
-    t.start()
+    teardown_watchdog(60.0)
     spark.stop()
 
 

@@ -7,10 +7,19 @@ expressible (each has a DuckDB oracle in __spark_entry__.py), and they stay
 inside whole-stage codegen at 100 TB scale. One deliberate exception:
 ``with_compression_ratio`` is an Arrow-batched zlib UDF (no SQL analogue
 exists; it is pytest-verified against pure Python instead).
+
+The curation gates (``with_text_stats``, ``with_repetition_stats``,
+``with_gopher_rules`` and ``operators.corpus.blocklist_gate``) read one
+shared token array, ``words(lower(text))``, staged by ``with_tokens``:
+a frame that chains several gates splits each document once. Each gate
+builds one set of expressions; its stat-table form and its
+``preserve=True``/append form are two selections of that set.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Iterator
 
 import pandas as pd
@@ -49,19 +58,48 @@ def subword_token_estimate(text: Column | str) -> Column:
     return F.size(F.regexp_extract_all(t, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0))
 
 
+# The shared token column of the token-level gates (blocklist,
+# text_stats, repetition, Gopher). ``with_tokens`` stages it once; every
+# gate's preserve/append form keeps its input columns, so a chain of
+# gates over a ``with_tokens`` frame reads one split per row. C4 is a
+# line-level gate and keeps its own line split.
+TOKS = "_toks"
+
+
+def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Stage ``words(lower(text))`` as column ``_toks`` (a no-op when
+    ``df`` already carries it). The split is non-cheap and read by
+    several expressions, so CollapseProject keeps it its own projection
+    and it runs once per row."""
+    if TOKS in df.columns:
+        return df
+    return df.withColumn(TOKS, words(F.lower(F.col(text_col))))
+
+
+def append_columns(df: DataFrame, staged: DataFrame, cols: dict) -> DataFrame:
+    """``df``'s columns, then ``cols`` evaluated over ``staged`` (``df``
+    plus private staging columns, which are dropped). A name ``df``
+    already has is replaced in place, as ``withColumn`` would."""
+    return staged.withColumns(cols).select(*dict.fromkeys([*df.columns, *cols]))
+
+
+def _stop_hits(distinct_toks: Column, lang: str) -> Column:
+    return F.size(
+        F.array_intersect(
+            distinct_toks, F.array(*[F.lit(w) for w in STOPWORDS[lang]])
+        )
+    )
+
+
 def stopword_hits(text: Column | str, lang: str) -> Column:
     """Count of tokens (case-folded, deduplicated) found in the language's
     stopword list. array_intersect is set-semantics — adequate for scoring
     and identical in the DuckDB oracle (list_intersect)."""
     t = F.col(text) if isinstance(text, str) else text
-    toks = F.array_distinct(words(F.lower(t)))
-    return F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in STOPWORDS[lang]])))
+    return _stop_hits(F.array_distinct(words(F.lower(t))), lang)
 
 
-def lang_id(text: Column | str) -> Column:
-    """Best-scoring language among {en, de, fr} by stopword hits;
-    ties break in en→de→fr order; zero hits → 'und' (undetermined)."""
-    hits = {lg: stopword_hits(text, lg) for lg in STOPWORDS}
+def _lang_pred(hits: dict) -> Column:
     best = F.greatest(*hits.values())
     expr: Column = F.lit("und")
     for lg in reversed(list(STOPWORDS)):  # earlier langs win ties
@@ -69,79 +107,64 @@ def lang_id(text: Column | str) -> Column:
     return F.when(best == 0, F.lit("und")).otherwise(expr)
 
 
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1] quality heuristic:
-    0.4·stopword-ratio + 0.3·alpha-char-ratio + 0.3·capped length factor.
-    Rounded to 4 decimals so Spark and the DuckDB oracle hash-match."""
-    t = F.col(text) if isinstance(text, str) else text
-    n_words = token_count(t).cast("double")
+def lang_id(text: Column | str) -> Column:
+    """Best-scoring language among {en, de, fr} by stopword hits;
+    ties break in en→de→fr order; zero hits → 'und' (undetermined)."""
+    return _lang_pred({lg: stopword_hits(text, lg) for lg in STOPWORDS})
+
+
+def _quality(t: Column, n_words: Column, stops: Column) -> Column:
+    n_words = n_words.cast("double")
     n_chars = F.length(t).cast("double")
     alpha_chars = F.length(F.regexp_replace(t, r"[^A-Za-z]", "")).cast("double")
-    stops = stopword_hits(t, "en").cast("double")
-    safe_words = F.greatest(n_words, F.lit(1.0))
-    safe_chars = F.greatest(n_chars, F.lit(1.0))
     score = (
-        0.4 * F.least(stops / safe_words, F.lit(1.0))
-        + 0.3 * (alpha_chars / safe_chars)
+        0.4 * F.least(stops.cast("double") / F.greatest(n_words, F.lit(1.0)), F.lit(1.0))
+        + 0.3 * (alpha_chars / F.greatest(n_chars, F.lit(1.0)))
         + 0.3 * F.least(n_words / F.lit(100.0), F.lit(1.0))
     )
     return round4(score)
 
 
+def quality_score(text: Column | str) -> Column:
+    """Composite [0,1] quality heuristic:
+    0.4·stopword-ratio + 0.3·alpha-char-ratio + 0.3·capped length factor.
+    Rounded to 4 decimals so Spark and the DuckDB oracle hash-match."""
+    t = F.col(text) if isinstance(text, str) else text
+    return _quality(t, token_count(t), stopword_hits(t, "en"))
+
+
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add ``n_tokens``, ``n_subword``, ``lang_pred`` and ``q`` (quality
-    score) in ONE tokenization pass.
+    score) over the shared token array (``with_tokens``).
 
     The scalar functions above each inline their own ``words()`` split,
     so composing them re-runs the regexp-trim + split once per reference
-    after CollapseProject (quality_score alone runs it 3×). This stages
-    the token array — and its distinct set — behind projection
-    boundaries (CollapseProject keeps multi-referenced non-cheap
-    projections separate), so the split and the dedup each run once per
-    row no matter how many stats consume them. Values are bit-identical
-    to the scalar functions (asserted by tests/test_textstats_staged.py)."""
+    after CollapseProject (quality_score alone runs it 3×). Here the
+    token array and its distinct set are staged behind projection
+    boundaries, so the split and the dedup each run once per row no
+    matter how many stats consume them. Values are bit-identical to the
+    scalar functions (asserted by tests/test_textstats_staged.py)."""
     t = F.col(text_col)
-    staged = df.withColumn("_toks", words(F.lower(t))).withColumn(
-        "_dtoks", F.array_distinct(F.col("_toks"))
+    staged = with_tokens(df, text_col).withColumn(
+        "_ts_dtoks", F.array_distinct(TOKS)
     )
-    hits = {
-        lg: F.size(
-            F.array_intersect(
-                F.col("_dtoks"), F.array(*[F.lit(w) for w in STOPWORDS[lg]])
-            )
-        )
-        for lg in STOPWORDS
-    }
-    for lg, h in hits.items():
-        staged = staged.withColumn(f"_hits_{lg}", h)
-    best = F.greatest(*[F.col(f"_hits_{lg}") for lg in STOPWORDS])
-    lang_expr: Column = F.lit("und")
-    for lg in reversed(list(STOPWORDS)):  # earlier langs win ties
-        lang_expr = F.when(F.col(f"_hits_{lg}") == best, F.lit(lg)).otherwise(
-            lang_expr
-        )
+    staged = staged.withColumns(
+        {f"_ts_hits_{lg}": _stop_hits(F.col("_ts_dtoks"), lg) for lg in STOPWORDS}
+    )
     # size() is case-invariant, so size(_toks) == token_count(text)
-    n_words = F.size("_toks").cast("double")
-    n_chars = F.length(t).cast("double")
-    alpha_chars = F.length(F.regexp_replace(t, r"[^A-Za-z]", "")).cast("double")
-    stops = F.col("_hits_en").cast("double")
-    score = (
-        0.4 * F.least(stops / F.greatest(n_words, F.lit(1.0)), F.lit(1.0))
-        + 0.3 * (alpha_chars / F.greatest(n_chars, F.lit(1.0)))
-        + 0.3 * F.least(n_words / F.lit(100.0), F.lit(1.0))
-    )
-    return (
-        staged.withColumn("n_tokens", F.size("_toks"))
-        .withColumn("n_subword", subword_token_estimate(t))
-        .withColumn("lang_pred", F.when(best == 0, F.lit("und")).otherwise(lang_expr))
-        .withColumn("q", round4(score))
-        .drop("_toks", "_dtoks", *[f"_hits_{lg}" for lg in STOPWORDS])
-    )
+    return append_columns(df, staged, {
+        "n_tokens": F.size(TOKS),
+        "n_subword": subword_token_estimate(t),
+        "lang_pred": _lang_pred({lg: F.col(f"_ts_hits_{lg}") for lg in STOPWORDS}),
+        "q": _quality(t, F.size(TOKS), F.col("_ts_hits_en")),
+    })
 
 
 def ngrams(text: Column | str, n: int) -> Column:
-    """ALL word n-grams in order (NOT distinct — repetition analysis
-    needs multiplicities; `dedup.shingles` is the distinct variant).
+    """ALL word n-grams in order, as strings (NOT distinct — span and
+    contamination operators need multiplicities; `dedup.shingles` is the
+    distinct variant; ``with_repetition_stats`` hashes its n-grams
+    instead).
     The word array is bound once per row (``bind_once``): slicing it
     per n-gram inside the lambda would otherwise re-run the O(len)
     split per element — O(len²) per document."""
@@ -161,11 +184,11 @@ def ngrams(text: Column | str, n: int) -> Column:
 
 
 def _max_run_count(arr: Column) -> Column:
-    """Count of the most frequent element of a string array: longest
-    run of equal adjacent elements after array_sort — one native fold,
-    no explode/shuffle."""
+    """Count of the most frequent element of a long array: longest run
+    of equal adjacent elements after array_sort — one native fold, no
+    explode/shuffle."""
     acc0 = F.struct(
-        F.lit(None).cast("string").alias("prev"),
+        F.lit(None).cast("long").alias("prev"),
         F.lit(0).alias("run"),
         F.lit(0).alias("best"),
     )
@@ -179,6 +202,16 @@ def _max_run_count(arr: Column) -> Column:
         )
 
     return F.aggregate(F.array_sort(arr), acc0, step, lambda acc: acc["best"])
+
+
+def _gram_hashes(prev: Column, word_hashes: Column, n: int) -> Column:
+    """xxhash64 of every word ``n``-gram, in order: gram i hashes the
+    (n-1)-gram hash at i with word hash i+n-1 (``prev`` = the word
+    hashes themselves for n = 2)."""
+    k = F.greatest(F.size(word_hashes) - F.lit(n - 1), F.lit(0))
+    return F.zip_with(
+        F.slice(prev, 1, k), F.slice(word_hashes, n, k), lambda g, w: F.xxhash64(g, w)
+    )
 
 
 # Gopher-style repetition thresholds (Rae et al. 2021, "Scaling Language
@@ -199,11 +232,22 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         frequent one;
       is_repetitive — the Gopher-style flag over the thresholds above.
 
-    All native: the n-gram arrays are staged behind projection
-    boundaries (built once each), the mode count is a sort+fold inside
-    the row — no explode, no shuffle, whole plan stays narrow."""
-    staged = df.withColumn("_g2", ngrams(text_col, 2)).withColumn(
-        "_g3", ngrams(text_col, 3)
+    The n-grams are HASHED: each word of the shared token array
+    (``with_tokens``) is xxhash64'd once, and the 2- and 3-gram hashes
+    are built from it by ``zip_with`` — no per-gram string is joined.
+    Words never contain whitespace, so the string n-gram "w1 w2" is
+    injective in the word tuple, and the distinct counts and the mode
+    count equal the string form's unless two 64-bit hashes collide
+    (tests/test_gate_rewrite.py pins the equality). Each hash array is
+    staged behind a projection boundary (built once), the mode count is
+    a sort+fold inside the row — no explode, no shuffle, the plan stays
+    narrow. NULL text counts as zero tokens."""
+    toks = F.coalesce(F.col(TOKS), F.array().cast("array<string>"))
+    staged = (
+        with_tokens(df, text_col)
+        .withColumn("_r_wh", F.transform(toks, lambda w: F.xxhash64(w)))
+        .withColumn("_r_g2", _gram_hashes(F.col("_r_wh"), F.col("_r_wh"), 2))
+        .withColumn("_r_g3", _gram_hashes(F.col("_r_g2"), F.col("_r_wh"), 3))
     )
 
     def dup_frac(g: Column) -> Column:
@@ -213,25 +257,23 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
             round4(1.0 - F.size(F.array_distinct(g)).cast("double") / total),
         ).otherwise(F.lit(0.0))
 
-    top2 = F.when(
-        F.size("_g2") > 0,
-        round4(
-            _max_run_count(F.col("_g2")).cast("double")
-            / F.size("_g2").cast("double")
-        ),
-    ).otherwise(F.lit(0.0))
-    return (
-        staged.withColumn("n_2grams", F.size("_g2"))
-        .withColumn("frac_dup_2gram", dup_frac(F.col("_g2")))
-        .withColumn("frac_dup_3gram", dup_frac(F.col("_g3")))
-        .withColumn("top_2gram_frac", top2)
-        .withColumn(
-            "is_repetitive",
-            (F.col("top_2gram_frac") > TOP_2GRAM_FRAC_MAX)
-            | (F.col("frac_dup_3gram") > DUP_3GRAM_FRAC_MAX),
-        )
-        .drop("_g2", "_g3")
-    )
+    n2 = F.size("_r_g2")
+    stats = staged.withColumns({
+        "_r_dup2": dup_frac(F.col("_r_g2")),
+        "_r_dup3": dup_frac(F.col("_r_g3")),
+        "_r_top2": F.when(
+            n2 > 0,
+            round4(_max_run_count(F.col("_r_g2")).cast("double") / n2.cast("double")),
+        ).otherwise(F.lit(0.0)),
+    })
+    return append_columns(df, stats, {
+        "n_2grams": n2,
+        "frac_dup_2gram": F.col("_r_dup2"),
+        "frac_dup_3gram": F.col("_r_dup3"),
+        "top_2gram_frac": F.col("_r_top2"),
+        "is_repetitive": (F.col("_r_top2") > TOP_2GRAM_FRAC_MAX)
+        | (F.col("_r_dup3") > DUP_3GRAM_FRAC_MAX),
+    })
 
 
 def doc_keywords(
@@ -522,33 +564,6 @@ GOPHER_MIN_STOPWORD_HITS = 2
 _GOPHER_SYMBOL_RE = r"(\.\.\.)|…|#"
 
 
-def _gopher_rule_exprs(
-    nw: str, nonws: str, sym: str, alpha: str, stops: str
-) -> dict:
-    """The five Gopher rules over staged count columns — the single
-    source of truth shared by both with_gopher_rules forms (identical
-    expressions ⇒ identical verdicts)."""
-    n = F.col(nw).cast("double")
-    mean_len = F.when(
-        F.col(nw) > 0, F.col(nonws).cast("double") / n
-    ).otherwise(F.lit(0.0))
-    sym_ratio = F.when(
-        F.col(nw) > 0, F.col(sym).cast("double") / n
-    ).otherwise(F.lit(0.0))
-    alpha_frac = F.when(
-        F.col(nw) > 0, F.col(alpha).cast("double") / n
-    ).otherwise(F.lit(0.0))
-    return {
-        "r_word_count": (F.col(nw) >= GOPHER_MIN_WORDS)
-        & (F.col(nw) <= GOPHER_MAX_WORDS),
-        "r_mean_word_len": (mean_len >= GOPHER_MIN_MEAN_WORD_LEN)
-        & (mean_len <= GOPHER_MAX_MEAN_WORD_LEN),
-        "r_symbol_ratio": sym_ratio <= GOPHER_MAX_SYMBOL_RATIO,
-        "r_alpha_words": alpha_frac >= GOPHER_MIN_ALPHA_WORD_FRAC,
-        "r_stopwords": F.col(stops) >= GOPHER_MIN_STOPWORD_HITS,
-    }
-
-
 def with_gopher_rules(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -564,96 +579,54 @@ def with_gopher_rules(
        r_alpha_words, r_stopwords, gopher_keep)
 
     gopher_keep = AND of the five rules. Every signal is a pure-codegen
-    expression over ONE staged tokenization (the projection-boundary
-    trick of ``with_text_stats``): mean word length is derived from the
-    non-whitespace char count (one regexp_replace, no per-word fold),
-    the symbol count is one regexp_count, and the ratios are exact
-    int/int double divisions — deterministic across engines, so the
-    oracle hash-matches without tolerance.
+    expression over the shared token array (``with_tokens``): mean word
+    length is derived from the non-whitespace char count (one
+    regexp_replace, no per-word fold), the symbol count is one
+    regexp_count, and the ratios are exact int/int double divisions —
+    deterministic across engines, so the oracle hash-matches without
+    tolerance.
 
     ``preserve=True`` keeps every input column and appends ONLY
     ``gopher_keep`` — the form a fused multi-gate scan chains (see
-    tools/run_release_job.py build_clean_ids), where one pass over the
-    text column evaluates every curation gate. Identical rule
-    expressions; the per-rule stat columns are the inspection surface
-    of the default form only.
+    tools/run_release_job.py clean_flags). Both forms select from the
+    same staged counts and rule expressions.
     """
     t = F.col(text_col)
+    staged = with_tokens(df, text_col).withColumns({
+        "_g_nw": F.size(TOKS).cast("int"),
+        "_g_nonws": F.length(F.regexp_replace(t, r"\s", "")),
+        "_g_sym": F.regexp_count(t, F.lit(_GOPHER_SYMBOL_RE)),
+        "_g_alpha": F.size(F.filter(F.col(TOKS), lambda w: w.rlike("[a-z]"))),
+        "_g_stops": _stop_hits(F.array_distinct(TOKS), "en").cast("int"),
+    })
+    nw = F.col("_g_nw")
+
+    def per_word(c: str) -> Column:
+        return F.when(nw > 0, F.col(c).cast("double") / nw.cast("double")).otherwise(
+            F.lit(0.0)
+        )
+
+    mean_len, sym_ratio, alpha_frac = (
+        per_word("_g_nonws"), per_word("_g_sym"), per_word("_g_alpha")
+    )
+    rules = {
+        "r_word_count": (nw >= GOPHER_MIN_WORDS) & (nw <= GOPHER_MAX_WORDS),
+        "r_mean_word_len": (mean_len >= GOPHER_MIN_MEAN_WORD_LEN)
+        & (mean_len <= GOPHER_MAX_MEAN_WORD_LEN),
+        "r_symbol_ratio": sym_ratio <= GOPHER_MAX_SYMBOL_RATIO,
+        "r_alpha_words": alpha_frac >= GOPHER_MIN_ALPHA_WORD_FRAC,
+        "r_stopwords": F.col("_g_stops") >= GOPHER_MIN_STOPWORD_HITS,
+    }
+    keep = reduce(operator.and_, rules.values())
     if preserve:
-        staged = (
-            df.withColumn("_g_toks", words(F.lower(t)))
-            .withColumn("_g_nw", F.size("_g_toks").cast("int"))
-            .withColumn(
-                "_g_nonws", F.length(F.regexp_replace(t, r"\s", ""))
-            )
-            .withColumn(
-                "_g_sym", F.regexp_count(t, F.lit(_GOPHER_SYMBOL_RE))
-            )
-            .withColumn(
-                "_g_alpha",
-                F.size(F.filter(F.col("_g_toks"), lambda w: w.rlike("[a-z]"))),
-            )
-            .withColumn(
-                "_g_stops",
-                F.size(
-                    F.array_intersect(
-                        F.array_distinct("_g_toks"),
-                        F.array(*[F.lit(w) for w in STOPWORDS["en"]]),
-                    )
-                ).cast("int"),
-            )
-        )
-        rules = _gopher_rule_exprs(
-            "_g_nw", "_g_nonws", "_g_sym", "_g_alpha", "_g_stops"
-        )
-        keep = None
-        for r in rules.values():
-            keep = r if keep is None else (keep & r)
-        return staged.withColumn("gopher_keep", keep).drop(
-            "_g_toks", "_g_nw", "_g_nonws", "_g_sym", "_g_alpha", "_g_stops"
-        )
-    staged = df.select(
-        F.col(id_col).alias("id"),
-        t.alias("_t"),
-        words(F.lower(t)).alias("_toks"),
-    ).select(
-        "id",
-        F.size("_toks").cast("int").alias("n_words"),
-        F.length(F.regexp_replace("_t", r"\s", "")).alias("_nonws"),
-        F.regexp_count(F.col("_t"), F.lit(_GOPHER_SYMBOL_RE)).alias("_sym"),
-        F.size(
-            F.filter(F.col("_toks"), lambda w: w.rlike("[a-z]"))
-        ).alias("_alpha_words"),
-        F.size(
-            F.array_intersect(
-                F.array_distinct("_toks"),
-                F.array(*[F.lit(w) for w in STOPWORDS["en"]]),
-            )
-        ).cast("int").alias("stop_hits"),
-    )
-    n = F.col("n_words").cast("double")
-    mean_len = F.when(
-        F.col("n_words") > 0, F.col("_nonws").cast("double") / n
-    ).otherwise(F.lit(0.0))
-    sym_ratio = F.when(
-        F.col("n_words") > 0, F.col("_sym").cast("double") / n
-    ).otherwise(F.lit(0.0))
-    alpha_frac = F.when(
-        F.col("n_words") > 0, F.col("_alpha_words").cast("double") / n
-    ).otherwise(F.lit(0.0))
-    rules = _gopher_rule_exprs(
-        "n_words", "_nonws", "_sym", "_alpha_words", "stop_hits"
-    )
-    keep = None
-    for r in rules.values():
-        keep = r if keep is None else (keep & r)
+        return append_columns(df, staged, {"gopher_keep": keep})
     return staged.select(
-        "id",
-        "n_words",
+        F.col(id_col).alias("id"),
+        nw.alias("n_words"),
         round4(mean_len).alias("mean_word_len"),
         round4(sym_ratio).alias("symbol_ratio"),
         round4(alpha_frac).alias("alpha_word_frac"),
-        "stop_hits",
+        F.col("_g_stops").alias("stop_hits"),
         *[r.alias(name) for name, r in rules.items()],
         keep.alias("gopher_keep"),
     )
@@ -694,13 +667,13 @@ def with_c4_rules(
     by newline) — it pins the exact per-line decisions in the oracle
     hash, not just the counts.
 
-    All pure-codegen higher-order expressions over one line split; no
-    shuffle, no Python.
+    All pure-codegen higher-order expressions over one line split (a
+    line gate: it does not read the shared token array); no shuffle, no
+    Python.
 
     ``preserve=True`` keeps every input column and appends ONLY
-    ``c4_keep`` (same line/page rules; the per-rule stats and kept_md5
-    are the default form's inspection surface) — the form a fused
-    multi-gate scan chains."""
+    ``c4_keep`` — the form a fused multi-gate scan chains. Both forms
+    take the verdict from the same rule columns."""
     t = F.col(text_col)
     lines = F.split(t, "\n")
 
@@ -716,36 +689,31 @@ def with_c4_rules(
         & ~F.lower(ln).contains("javascript"),
     )
     low = F.lower(t)
-    has_bad = None
-    for w in C4_BAD_WORDS:
-        cond = low.contains(w)
-        has_bad = cond if has_bad is None else (has_bad | cond)
-    if preserve:
-        return df.withColumn(
-            "c4_keep",
-            (F.size(kept) >= C4_MIN_KEPT_LINES)
-            & ~t.contains("{")
-            & ~low.contains("lorem ipsum")
-            & ~has_bad,
+    rules = {
+        "n_lines": F.size(lines).cast("int"),
+        "n_kept_lines": F.size(kept).cast("int"),
+        "has_brace": t.contains("{"),
+        "has_lorem": low.contains("lorem ipsum"),
+        "has_badword": reduce(operator.or_, [low.contains(w) for w in C4_BAD_WORDS]),
+    }
+
+    def keep(c: dict) -> Column:
+        return (
+            (c["n_kept_lines"] >= C4_MIN_KEPT_LINES)
+            & ~c["has_brace"]
+            & ~c["has_lorem"]
+            & ~c["has_badword"]
         )
-    staged = df.select(
+
+    if preserve:
+        return df.withColumn("c4_keep", keep(rules))
+    return df.select(
         F.col(id_col).alias("id"),
-        F.size(lines).cast("int").alias("n_lines"),
-        F.size(kept).cast("int").alias("n_kept_lines"),
-        t.contains("{").alias("has_brace"),
-        low.contains("lorem ipsum").alias("has_lorem"),
-        has_bad.alias("has_badword"),
+        *[c.alias(name) for name, c in rules.items()],
         F.md5(F.array_join(kept, "\n")).alias("kept_md5"),
-    )
-    return staged.withColumn(
-        "c4_keep",
-        (F.col("n_kept_lines") >= C4_MIN_KEPT_LINES)
-        & ~F.col("has_brace")
-        & ~F.col("has_lorem")
-        & ~F.col("has_badword"),
     ).select(
-        "id", "n_lines", "n_kept_lines", "has_brace", "has_lorem",
-        "has_badword", "c4_keep", "kept_md5",
+        "id", *rules, keep({name: F.col(name) for name in rules}).alias("c4_keep"),
+        "kept_md5",
     )
 
 

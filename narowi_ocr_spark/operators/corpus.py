@@ -1702,8 +1702,8 @@ def blocklist_gate(
 
     Token-exact, case-folded matching (NOT substring — 'class' must not
     trip a 'ass' entry; the known C4 over-blocking failure), counted
-    over the same whitespace tokenizer the rest of the curation stack
-    uses. Returns (doc_id, n_tokens, n_hits, hit_ppm, hit_terms, keep):
+    over the shared token array of the curation stack
+    (``textstats.with_tokens``; NULL text counts as zero tokens). Returns (doc_id, n_tokens, n_hits, hit_ppm, hit_terms, keep):
     integer-ppm hit rate, the distinct matched terms sorted and
     comma-joined (the audit column a human reviews before trusting the
     list), keep = hit_ppm <= max_hit_ppm — default 0 keeps only
@@ -1717,58 +1717,35 @@ def blocklist_gate(
     deterministically (0 hits in 0 tokens).
 
     ``preserve=True`` keeps every input column and appends ONLY
-    ``bl_keep`` (same token-exact ppm verdict; prefixed so it can chain
-    after with_text_stats, whose ``n_tokens`` it must not shadow) — the
-    form a fused multi-gate scan chains.
+    ``bl_keep`` (the same ppm verdict expression; prefixed so it can
+    chain after with_text_stats, whose ``n_tokens`` it must not shadow)
+    — the form a fused multi-gate scan chains.
     """
-    from narowi_ocr_spark.functions.textstats import words
+    from narowi_ocr_spark.functions.textstats import TOKS, append_columns, with_tokens
 
-    toks = words(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
+    terms_lc = [x.lower() for x in terms]
+    toks = F.coalesce(F.col(TOKS), F.array().cast("array<string>"))
+    staged = (
+        with_tokens(df, text_col)
+        .withColumn("_bl_hits", F.filter(toks, lambda t: t.isin(terms_lc)))
+        .withColumns({
+            "_bl_nt": F.size(toks).cast("int"),
+            "_bl_nh": F.size("_bl_hits").cast("int"),
+        })
+    )
+    ppm = F.when(F.col("_bl_nt") == 0, F.lit(0).cast("long")).otherwise(
+        F.expr("CAST(1000000 AS BIGINT) * _bl_nh div _bl_nt")
+    )
+    keep = ppm <= F.lit(int(max_hit_ppm))
     if preserve:
-        terms_lc = [x.lower() for x in terms]
-        staged = (
-            df.withColumn("_bl_toks", toks)
-            .withColumn("_bl_nt", F.size("_bl_toks").cast("int"))
-            .withColumn(
-                "_bl_nh",
-                F.size(
-                    F.filter(
-                        F.col("_bl_toks"), lambda t: t.isin(terms_lc)
-                    )
-                ).cast("int"),
-            )
-            .withColumn(
-                "_bl_ppm",
-                F.when(
-                    F.col("_bl_nt") == 0, F.lit(0).cast("long")
-                ).otherwise(
-                    F.expr("CAST(1000000 AS BIGINT) * _bl_nh div _bl_nt")
-                ),
-            )
-        )
-        return staged.withColumn(
-            "bl_keep", F.col("_bl_ppm") <= F.lit(int(max_hit_ppm))
-        ).drop("_bl_toks", "_bl_nt", "_bl_nh", "_bl_ppm")
-    staged = df.select(F.col(id_col).alias("doc_id"), toks.alias("_t"))
-    hits = F.filter(F.col("_t"), lambda t: t.isin([x.lower() for x in terms]))
-    out = staged.select(
-        "doc_id",
-        F.size("_t").cast("int").alias("n_tokens"),
-        F.size(hits).cast("int").alias("n_hits"),
-        F.array_join(F.array_sort(F.array_distinct(hits)), ",").alias(
+        return append_columns(df, staged, {"bl_keep": keep})
+    return staged.select(
+        F.col(id_col).alias("doc_id"),
+        F.col("_bl_nt").alias("n_tokens"),
+        F.col("_bl_nh").alias("n_hits"),
+        ppm.alias("hit_ppm"),
+        F.array_join(F.array_sort(F.array_distinct("_bl_hits")), ",").alias(
             "hit_terms"
         ),
-    ).withColumn(
-        "hit_ppm",
-        F.when(F.col("n_tokens") == 0, F.lit(0).cast("long")).otherwise(
-            F.expr("CAST(1000000 AS BIGINT) * n_hits div n_tokens")
-        ),
-    )
-    return out.select(
-        "doc_id",
-        "n_tokens",
-        "n_hits",
-        "hit_ppm",
-        "hit_terms",
-        (F.col("hit_ppm") <= F.lit(int(max_hit_ppm))).alias("keep"),
+        keep.alias("keep"),
     )

@@ -652,3 +652,36 @@ def test_span_dedup_gram_stream_shuffles_once(spark):
     plan = _physical_plan(passage_dedup(df, passage_words=4))
     assert plan.count("REPARTITION_BY_COL") == 2, plan
     assert "SortAggregate" not in plan, plan
+
+
+def test_clean_stage_tokenizes_once_and_filters_flags_only(spark):
+    """The fused clean stage's flag projection splits the words once
+    (C4 keeps its own line split), builds at most 2 n-gram arrays (the
+    hashed 2- and 3-grams, no string joins), and the filter reads the
+    materialized (doc_id, keep) flags: no gate expression re-inlines
+    into it."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
+    from run_release_job import build_clean_ids, clean_flags
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat.\nthe dog ran."), (2, "a slow b")],
+        "doc_id long, text string",
+    )
+    flags = _physical_plan(clean_flags(docs, full_gates=True))
+    words_splits = flags.count("split(regexp_replace(")
+    assert words_splits == 1, flags
+    assert flags.count("zip_with(") <= 2, flags
+    assert "array_join(" not in flags, flags
+    for node in ("Exchange", "BatchEvalPython", "ArrowEvalPython", "Join"):
+        assert node not in flags, f"{node} in:\n{flags}"
+
+    ids = _physical_plan(build_clean_ids(docs, full_gates=True))
+    filt = ids.split("Filter", 1)[1]
+    assert "ExistingRDD" in filt, ids
+    for gate_expr in ("split(", "regexp_", "xxhash64(", "zip_with(", "size("):
+        assert gate_expr not in ids, f"{gate_expr} in:\n{ids}"

@@ -232,3 +232,62 @@ def test_release_job_full_gates_filters_and_scrubs(spark, tmp_path):
     assert scrubbed.where(F.col("text").contains("<EMAIL>")).count() == 5
     # pii_scrub=False is the identity
     assert build_released_text(released) is released
+
+
+def test_release_job_refuses_resume_under_other_params(spark, tmp_path):
+    """Checkpoints are fingerprinted with the run's parameters: flipping
+    full_gates on resume must fail instead of serving the un-gated,
+    unscrubbed stages; resume=False recomputes under the new
+    parameters, which then resume."""
+    import pytest
+
+    from run_release_job import PARAMS_FILE, run_release
+
+    src = str(tmp_path / "pages")
+    out = str(tmp_path / "release")
+    # prose pages survive the full gate stack, so both runs deliver
+    synth_pages(spark, 60, partitions=2, vocab_scale=64, prose=True).write.parquet(src)
+    first = run_release(spark, src, out, apply_c4=False)
+    assert first["params"] == {
+        "pages_path": src, "apply_c4": False, "full_gates": False,
+        "blocklist": ["slow", "dup"],
+    }
+    # every stage checkpoint records its partition count
+    assert set(first["checkpoint_partitions"]) == {
+        "00_docs", "01_clean_ids", "02_exact_ids", "03_near_ids",
+    }
+    assert all(n >= 1 for n in first["checkpoint_partitions"].values())
+
+    with pytest.raises(ValueError, match="full_gates"):
+        run_release(spark, src, out, apply_c4=False, full_gates=True)
+    with pytest.raises(ValueError, match="blocklist"):
+        run_release(spark, src, out, ["other"], apply_c4=False)
+
+    gated = run_release(spark, src, out, apply_c4=False, full_gates=True, resume=False)
+    assert gated["resumed_stages"] == [] and gated["stages"]["train"] > 0
+    again = run_release(spark, src, out, apply_c4=False, full_gates=True)
+    assert len(again["resumed_stages"]) == 6
+    assert again["stages"] == gated["stages"]
+
+    # checkpoints whose parameters are unknown are refused too
+    (tmp_path / "release" / PARAMS_FILE).unlink()
+    with pytest.raises(ValueError, match="fingerprint"):
+        run_release(spark, src, out, apply_c4=False, full_gates=True)
+
+
+def test_release_args_full_gates_flag():
+    from run_release_job import release_args
+
+    kw = release_args(["p", "o", "--full-gates"])
+    assert kw == {
+        "pages_path": "p", "out_path": "o", "blocklist": None,
+        "apply_c4": True, "full_gates": True, "resume": True,
+    }
+    kw = release_args(["p", "o", "a,b", "--no-c4", "--no-resume"])
+    assert (kw["blocklist"], kw["apply_c4"], kw["full_gates"], kw["resume"]) == (
+        ["a", "b"], False, False, False,
+    )
+    import pytest
+
+    with pytest.raises(SystemExit):
+        release_args(["p", "o", "--full-gate"])

@@ -30,11 +30,14 @@ missing one — a job killed during near-dedup restarts at near-dedup
 with extraction, gates and exact dedup served from parquet. All stages
 are deterministic functions of their input (content hashes, not RNG),
 so a resumed run is bit-identical to an uninterrupted one (asserted in
-tests/test_release_job.py).
+tests/test_release_job.py). The run's parameters are fingerprinted
+next to the checkpoints (``release_params.json``); a resume under
+different parameters is refused, never served stale stages.
 
 Usage:
   spark-submit --py-files narowi_ocr_spark.zip \
-      tools/run_release_job.py <pages_path> <out_path> [term1,term2,...]
+      tools/run_release_job.py <pages_path> <out_path> [term1,term2,...] \
+      [--full-gates] [--no-c4] [--no-resume]
 
 Dev smoke (tests/test_release_job.py runs exactly this):
   python tools/run_release_job.py <pages_parquet> <out_dir>
@@ -43,9 +46,11 @@ Dev smoke (tests/test_release_job.py runs exactly this):
 from __future__ import annotations
 
 import json
+import operator
 import os
 import sys
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +70,9 @@ if _REPO not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
 
 DEFAULT_BLOCKLIST = ["slow", "dup"]  # demo terms; deployments load the
 # published list (see corpus.blocklist_gate)
+
+# run parameters a checkpoint depends on, written next to checkpoints/
+PARAMS_FILE = "release_params.json"
 
 
 # --------------------------------------------------------------------------
@@ -120,54 +128,69 @@ def build_docs(pages: DataFrame) -> DataFrame:
     )
 
 
-def build_clean_ids(
+def clean_flags(
     docs: DataFrame,
     blocklist: list[str] | None = None,
     apply_c4: bool = True,
     full_gates: bool = False,
 ) -> DataFrame:
-    """Cleaning gates (stage 01_clean_ids) as ONE fused scan: every
-    gate chains in preserve mode (each appends its keep flag to the
-    same DataFrame), the verdicts AND into a single filter, and the
-    survivor set is ids-only (the text column never rewrites after
-    00_docs). Zero joins, zero shuffles, one read of the text column —
-    at release scale the alternative (one scan per gate + survivor-id
-    semi-joins) multiplies corpus IO by the gate count.
+    """Per-doc cleaning verdict ``(doc_id, keep)`` as ONE projection:
+    the documents are tokenized once (``with_tokens``), every gate
+    chains in preserve mode over that token array (each appends its
+    keep flag to the same frame), and the flags AND into ``keep``. Zero
+    joins, zero shuffles, one read of the text column.
 
     ``full_gates`` adds the complete modern curation stack on top of
     the C4 + blocklist default: language ID (en only), quality score,
     Gopher document rules, and the within-document repetition filter —
     the gate set the production recipe (``curation_full``) runs."""
-    from narowi_ocr_spark.functions.textstats import with_c4_rules
+    from narowi_ocr_spark.functions import textstats as ts
     from narowi_ocr_spark.operators.corpus import blocklist_gate
 
-    chain = docs
-    pred = F.lit(True)
+    chain = ts.with_tokens(docs)
+    keeps = []
     if apply_c4:
-        chain = with_c4_rules(chain, preserve=True)
-        pred = pred & F.col("c4_keep")
-    chain = blocklist_gate(
-        chain, blocklist or DEFAULT_BLOCKLIST, preserve=True
-    )
-    pred = pred & F.col("bl_keep")
+        chain = ts.with_c4_rules(chain, preserve=True)
+        keeps.append(F.col("c4_keep"))
+    chain = blocklist_gate(chain, blocklist or DEFAULT_BLOCKLIST, preserve=True)
+    keeps.append(F.col("bl_keep"))
     if full_gates:
-        from narowi_ocr_spark.functions.textstats import (
-            with_gopher_rules,
-            with_repetition_stats,
-            with_text_stats,
+        chain = ts.with_gopher_rules(
+            ts.with_repetition_stats(ts.with_text_stats(chain)), preserve=True
         )
+        keeps += [
+            F.col("lang_pred") == "en",
+            F.col("q") >= 0.5,
+            ~F.col("is_repetitive"),
+            F.col("gopher_keep"),
+        ]
+    return chain.select("doc_id", reduce(operator.and_, keeps).alias("keep"))
 
-        chain = with_gopher_rules(
-            with_repetition_stats(with_text_stats(chain)), preserve=True
-        )
-        pred = (
-            pred
-            & (F.col("lang_pred") == "en")
-            & (F.col("q") >= 0.5)
-            & (~F.col("is_repetitive"))
-            & F.col("gopher_keep")
-        )
-    return chain.where(pred).select("doc_id")
+
+def build_clean_ids(
+    docs: DataFrame,
+    blocklist: list[str] | None = None,
+    apply_c4: bool = True,
+    full_gates: bool = False,
+    materialize: bool = True,
+) -> DataFrame:
+    """Cleaning gates (stage 01_clean_ids): the ids whose
+    ``clean_flags`` verdict is keep. The survivor set is ids-only (the
+    text column never rewrites after 00_docs).
+
+    The flags pass a lazy ``localCheckpoint`` before the filter. Without
+    that boundary the optimizer pushes ``where(keep)`` down through the
+    staging projections and inlines the gate expressions into the
+    filter condition, which re-tokenizes the text once per reference
+    (the full-gate plan had 33 ``split(`` instead of 3). The checkpoint
+    is the 2-column flag frame, computed by the first action on the
+    result (an upstream shuffle, if any, runs when the boundary is
+    built). ``materialize=False`` (plan audit only) leaves the boundary
+    out so nothing executes while the plan is built."""
+    flags = clean_flags(docs, blocklist, apply_c4, full_gates)
+    if materialize:
+        flags = flags.localCheckpoint(eager=False)
+    return flags.where("keep").select("doc_id")
 
 
 def build_exact_ids(clean: DataFrame) -> DataFrame:
@@ -278,7 +301,9 @@ def release_stage_plans(
     checkpoint parquet; the logical dataflow is identical, only the
     exchange-with-disk boundary differs."""
     docs = build_docs(pages)
-    clean_ids = build_clean_ids(docs, blocklist, apply_c4, full_gates)
+    clean_ids = build_clean_ids(
+        docs, blocklist, apply_c4, full_gates, materialize=False
+    )
     clean = docs.join(clean_ids, "doc_id")
     exact_ids = build_exact_ids(clean)
     uniq = clean.join(exact_ids, "doc_id")
@@ -320,6 +345,49 @@ def _rmdir(spark: SparkSession, path: str) -> None:
         fs.delete(jpath, True)
 
 
+def _read_text(spark: SparkSession, path: str) -> str | None:
+    fs, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
+        return None
+    stream = fs.open(jpath)
+    try:
+        return spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+
+
+def _write_text(spark: SparkSession, path: str, text: str) -> None:
+    fs, jpath = _fs(spark, path)
+    stream = fs.create(jpath, True)
+    try:
+        stream.write(bytearray(text.encode("utf-8")))
+    finally:
+        stream.close()
+
+
+def _check_resume(spark: SparkSession, out_path: str, params: dict) -> None:
+    """Refuse to resume checkpoints computed under other parameters: the
+    fingerprint written next to ``checkpoints/`` must equal ``params``.
+    Checkpoints without a fingerprint are refused too (their parameters
+    are unknown)."""
+    prior = _read_text(spark, f"{out_path}/{PARAMS_FILE}")
+    if prior is None:
+        fs, jpath = _fs(spark, f"{out_path}/checkpoints")
+        if fs.exists(jpath):
+            raise ValueError(
+                f"{out_path}: checkpoints without a {PARAMS_FILE} fingerprint; "
+                "rerun with resume=False (--no-resume) or use a fresh out dir"
+            )
+    elif json.loads(prior) != params:
+        raise ValueError(
+            f"{out_path}: checkpoints were computed with {prior.strip()}, "
+            f"not {json.dumps(params, sort_keys=True)}; rerun with "
+            "resume=False (--no-resume) or use a fresh out dir"
+        )
+
+
 def run_release(
     spark: SparkSession,
     pages_path: str,
@@ -341,12 +409,19 @@ def run_release(
     terminal-punctuation line rule wholesale; such runs disable it and
     rely on the blocklist + dedup stages.
 
-    ``resume=True`` reuses any committed stage checkpoints under
-    ``out_path/checkpoints`` (see module docstring); ``resume=False``
-    forces a from-scratch run (checkpoints are still written, so the
-    NEXT run can resume). Checkpoints are keyed by ``out_path`` alone —
-    a release over a DIFFERENT pages table must use a fresh out dir
-    (reusing one would resume from the other corpus' stages)."""
+    ``resume=True`` reuses the committed stage checkpoints under
+    ``out_path/checkpoints`` (see module docstring) up to the first
+    missing one; every later stage recomputes. The run's parameters
+    (pages path, ``apply_c4``, ``full_gates``, blocklist) are written to
+    ``out_path/release_params.json``, and a resume under different
+    parameters raises ``ValueError`` instead of reusing stages gated
+    another way. ``resume=False`` deletes the old checkpoints and runs
+    from scratch (checkpoints are still written, so the NEXT run can
+    resume).
+
+    The manifest records the parameters (``params``) and each stage
+    checkpoint's partition count (``checkpoint_partitions``): the
+    number of tasks a later per-row stage reading it runs as."""
     from narowi_ocr_spark.operators.shards import shard_manifest
     from narowi_ocr_spark.sources.sink import partition_histogram
     from narowi_ocr_spark.sources.wet import write_wet
@@ -359,8 +434,24 @@ def run_release(
         else reader.parquet(pages_path)
     )
 
+    params = {
+        "pages_path": pages_path,
+        "apply_c4": apply_c4,
+        "full_gates": full_gates,
+        "blocklist": list(blocklist or DEFAULT_BLOCKLIST),
+    }
+    if resume:
+        _check_resume(spark, out_path, params)
+    else:
+        _rmdir(spark, f"{out_path}/checkpoints")
+    _write_text(spark, f"{out_path}/{PARAMS_FILE}", json.dumps(params, sort_keys=True))
+
     resumed: list[str] = []
     stage_s: dict[str, float] = {}
+    partitions: dict[str, int] = {}
+    # once a stage recomputes, every later stage recomputes too: its
+    # checkpoint was derived from the replaced one
+    fresh = not resume
 
     def stage(name: str, compute: "callable") -> DataFrame:
         """Load the stage from its committed checkpoint (resume) or
@@ -369,14 +460,18 @@ def run_release(
         chains through a lost executor's cache and a restarted driver
         sees identical bytes. Per-stage wall-clock lands in the manifest
         (`stage_seconds`) — the number capacity planning reads first."""
+        nonlocal fresh
         path = f"{out_path}/checkpoints/{name}"
-        if resume and _committed(spark, path):
+        if not fresh and _committed(spark, path):
             resumed.append(name)
         else:
+            fresh = True
             ts = time.time()
             compute().write.mode("overwrite").parquet(path)
             stage_s[name] = round(time.time() - ts, 2)
-        return spark.read.parquet(path)
+        df = spark.read.parquet(path)
+        partitions[name] = df.rdd.getNumPartitions()
+        return df
 
     counts: dict[str, int] = {"pages": pages.count()}
 
@@ -413,12 +508,12 @@ def run_release(
 
     # 5. splits + shards + manifests — terminal writes are their own
     # checkpoints: a committed shards dir is loaded, not rewritten
-    shards_done = resume and _committed(spark, f"{out_path}/shards")
-    if shards_done:
+    if not fresh and _committed(spark, f"{out_path}/shards"):
         resumed.append("shards")
         assigned = spark.read.parquet(f"{out_path}/shards")
         counts["train"] = assigned.count()
     else:
+        fresh = True
         ts = time.time()
         assigned = build_train_shards(released)
         counts["train"] = assigned.count()
@@ -431,7 +526,7 @@ def run_release(
         stage_s["shards"] = round(time.time() - ts, 2)
 
     # 6. WET segments for the released train split
-    if resume and _committed(spark, f"{out_path}/wet"):
+    if not fresh and _committed(spark, f"{out_path}/wet"):
         resumed.append("wet")
     else:
         ts = time.time()
@@ -459,6 +554,8 @@ def run_release(
         "stages": counts,
         "stage_seconds": stage_s,
         "resumed_stages": resumed,
+        "params": params,
+        "checkpoint_partitions": partitions,
         "survival_ppm": {
             k: int(v * 1_000_000 / counts["pages"]) if counts["pages"] else 0
             for k, v in counts.items()
@@ -482,11 +579,28 @@ def run_release(
     return manifest
 
 
+def release_args(args: list[str]) -> dict:
+    """``run_release`` keyword arguments from the command line (see the
+    module docstring): --no-c4 for corpora without sentence punctuation
+    (see run_release), --full-gates for the complete curation recipe,
+    --no-resume to recompute every stage."""
+    flags = {a for a in args if a.startswith("--")}
+    unknown = flags - {"--no-c4", "--full-gates", "--no-resume"}
+    if unknown:
+        raise SystemExit(f"unknown flags: {sorted(unknown)}")
+    argv = [a for a in args if not a.startswith("--")]
+    return {
+        "pages_path": argv[0],
+        "out_path": argv[1],
+        "blocklist": argv[2].split(",") if len(argv) > 2 else None,
+        "apply_c4": "--no-c4" not in flags,
+        "full_gates": "--full-gates" in flags,
+        "resume": "--no-resume" not in flags,
+    }
+
+
 def main() -> None:
-    flags = {a for a in sys.argv[1:] if a.startswith("--")}
-    argv = [a for a in sys.argv[1:] if not a.startswith("--")]
-    pages_path, out_path = argv[0], argv[1]
-    blocklist = argv[2].split(",") if len(argv) > 2 else None
+    kwargs = release_args(sys.argv[1:])
     # Pin UTC: WET WARC-Date and md5-of-date record ids must not vary
     # with the cluster's wall clock zone (library sessions get this
     # from config.get_spark; spark-submit sessions must set it here).
@@ -495,20 +609,7 @@ def main() -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
-    print(
-        json.dumps(
-            run_release(
-                spark,
-                pages_path,
-                out_path,
-                blocklist,
-                # --no-c4: corpora without sentence punctuation (see
-                # run_release docstring) skip the C4 prose rules
-                apply_c4="--no-c4" not in flags,
-                resume="--no-resume" not in flags,
-            )
-        )
-    )
+    print(json.dumps(run_release(spark, **kwargs)))
     spark.stop()
 
 
