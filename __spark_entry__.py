@@ -43,7 +43,6 @@ from narowi_ocr_spark.operators.dedup import (
     jaccard_pairs,
     lsh_candidate_pairs,
     simhash_near_pairs,
-    with_minhash_bands,
     with_simhash,
 )
 from narowi_ocr_spark.operators.multimodal import (
@@ -429,26 +428,36 @@ def _ngrams_sql(n: int, words: str = _WORDS_SQL) -> str:
     )
 
 
-def _minhash_sql(num_perm: int = 16) -> str:
-    """sig list CTE fragment over `corpus` (expects sh column).
-    Mirrors dedup._perm_hash: permutation p = 8-hex-char slice p%4 of
-    md5('<p//4>:' || shingle) — one digest serves four permutations."""
-    sigs = ", ".join(
-        f"list_min(list_transform(sh, s -> "
-        f"substr(md5('{p // 4}:' || s), {(p % 4) * 8 + 1}, 8)))"
-        for p in range(num_perm)
-    )
-    return f"[{sigs}]"
-
-
-def _bands_sql(num_bands: int = 8, rows_per_band: int = 2) -> list[str]:
-    out = []
-    for b in range(num_bands):
-        parts = " || '|' || ".join(
-            f"sig[{b * rows_per_band + r + 1}]" for r in range(rows_per_band)
-        )
-        out.append(f"md5({parts})")
-    return out
+def _bands_sql(src: str, name: str, num_perm: int = 16,
+               rows_per_band: int = 2) -> str:
+    """CTEs ending in ``name`` (id, band_idx, band_hash): the
+    dedup.minhash_bands kernel over ``src``'s (id, sh) string shingles,
+    restated with unnest / GROUP BY / window instead of the kernel's
+    per-row arrays. A shingle's hash is the first 15 hex digits of its
+    md5 (NULL → 0); a bin's value is the min hash with pmod(h, num_perm)
+    = bin; an empty bin borrows the value v of the first present bin to
+    its right at distance d as v + d·2^55 (rotation densification);
+    band b is md5 of its bins' decimal values in bin order, '|'-joined."""
+    p, step = num_perm, 1 << 55
+    h = "coalesce(('0x' || substr(md5(s), 1, 15))::BIGINT, 0)"
+    return f"""{name}_h AS (
+          SELECT id, unnest(list_distinct(list_transform(sh, s -> {h}))) AS h
+          FROM {src}),
+        {name}_m AS (
+          SELECT id, h % {p} AS bin, min(h) AS v FROM {name}_h GROUP BY id, bin),
+        {name}_p AS (
+          SELECT id, bin, v,
+                 coalesce(lag(bin) OVER (PARTITION BY id ORDER BY bin),
+                          max(bin) OVER (PARTITION BY id) - {p}) AS prev
+          FROM {name}_m),
+        {name}_f AS (
+          SELECT id, bin AS src, v, unnest(range(prev + 1, bin + 1)) AS k
+          FROM {name}_p),
+        {name} AS (
+          SELECT id, CAST(((k + {p}) % {p}) // {rows_per_band} AS INTEGER) AS band_idx,
+                 md5(string_agg(CAST(v + (src - k) * {step} AS VARCHAR), '|'
+                                ORDER BY (k + {p}) % {p})) AS band_hash
+          FROM {name}_f GROUP BY ALL)"""
 
 
 def _simhash_sql(bits: int = 64) -> str:
@@ -2314,8 +2323,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["exact_dedup"] = exact_dedup_q
 
     def minhash_bands(spark, sf_dir):
-        corpus = _dup_corpus(_docs(spark, sf_dir))
-        return with_minhash_bands(corpus)
+        from narowi_ocr_spark.operators.dedup import minhash_bands as bands
+
+        return bands(_dup_corpus(_docs(spark, sf_dir)))
 
     q["minhash_bands"] = minhash_bands
 
@@ -4974,39 +4984,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def containment_pairs(spark, sf_dir):
         """Asymmetric containment similarity |A∩B|/|A| over LSH
-        candidate pairs — catches a short document wholly CONTAINED in
-        a longer one, which symmetric Jaccard under-scores (Broder's
-        containment, the news-wire-inclusion case). Candidates from
-        the same band join as lsh_pairs; shingles are projected AFTER
-        each candidate join (as in dedup.jaccard_pairs), so only docs
-        appearing in a candidate pair pay the n-gram computation."""
+        candidate pairs (dedup.containment_pairs) — catches a short
+        document wholly CONTAINED in a longer one, which symmetric
+        Jaccard under-scores. Candidates from the same band join as
+        lsh_pairs."""
         from narowi_ocr_spark.operators.dedup import (
-            lsh_candidate_pairs,
-            shingles,
+            containment_pairs as containment,
         )
 
         corpus = _dup_corpus(_docs(spark, sf_dir).select("doc_id", "text"))
-        pairs = lsh_candidate_pairs(corpus)
-        txt = corpus.select(F.col("doc_id").alias("id"), "text")
-        j = (
-            pairs.join(txt, pairs.id_a == txt.id)
-            .select("id_a", "id_b", shingles("text").alias("sh_a"))
-            .join(txt, F.col("id_b") == txt.id)
-            .select("id_a", "id_b", "sh_a", shingles("text").alias("sh_b"))
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        return j.select(
-            "id_a",
-            "id_b",
-            inter.alias("n_shared"),
-            F.size("sh_a").alias("n_a"),
-            F.size("sh_b").alias("n_b"),
-            F.expr(
-                "CASE WHEN size(sh_a) > 0 THEN"
-                " (1000000 * size(array_intersect(sh_a, sh_b)))"
-                " div size(sh_a) END"
-            ).alias("containment_a_ppm"),
-        ).where(F.col("n_shared") > 0)
+        return containment(corpus, lsh_candidate_pairs(corpus))
 
     q["containment_pairs"] = containment_pairs
 
@@ -7899,25 +7886,19 @@ def oracle_sql() -> dict[str, str]:
         SELECT doc_id, src, q, n_tokens FROM capped WHERE rn_src <= 30
     """
 
-    band_exprs = _bands_sql()
-    band_union = "\nUNION ALL\n".join(
-        f"SELECT id, {b} AS band_idx, {expr} AS band_hash FROM sigs"
-        for b, expr in enumerate(band_exprs)
-    )
-    sig_cte = (
+    band_cte = (
         f"sh_docs AS (SELECT doc_id AS id, {_shingles_sql()} AS sh FROM corpus),\n"
-        f"sigs AS (SELECT id, {_minhash_sql()} AS sig FROM sh_docs)"
+        f"        {_bands_sql('sh_docs', 'bands')}"
     )
     o["minhash_bands"] = f"""
         WITH {_DUP_CORPUS_SQL},
-        {sig_cte}
-        {band_union}
+        {band_cte}
+        SELECT id, band_idx, band_hash FROM bands
     """
 
     o["lsh_pairs"] = f"""
         WITH {_DUP_CORPUS_SQL},
-        {sig_cte},
-        bands AS ({band_union})
+        {band_cte}
         SELECT DISTINCT a.id AS id_a, b.id AS id_b
         FROM bands a JOIN bands b
           ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.id < b.id
@@ -7925,8 +7906,7 @@ def oracle_sql() -> dict[str, str]:
 
     o["jaccard_near_dups"] = f"""
         WITH {_DUP_CORPUS_SQL},
-        {sig_cte},
-        bands AS ({band_union}),
+        {band_cte},
         pairs AS (
           SELECT DISTINCT a.id AS id_a, b.id AS id_b
           FROM bands a JOIN bands b
@@ -7951,8 +7931,7 @@ def oracle_sql() -> dict[str, str]:
           SELECT doc_id, text FROM corpus
           WHERE md5('de0' || CAST(doc_id AS VARCHAR)) < '4'),
         sh_docs AS (SELECT doc_id AS id, {_shingles_sql()} AS sh FROM samp),
-        sigs AS (SELECT id, {_minhash_sql()} AS sig FROM sh_docs),
-        bands AS ({band_union}),
+        {_bands_sql('sh_docs', 'bands')},
         truth AS (
           SELECT a.id AS id_a, b.id AS id_b
           FROM sh_docs a JOIN sh_docs b ON a.id < b.id
@@ -8000,8 +7979,7 @@ def oracle_sql() -> dict[str, str]:
     # per node — the independent mirror of min-label propagation
     o["dedup_components"] = f"""
         WITH RECURSIVE {_DUP_CORPUS_SQL},
-        {sig_cte},
-        bands AS ({band_union}),
+        {band_cte},
         pairs AS (
           SELECT DISTINCT a.id AS id_a, b.id AS id_b
           FROM bands a JOIN bands b
@@ -8018,8 +7996,7 @@ def oracle_sql() -> dict[str, str]:
 
     o["dedup_rep_quality"] = f"""
         WITH RECURSIVE {_DUP_CORPUS_SQL},
-        {sig_cte},
-        bands AS ({band_union}),
+        {band_cte},
         pairs AS (
           SELECT DISTINCT a.id AS id_a, b.id AS id_b
           FROM bands a JOIN bands b
@@ -9866,14 +9843,7 @@ def oracle_sql() -> dict[str, str]:
     # incremental_near_dup: the minhash/band machinery instantiated
     # twice (index = even ids, batch = odd ids ∪ tailed copies of every
     # 20th indexed doc); candidates are NEW×INDEX band matches only.
-    _inc_band_i = "\nUNION ALL\n".join(
-        f"SELECT id, {b} AS band_idx, {expr} AS band_hash FROM sgi"
-        for b, expr in enumerate(_bands_sql())
-    )
-    _inc_band_n = "\nUNION ALL\n".join(
-        f"SELECT id, {b} AS band_idx, {expr} AS band_hash FROM sgn"
-        for b, expr in enumerate(_bands_sql())
-    )
+    # Verified Jaccard stays over the string shingles.
     _inc_jacc = _round4_sql(
         "CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)"
         " / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE)"
@@ -9888,10 +9858,8 @@ def oracle_sql() -> dict[str, str]:
           FROM documents WHERE doc_id % 20 = 0),
         shi AS (SELECT doc_id AS id, {_shingles_sql()} AS sh FROM idx),
         shn AS (SELECT doc_id AS id, {_shingles_sql()} AS sh FROM newb),
-        sgi AS (SELECT id, {_minhash_sql()} AS sig FROM shi),
-        sgn AS (SELECT id, {_minhash_sql()} AS sig FROM shn),
-        bi AS ({_inc_band_i}),
-        bn AS ({_inc_band_n}),
+        {_bands_sql('shi', 'bi')},
+        {_bands_sql('shn', 'bn')},
         cand AS (
           SELECT DISTINCT n.id AS new_id, i.id AS index_id
           FROM bn n JOIN bi i
@@ -10335,8 +10303,7 @@ def oracle_sql() -> dict[str, str]:
 
     o["containment_pairs"] = f"""
         WITH {_DUP_CORPUS_SQL},
-        {sig_cte},
-        bands AS ({band_union}),
+        {band_cte},
         pairs AS (
           SELECT DISTINCT a.id AS id_a, b.id AS id_b
           FROM bands a JOIN bands b

@@ -271,24 +271,17 @@ def main() -> None:
     from narowi_ocr_spark.operators.dedup import (
         PROD_NUM_PERM,
         PROD_ROWS_PER_BAND,
-        with_minhash_bands,
-        with_minhash_bands_fast,
+        minhash_bands,
     )
 
+    # the release job's signature geometry (128 bins, 16 bands of 8)
     bench(
         "minhash_prod",
         lambda: materialize(
-            with_minhash_bands(
+            minhash_bands(
                 corpus, num_perm=PROD_NUM_PERM, rows_per_band=PROD_ROWS_PER_BAND
             )
         ),
-        extra_set=True,
-    )
-    # r4: xxhash64 production kernel — same geometry/dataflow, JVM long
-    # hashes instead of md5-hex substrings (the release driver's path)
-    bench(
-        "minhash_prod_fast",
-        lambda: materialize(with_minhash_bands_fast(corpus)),
         extra_set=True,
     )
     bench("simhash_pairs", lambda: materialize(simhash_near_pairs(corpus)))

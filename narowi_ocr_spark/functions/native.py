@@ -29,7 +29,7 @@ def bind_once(expr: Column, fn) -> Column:
     reference inside ``fn`` a NamedLambdaVariable lookup (O(1)).
 
     This is the expression-level twin of the projection-boundary staging
-    used by ``with_text_stats``/``with_minhash_bands`` — use this when
+    used by ``with_text_stats`` — use this when
     the consumer must stay a single Column (no DataFrame to stage on).
     """
     return F.element_at(F.transform(F.array(expr), fn), 1)

@@ -7,22 +7,26 @@ Hamming-band blocking follows Manku/Jain/Sarma, "Detecting
 near-duplicates for web crawling", WWW 2007), and n-gram Jaccard
 verification.
 
-All of these are pure Catalyst expression trees — no Python executes at
-runtime, every hash is derived from ``md5`` so the DuckDB oracles in
-``__spark_entry__.py`` can reproduce values bit-for-bit (production-scale
-users can switch the hash family to ``xxhash64`` for ~3× cheaper hashing;
-the dataflow shape is identical).
+All of these are Catalyst expression trees (``with_simhash_arrow`` is
+the one Arrow kernel). Every hash whose value reaches query output is
+derived from ``md5``, so the DuckDB oracles in ``__spark_entry__.py``
+reproduce it bit for bit: the MinHash signature and the Jaccard verify
+both read one md5-derived long per shingle (``shingle_hashes``).
+``xxhash64`` appears only where the value never leaves the operator
+(Bloom probe positions).
 
 Scale notes (the part that matters at 100 TB):
   - exact dedup is one shuffle on a 32-byte digest — the payload column is
     dropped before the shuffle and re-joined only if needed;
-  - MinHash signatures are computed per row with higher-order array
-    functions (narrow, no shuffle); only the tiny (doc_id, band_idx, band
-    hash) triples shuffle for the LSH bucket join — never text;
+  - MinHash signatures are one-permutation hashing over each row's
+    shingle-hash array (narrow, no shuffle); only the tiny (doc_id,
+    band_idx, band hash) triples shuffle for the LSH bucket join —
+    never text;
   - candidate pairs come from an equi-join on (band_idx, band_hash), which
     AQE splits if a degenerate bucket (all-identical docs) skews;
-  - Jaccard verification joins shingle ARRAYS only for candidate pairs —
-    a tiny fraction of the corpus — never all-pairs.
+  - Jaccard verification hashes the shingles of candidate documents
+    only, once per document, and intersects long arrays — never
+    all-pairs.
 """
 
 from __future__ import annotations
@@ -30,25 +34,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from narowi_ocr_spark.functions.native import round4
+from narowi_ocr_spark.functions.native import bind_once, round4
 from narowi_ocr_spark.functions.textstats import fingerprint, words
 
-# MinHash geometry: NUM_PERM permutations folded into NUM_BANDS bands of
-# ROWS_PER_BAND rows (b·r = NUM_PERM). With b=8, r=2 the LSH S-curve has
-# its 50% capture threshold at (1/b)^(1/r) ≈ 0.35 Jaccard. This is the
-# DEV/ORACLE geometry — small enough that the DuckDB oracle re-derives
-# every hash, loose enough to exercise the verify stage.
+# MinHash geometry: NUM_PERM one-permutation bins folded into NUM_BANDS
+# bands of ROWS_PER_BAND rows (b·r = NUM_PERM). With b=8, r=2 the LSH
+# S-curve has its 50% capture threshold at (1/b)^(1/r) ≈ 0.35 Jaccard.
+# This is the DEV/ORACLE geometry — small enough that the DuckDB oracle
+# re-derives every hash, loose enough to exercise the verify stage.
 NUM_PERM = 16
 ROWS_PER_BAND = 2
 NUM_BANDS = NUM_PERM // ROWS_PER_BAND
 
-# PRODUCTION geometry (pass to with_minhash_bands/minhash_signature):
-# 128 permutations in 16 bands of 8 rows → 50% capture threshold
+# PRODUCTION geometry (pass to minhash_bands/lsh_candidate_pairs):
+# 128 bins in 16 bands of 8 rows → 50% capture threshold
 # (1/16)^(1/8) ≈ 0.71 Jaccard with a much steeper S-curve — near-dups
 # above ~0.8 are captured w.p. >0.97 while ~0.5-similar pairs are almost
 # never candidates, which is what keeps the candidate join sparse at
-# 10⁹+ docs. Same dataflow, same digest-sharing (4 perms/md5 → 32 md5
-# per shingle); benched as `minhash_prod` in bench.py.
+# 10⁹+ docs. Same kernel, still one hash per shingle; benched as
+# `minhash_prod` in bench.py.
 PROD_NUM_PERM = 128
 PROD_ROWS_PER_BAND = 8
 PROD_NUM_BANDS = PROD_NUM_PERM // PROD_ROWS_PER_BAND
@@ -63,25 +67,28 @@ def _col(c: Column | str) -> Column:
 
 # ------------------------------------------------------------- shingling
 
+def _grams(w: Column, n: int) -> Column:
+    """Word n-grams of the word array ``w`` (not distinct); fewer than
+    ``n`` words give one gram of the whole text."""
+    k = F.size(w)
+    return F.when(
+        k >= n,
+        F.transform(
+            F.sequence(F.lit(1), k - F.lit(n - 1)),
+            lambda i: F.array_join(F.slice(w, i, n), " "),
+        ),
+    ).otherwise(F.array(F.array_join(w, " ")))
+
+
 def shingles(text: Column | str, n: int = 3) -> Column:
     """Distinct word n-grams (lowercased), the MinHash input set.
     Empty/short docs yield a single shingle of the whole text so every
     document has a non-empty set (stable signatures). The word array is
     bound once per row (``bind_once``) — slicing the raw split inside
     the lambda would re-tokenize per shingle, O(len²) per document."""
-    from narowi_ocr_spark.functions.native import bind_once
-
-    def _sh(w: Column) -> Column:
-        k = F.size(w)
-        grams = F.transform(
-            F.sequence(F.lit(1), k - F.lit(n - 1)),
-            lambda i: F.array_join(F.slice(w, i, n), " "),
-        )
-        return F.when(k >= n, F.array_distinct(grams)).otherwise(
-            F.array(F.array_join(w, " "))
-        )
-
-    return bind_once(words(F.lower(_col(text))), _sh)
+    return bind_once(
+        words(F.lower(_col(text))), lambda w: F.array_distinct(_grams(w, n))
+    )
 
 
 # ----------------------------------------------------------- exact dedup
@@ -131,197 +138,126 @@ def incremental_dedup(
 
 # --------------------------------------------------------------- MinHash
 
-def minhash_signature(text: Column | str, num_perm: int = NUM_PERM) -> Column:
-    """array<string> of ``num_perm`` MinHash values: permutation *p* is the
-    lexicographic min of ``md5('<p>:' || shingle)`` over the shingle set.
-    Pure higher-order expressions — narrow, shuffle-free, oracle-exact.
-
-    NOTE: when chaining further operators over the signature, go through
-    ``with_minhash_bands`` — it inserts projection boundaries so Catalyst
-    does not re-inline this (expensive) expression once per downstream
-    reference (CollapseProject keeps multi-referenced non-cheap
-    projections separate)."""
-    sh = shingles(text)
-    return _signature_from_shingles(sh, num_perm)
+# A shingle's hash is the first 15 hex digits of its md5, read as a long:
+# 60 bits, never negative, and reproducible in DuckDB with md5 and a hex
+# cast. A NULL shingle (NULL text) hashes to 0.
+_HASH_HEX = 15
+_HASH_BITS = 4 * _HASH_HEX
+# Densification offset per bin of rotation distance d: v + d·2^55 stays
+# below 2^63 for v < 2^60 and d < 128, so at most 128 bins.
+_ROTATE_STEP = 1 << 55
 
 
-# Permutation p draws its value from md5 call group p//4: one 128-bit md5
-# digest yields FOUR independent 32-bit (8-hex-char) permutation values.
-# 4× fewer hash invocations than one-md5-per-permutation — at 100 TB the
-# hash kernel IS the dedup cost, so this is the knob that matters.
-PERMS_PER_DIGEST = 4
-
-
-def _perm_hash(p: int):
-    # NB: a closure, NOT a default-arg lambda — ``lambda s, p=p`` would be
-    # seen by PySpark as a binary (element, index) lambda and p would be
-    # bound to the array index column.
-    prefix = f"{p // PERMS_PER_DIGEST}:"
-    start = (p % PERMS_PER_DIGEST) * 8 + 1
-    return lambda s: F.substring(
-        F.md5(F.concat(F.lit(prefix), s)), start, 8
+def _shingle_hash(s: Column) -> Column:
+    return F.coalesce(
+        F.conv(F.substring(F.md5(s), 1, _HASH_HEX), 16, 10).cast("long"),
+        F.lit(0).cast("long"),
     )
 
 
-def _signature_from_shingles(sh: Column, num_perm: int = NUM_PERM) -> Column:
-    return F.array(
-        *[F.array_min(F.transform(sh, _perm_hash(p))) for p in range(num_perm)]
+def shingle_hashes(text: Column | str, n: int = 3) -> Column:
+    """array<long>: the ``shingles`` of ``text`` as a set of hashes
+    (``_shingle_hash``), hashed in the pass that builds them — the one
+    shingle pass the MinHash signature and every Jaccard/containment
+    verify read.
+
+    Set sizes over the hashes equal those over the strings unless two
+    distinct shingles of a compared pair share a 60-bit hash. With n
+    distinct shingles in the pair that has probability about n²/2⁶¹
+    (4·10⁻¹¹ at n = 10⁴), i.e. under 0.05 affected pairs per 10⁹
+    verified, and a collision moves that pair's Jaccard by about 1/n."""
+    return bind_once(
+        words(F.lower(_col(text))),
+        lambda w: F.array_distinct(F.transform(_grams(w, n), _shingle_hash)),
     )
 
 
-def with_minhash_bands(
+def minhash_bands(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_perm: int = NUM_PERM, rows_per_band: int = ROWS_PER_BAND,
 ) -> DataFrame:
-    """(id, band_idx, band_hash) rows via the explode → hash → partial-agg
-    dataflow:
+    """(id, band_idx, band_hash) rows of a one-permutation MinHash
+    signature (Li, Owen & Zhang, "One Permutation Hashing", NIPS 2012)
+    with rotation densification (Shrivastava & Li, "Densifying One
+    Permutation Hashing via Rotation", 2014):
 
-        explode(shingles)                 narrow, 1→|shingles| rows
-        → md5 per permutation            16 codegen'd JVM hashes per row
-        → groupBy(id).agg(min ×16)       ONE shuffle; map-side combine
-                                          reduces to ≤1 row per doc per
-                                          input partition before it
-        → band digests + posexplode      narrow
+      - shingle hash h falls in bin pmod(h, num_perm); a bin's value is
+        the min h in it. One hash per shingle, not one per permutation;
+      - an empty bin takes the value v of the first non-empty bin to
+        its right (circularly), at distance d, as v + d·2^55: two
+        documents agree on it only if they agree on that bin and on d.
+        Without this, documents with fewer distinct shingles than bins
+        lose band matches (recall drops). The cost: a band's empty bins
+        share one source, so short documents sharing a few shingles
+        become candidates more often than under independent
+        permutations (the verify drops them);
+      - band b is the md5 of bins [b·r, b·r + r) in order, as decimal
+        strings joined by '|'.
 
-    This deliberately avoids the all-in-one higher-order-function
-    expression (array_min∘transform per permutation): HOF lambdas don't
-    participate in whole-stage codegen and Catalyst's CollapseProject
-    re-inlines the signature array into each of its 16 downstream
-    element_at references — measured >100× slower on sf0.01. The shuffle
-    here moves only (id, 16×32-hex) rows — never text."""
-    sh_rows = df.select(
-        F.col(id_col).alias("id"), F.explode(shingles(text_col)).alias("s")
-    )
-    n_digests = (num_perm + PERMS_PER_DIGEST - 1) // PERMS_PER_DIGEST
-    digests = sh_rows.select(
-        "id",
-        *[
-            F.md5(F.concat(F.lit(f"{g}:"), F.col("s"))).alias(f"m{g}")
-            for g in range(n_digests)
-        ],
-    )
-    # per-permutation value = 8 hex chars of the digest, min'd AS A
-    # STRING. This plans a SortAggregate (min over var-length strings
-    # has no UnsafeRow-mutable buffer) — a DELIBERATE exception to the
-    # hash-aggregable-keys discipline: the alternative (parse each
-    # slice to a long via conv() so the agg hashes, reconstruct hex
-    # after — tried in r4) paid a 128×-per-shingle-row parse tax that
-    # exceeded what the sort costs, measured interleaved-A/B on the
-    # same session at sf0.1×128 perms: string/sort-agg median 1.71 s
-    # vs conv/hash-agg 2.29 s (+35%). The sort is per-partition over
-    # fixed-width 8-char keys with map-side combine — O(n log n) with
-    # a small constant and spill support, not a scale cliff. The
-    # AT-SCALE kernel is ``with_minhash_bands_fast`` below: xxhash64
-    # longs min natively in a HashAggregate with no parse step at all;
-    # this md5 variant exists for DuckDB-reproducible byte identity.
-    hashed = digests.select(
-        "id",
-        *[
-            F.substring(
-                F.col(f"m{p // PERMS_PER_DIGEST}"),
-                (p % PERMS_PER_DIGEST) * 8 + 1,
-                8,
-            ).alias(f"h{p}")
-            for p in range(num_perm)
-        ],
-    )
-    sig = hashed.groupBy("id").agg(
-        *[F.min(f"h{p}").alias(f"h{p}") for p in range(num_perm)]
-    )
-    num_bands = num_perm // rows_per_band
-    bands = sig.select(
-        "id",
-        F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"h{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                )
-                for b in range(num_bands)
-            ]
-        ).alias("bands"),
-    )
-    return bands.select("id", F.posexplode("bands").alias("band_idx", "band_hash"))
+    Per document this is one pass over its ``shingle_hashes`` array:
+    each hash becomes a (bin, h) sort key packed in a long, the keys
+    sort natively, the first key of each bin's run is the bin's min,
+    and the ≤ num_perm present bins are densified and banded. It is
+    narrow (no shuffle, no aggregate), and the same on any
+    partitioning; only the ~48-byte band rows cross the band join."""
+    if num_perm & (num_perm - 1) or not 0 < num_perm <= 128:
+        raise ValueError("num_perm must be a power of two ≤ 128")
+    lg = num_perm.bit_length() - 1
+    low = _HASH_BITS - lg  # key = bin << low | h >> lg: sorts by (bin, h)
 
+    def key(h: Column) -> Column:
+        b = h.bitwiseAND(F.lit(num_perm - 1).cast("long"))
+        return F.shiftleft(b, low).bitwiseOR(F.shiftright(h, lg))
 
-def with_minhash_bands_fast(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    num_perm: int = PROD_NUM_PERM, rows_per_band: int = PROD_ROWS_PER_BAND,
-) -> DataFrame:
-    """(id, band_idx, band_hash) via xxhash64 permutations — the
-    production HOT-KERNEL variant of ``with_minhash_bands``. Same
-    dataflow (explode → per-permutation hash → groupBy-min → band
-    digests), but permutation *p* is ``xxhash64(p, shingle)`` — a
-    codegen'd JVM long with zero string allocation — instead of an
-    md5-hex substring, and the band digest is one more xxhash64 over
-    the band's longs (8+8-byte shuffle keys vs 32-hex strings).
-    Measured ~10× on a shingle-heavy corpus (20k docs × ~300 words:
-    the md5 signature pass alone took ~170 s at local[8]; the whole
-    xxhash64 release composition runs in 67 s) and 1.8× on the small
-    sf0.1 bench corpus where scan/shuffle fixed costs dominate — the
-    gap grows with shingle volume, and at 100 TB the hash kernel IS
-    the dedup cost.
+    def bin_of(k: Column) -> Column:
+        return F.shiftright(k, low)
 
-    The md5 variant stays for engine-portable oracle parity (DuckDB
-    has no xxhash64); both are MinHash over the same shingle sets, so
-    they are statistically interchangeable — capture/recall behavior
-    is pinned by tests, not by byte equality."""
-    sh_rows = df.select(
-        F.col(id_col).alias("id"), F.explode(shingles(text_col)).alias("s")
-    )
-    hashed = sh_rows.select(
-        "id",
-        *[
-            F.xxhash64(F.lit(p), F.col("s")).alias(f"h{p}")
-            for p in range(num_perm)
-        ],
-    )
-    sig = hashed.groupBy("id").agg(
-        *[F.min(f"h{p}").alias(f"h{p}") for p in range(num_perm)]
-    )
-    num_bands = num_perm // rows_per_band
-    bands = sig.select(
-        "id",
-        F.array(
-            *[
-                F.xxhash64(
-                    *[
-                        F.col(f"h{b * rows_per_band + r}")
-                        for r in range(rows_per_band)
-                    ]
-                )
-                for b in range(num_bands)
-            ]
-        ).alias("bands"),
-    )
-    return bands.select(
-        "id", F.posexplode("bands").alias("band_idx", "band_hash")
-    )
+    def value(k: Column) -> Column:
+        rest = k.bitwiseAND(F.lit((1 << low) - 1))
+        return F.shiftleft(rest, lg).bitwiseOR(bin_of(k))
 
+    def bin_mins(ks: Column) -> Column:
+        # at i = 0 get() is NULL, and TRUE OR NULL keeps the first key
+        return F.filter(
+            ks, lambda k, i: (i == 0) | (bin_of(k) != bin_of(F.get(ks, i - 1)))
+        )
 
-def band_hashes(signature: Column | str, num_bands: int = NUM_BANDS,
-                rows_per_band: int = ROWS_PER_BAND) -> Column:
-    """Fold the signature into ``num_bands`` band digests
-    (md5 of the concatenated band rows)."""
-    sig = _col(signature)
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.element_at(sig, b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                )
+    def densified(pk: Column) -> Column:
+        last = bin_of(F.element_at(pk, -1))
+
+        def fill(k: Column, i: Column) -> Column:
+            b, v = bin_of(k), value(k)
+            prev = F.coalesce(bin_of(F.get(pk, i - 1)), last - num_perm)
+            return F.transform(
+                F.sequence(prev + 1, b), lambda t: v + (b - t) * _ROTATE_STEP
             )
-            for b in range(num_bands)
-        ]
+
+        # bins last+1-num_perm .. last, in that order: rotate to 0 .. num_perm-1
+        flat = F.flatten(F.transform(pk, fill))
+        head = (F.lit(num_perm) - last).cast("int")
+        return F.concat(
+            F.slice(flat, head, (last + 1).cast("int")),
+            F.slice(flat, F.lit(1), head - 1),
+        )
+
+    def bands(vals: Column) -> Column:
+        vs = vals.cast("array<string>")
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(num_perm // rows_per_band - 1)),
+            lambda b: F.md5(
+                F.array_join(F.slice(vs, b * rows_per_band + 1, rows_per_band), "|")
+            ),
+        )
+
+    keys = F.sort_array(F.transform(shingle_hashes(text_col), key))
+    sig = bind_once(
+        keys,
+        lambda ks: bind_once(
+            bin_mins(ks), lambda pk: bind_once(densified(pk), bands)
+        ),
+    )
+    return df.select(
+        F.col(id_col).alias("id"), F.posexplode(sig).alias("band_idx", "band_hash")
     )
 
 
@@ -331,14 +267,14 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     num_perm: int = NUM_PERM,
     rows_per_band: int = ROWS_PER_BAND,
-    kernel: str = "md5",
+    kernel: str | None = None,
 ) -> DataFrame:
     """Distinct candidate near-duplicate pairs (id_a < id_b) that share at
-    least one MinHash band bucket.
+    least one MinHash band bucket (``minhash_bands``).
 
-    Dataflow: per-row signatures (narrow) → explode to (id, band_idx,
-    band_hash) triples → self-equi-join on the band key. Only ~48 bytes
-    per (doc, band) cross the shuffle. A pathological bucket (the same
+    Dataflow: per-row band digests (narrow) → (id, band_idx, band_hash)
+    triples → self-equi-join on the band key. Only ~48 bytes per (doc,
+    band) cross the shuffle. A pathological bucket (the same
     boilerplate on millions of urls) is exactly the skew AQE's skew-join
     splitting handles; for known-degenerate corpora run exact_dedup first.
 
@@ -347,20 +283,18 @@ def lsh_candidate_pairs(
     fixtures exercised; production compositions pass
     (PROD_NUM_PERM, PROD_ROWS_PER_BAND) = (128, 8), whose ≈0.71
     threshold keeps the candidate join sparse on real corpora.
-    ``kernel="xxhash64"`` swaps in ``with_minhash_bands_fast`` (JVM
-    long hashes — up to ~10× cheaper signatures on shingle-heavy
-    corpora, long join keys; not DuckDB-reproducible, so dev oracles
-    stay on md5).
+
+    ``kernel`` selects nothing: there is one MinHash kernel. The keyword
+    is still accepted because existing compositions (the benchmark's
+    traced release) pass ``kernel="xxhash64"``.
     """
-    mk = with_minhash_bands_fast if kernel == "xxhash64" else with_minhash_bands
-    bands = mk(
+    bands = minhash_bands(
         df, text_col, id_col, num_perm=num_perm, rows_per_band=rows_per_band
     )
     # Explicit exchange on the join keys: both self-join sides share ONE
     # identical Exchange subtree, so ReuseExchange materializes the
-    # signature dataflow (shingle explode → 16 hashes → min-agg) once
-    # instead of once per side. Shuffled rows stay (id, band_idx,
-    # band_hash) — ~48 bytes. (The DISTINCT stays, unlike
+    # signature pass once instead of once per side. Shuffled rows stay
+    # (id, band_idx, band_hash) — ~48 bytes. (The DISTINCT stays, unlike
     # simhash_near_pairs' first-band trick: deduping by first matching
     # band would require carrying every band digest on both sides —
     # ~264 bytes/row, 5× the shuffle — and band digests must stay full
@@ -379,6 +313,56 @@ def lsh_candidate_pairs(
     )
 
 
+def _hash_sets(
+    df: DataFrame, ids: DataFrame, text_col: str, id_col: str
+) -> DataFrame:
+    """(id, hs): ``shingle_hashes`` of each document of ``df`` whose id
+    is in ``ids`` (one column ``id``), built once per document. The
+    left-semi join drops the other documents before any shingling."""
+    return (
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+        .join(ids, "id", "left_semi")
+        .select("id", shingle_hashes("_t").alias("hs"))
+    )
+
+
+def _pair_sets(
+    df: DataFrame, pairs: DataFrame, text_col: str, id_col: str
+) -> DataFrame:
+    """(id_a, id_b, sh_a, sh_b): the candidate pairs with both sides'
+    shingle-hash sets, each document in a pair shingled once. Every
+    pair becomes one row per side, the rows join the once-built sets
+    (``_hash_sets``) on the document id, and one hash aggregate puts
+    the two sides of each pair back together. (Joining the sets twice,
+    once per side, would build them twice: the optimizer drops a
+    repartition above the semi join's own id partitioning, so there is
+    no exchange for the two consumers to share.) A pair whose document
+    is missing from ``df`` is dropped, as an inner join would."""
+    sides = pairs.select(
+        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
+    )
+    hs = _hash_sets(df, sides.select("id"), text_col, id_col)
+    # ids are distinct within a pair (id_a < id_b): the sort puts a first
+    both = F.sort_array(F.collect_list(F.struct("id", "hs")))
+    return (
+        sides.join(hs, "id")
+        .groupBy("id_a", "id_b")
+        .agg(both.alias("s"))
+        .where(F.size("s") == 2)
+        .select(
+            "id_a",
+            "id_b",
+            F.col("s")[0]["hs"].alias("sh_a"),
+            F.col("s")[1]["hs"].alias("sh_b"),
+        )
+    )
+
+
+def _jaccard(a: str = "sh_a", b: str = "sh_b") -> Column:
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    return round4(inter / F.size(F.array_union(a, b)).cast("double"))
+
+
 def jaccard_pairs(
     df: DataFrame,
     pairs: DataFrame,
@@ -386,31 +370,45 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs; keeps pairs ≥ threshold.
-    Joined only to the candidate pairs, never all-pairs — and the
-    shingle arrays are projected AFTER each join, so only docs that
-    appear in a candidate pair ever pay the shingle computation (on a
-    release corpus the non-candidate majority is nearly everything),
-    and what moves through the join is the raw text, several times
-    smaller than its n-gram array."""
-    txt = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("_t")
-    )
-    j = (
-        pairs.join(txt, pairs.id_a == txt.id)
-        .select("id_a", "id_b", shingles("_t").alias("sh_a"))
-        .join(txt, F.col("id_b") == txt.id)
-        .select("id_a", "id_b", "sh_a", shingles("_t").alias("sh_b"))
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    """Exact shingle Jaccard for candidate pairs; keeps pairs ≥ threshold.
+    Joined only to the candidate pairs, never all-pairs, and only the
+    documents in a pair are shingled, each once (``_pair_sets``); the
+    intersection and union run over long arrays (``shingle_hashes``)."""
     return (
-        j.select(
+        _pair_sets(df, pairs, text_col, id_col)
+        .select("id_a", "id_b", _jaccard().alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def containment_pairs(
+    df: DataFrame,
+    pairs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Asymmetric containment |A∩B|/|A| over candidate pairs (Broder's
+    containment): catches a short document wholly contained in a longer
+    one, which symmetric Jaccard under-scores. Returns (id_a, id_b,
+    n_shared, n_a, n_b, containment_a_ppm) for pairs sharing at least
+    one shingle; same once-per-document hashed sets as
+    ``jaccard_pairs``."""
+    n_shared = F.size(F.array_intersect("sh_a", "sh_b"))
+    return (
+        _pair_sets(df, pairs, text_col, id_col)
+        .select(
             "id_a",
             "id_b",
-            round4(inter / union).alias("jaccard"),
+            n_shared.alias("n_shared"),
+            F.size("sh_a").alias("n_a"),
+            F.size("sh_b").alias("n_b"),
+            F.expr(
+                "CASE WHEN size(sh_a) > 0 THEN"
+                " (1000000 * size(array_intersect(sh_a, sh_b)))"
+                " div size(sh_a) END"
+            ).alias("containment_a_ppm"),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("n_shared") > 0)
     )
 
 
@@ -794,14 +792,14 @@ def incremental_near_dup(
     novel content and proceed to extraction.
 
     Dataflow: both sides reduce to (id, band_idx, band_hash) triples
-    (``with_minhash_bands`` — explode → codegen md5 → partial-agg min,
-    only ~48-byte rows shuffle); candidates come from the band
-    equi-join NEW × INDEX (never new×new or index×index — re-crawls
-    only need novelty vs the corpus, which is what keeps this linear in
-    the batch, not the corpus); verification projects shingle arrays
-    AFTER the candidate joins, so only docs that band-collided ever pay
-    the n-gram computation — in particular the INDEX side (the whole
-    corpus) is never shingled wholesale on a refresh.
+    (``minhash_bands`` — narrow, only ~48-byte rows shuffle);
+    candidates come from the band equi-join NEW × INDEX (never new×new
+    or index×index — re-crawls only need novelty vs the corpus, which
+    is what keeps this linear in the batch, not the corpus);
+    verification builds shingle-hash sets only for documents in a
+    candidate pair, once each (left-semi join on the candidate ids), so
+    the INDEX side (the whole corpus) is never shingled wholesale on a
+    refresh.
 
     Production shape: the index side's band triples and shingle-digest
     arrays are PERSISTED tables (written bucketed by (band_idx,
@@ -813,8 +811,8 @@ def incremental_near_dup(
     the index — exactly the fingerprint-index lifecycle of
     ``build_fingerprint_index``.
     """
-    bn = with_minhash_bands(new_docs, text_col, id_col)
-    bi = with_minhash_bands(index_docs, text_col, id_col)
+    bn = minhash_bands(new_docs, text_col, id_col)
+    bi = minhash_bands(index_docs, text_col, id_col)
     cand = (
         bn.alias("n")
         .join(
@@ -827,24 +825,16 @@ def incremental_near_dup(
         )
         .distinct()
     )
-    txt_n = new_docs.select(
-        F.col(id_col).alias("new_id"), F.col(text_col).alias("_t")
-    )
-    txt_i = index_docs.select(
-        F.col(id_col).alias("index_id"), F.col(text_col).alias("_t")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    sn = _hash_sets(
+        new_docs, cand.select(F.col("new_id").alias("id")), text_col, id_col
+    ).select(F.col("id").alias("new_id"), F.col("hs").alias("sh_a"))
+    si = _hash_sets(
+        index_docs, cand.select(F.col("index_id").alias("id")), text_col, id_col
+    ).select(F.col("id").alias("index_id"), F.col("hs").alias("sh_b"))
     return (
-        cand.join(txt_n, "new_id")
-        .select("new_id", "index_id", shingles("_t").alias("sh_a"))
-        .join(txt_i, "index_id")
-        .select("new_id", "index_id", "sh_a", shingles("_t").alias("sh_b"))
-        .select(
-            "new_id",
-            "index_id",
-            round4(inter / union).alias("jaccard"),
-        )
+        cand.join(sn, "new_id")
+        .join(si, "index_id")
+        .select("new_id", "index_id", _jaccard().alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -992,16 +982,16 @@ def dedup_eval(
     """
     key = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
     sampled = df.where(key < F.lit(hex_lt))
-    sh = sampled.select(F.col(id_col).alias("id"), shingles(text_col).alias("sh"))
+    sh = sampled.select(
+        F.col(id_col).alias("id"), shingle_hashes(text_col).alias("sh")
+    )
     a, b = sh.alias("a"), sh.alias("b")
-    inter = F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-    union = F.size(F.array_union("a.sh", "b.sh")).cast("double")
     truth = (
         a.join(b, F.col("a.id") < F.col("b.id"))  # eval-only all-pairs
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            round4(inter / union).alias("jaccard"),
+            _jaccard("a.sh", "b.sh").alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
         # materialized once: consumed by both the hit join and n_truth —

@@ -8,7 +8,7 @@ from narowi_ocr_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
     lsh_candidate_pairs,
-    minhash_signature,
+    minhash_bands,
     shingles,
     simhash,
     simhash_near_pairs,
@@ -42,16 +42,15 @@ def test_exact_dedup(corpus):
     assert dup["keep_id"] == 0
 
 
-def test_minhash_identical_signatures(corpus):
-    sigs = {
-        r["doc_id"]: r["sig"]
-        for r in corpus.select("doc_id", minhash_signature("text").alias("sig")).collect()
-    }
-    assert sigs[0] == sigs[1]
-    assert sigs[0] != sigs[3]
-    # near dup shares most permutation minima
-    shared = sum(a == b for a, b in zip(sigs[0], sigs[2]))
-    assert shared >= 10
+def test_minhash_identical_documents_identical_bands(corpus):
+    bands = {}
+    for r in minhash_bands(corpus).collect():
+        bands.setdefault(r["id"], {})[r["band_idx"]] = r["band_hash"]
+    assert all(len(b) == 8 for b in bands.values())  # dev geometry 16/2
+    assert bands[0] == bands[1]
+    assert not set(bands[0].values()) & set(bands[3].values())
+    # the near dup (Jaccard 0.77) shares at least one band bucket
+    assert sum(bands[0][i] == bands[2][i] for i in range(8)) >= 1
 
 
 def test_lsh_pairs_and_jaccard(corpus):
@@ -318,13 +317,12 @@ def test_simhash_arrow_twin_fuzz(spark):
     assert arrow == jvm
 
 
-# ------------------------------------- xxhash64 production MinHash kernel
+# --------------------------------------- production MinHash geometry
 
 def test_fast_minhash_kernel_recall_and_sparsity(spark):
-    """with_minhash_bands_fast (xxhash64 longs, prod 128/8 geometry)
-    must capture true near-dups and stay sparse on diverse docs —
-    statistical interchangeability with the md5 kernel, pinned
-    behaviorally since the hashes themselves differ by design."""
+    """At the production 128/8 geometry the MinHash kernel captures
+    true near-dups and stays sparse on diverse docs. (``kernel=`` is
+    accepted and selects nothing.)"""
     from narowi_ocr_spark.operators.dedup import (
         PROD_NUM_PERM,
         PROD_ROWS_PER_BAND,
@@ -358,11 +356,185 @@ def test_fast_minhash_kernel_recall_and_sparsity(spark):
     assert ver.count() == 10
 
 
-def test_fast_minhash_kernel_partitioning_invariant(spark):
-    from narowi_ocr_spark.operators.dedup import with_minhash_bands_fast
-
+def test_minhash_kernel_partitioning_invariant(spark):
     rows = [(i, f"alpha beta w{i} gamma delta epsilon zeta") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, with_minhash_bands_fast(df).collect()))
-    b = sorted(map(tuple, with_minhash_bands_fast(df.repartition(7)).collect()))
+    a = sorted(map(tuple, minhash_bands(df, num_perm=128, rows_per_band=8).collect()))
+    b = sorted(
+        map(
+            tuple,
+            minhash_bands(df.repartition(7), num_perm=128, rows_per_band=8).collect(),
+        )
+    )
     assert a == b and len(a) == 30 * 16  # 16 bands per doc at 128/8
+
+
+# ------------------------------------- one-permutation kernel: densification
+
+
+def _py_shingles(text, n=3):
+    if text is None:
+        return {None}
+    w = text.lower().split()
+    if len(w) < n:
+        return {" ".join(w)}
+    return {" ".join(w[i:i + n]) for i in range(len(w) - n + 1)}
+
+
+def _py_round4(x):
+    import math
+
+    return math.floor(x * 10000.0 + 0.5) / 10000.0
+
+
+def _py_jaccard(a, b):
+    sa, sb = _py_shingles(a), _py_shingles(b)
+    return _py_round4(len(sa & sb) / len(sa | sb))
+
+
+def test_minhash_densification_keeps_short_document_recall(spark):
+    """Documents with far fewer distinct shingles than the 128 bins of
+    the production geometry leave most bins empty; without
+    densification a band of 8 bins almost never has all 8 filled, so
+    planted near-dups would not be candidates. With it, every planted
+    pair (Jaccard ≥ 0.8) is a candidate, unrelated documents are not,
+    and the verified set equals brute-force string Jaccard."""
+    import hashlib
+    import random
+
+    from narowi_ocr_spark.operators.dedup import PROD_NUM_PERM, PROD_ROWS_PER_BAND
+
+    rnd = random.Random(5)
+    vocab = ["".join(rnd.choice("abcdefghij") for _ in range(6)) for _ in range(4000)]
+    texts = {i: [rnd.choice(vocab) for _ in range(rnd.randrange(25, 60))] for i in range(24)}
+    planted = set()
+    for i in range(12):
+        w = list(texts[i])
+        if i % 2:
+            w[-1] = "tailword"            # one shingle replaced
+        else:
+            w.insert(len(w) // 2, "mid")  # three shingles for two
+        texts[100 + i] = w
+        planted.add((i, 100 + i))
+    docs = {i: " ".join(w) for i, w in texts.items()}
+    assert all(_py_jaccard(docs[a], docs[b]) >= 0.8 for a, b in planted)
+
+    # without densification (empty bins never match) the planted pairs
+    # are lost: this corpus exercises the densification
+    def oph(text):
+        bins = {}
+        for s in _py_shingles(text):
+            h = int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+            bins[h % PROD_NUM_PERM] = min(h, bins.get(h % PROD_NUM_PERM, h))
+        return bins
+
+    def band_match(x, y):
+        r = PROD_ROWS_PER_BAND
+        return any(
+            all(x.get(k) is not None and x.get(k) == y.get(k) for k in range(b, b + r))
+            for b in range(0, PROD_NUM_PERM, r)
+        )
+
+    undensified = {(a, b) for a, b in planted if band_match(oph(docs[a]), oph(docs[b]))}
+    assert len(undensified) < len(planted) // 2, undensified
+
+    df = spark.createDataFrame(sorted(docs.items()), "doc_id long, text string")
+    cand = lsh_candidate_pairs(
+        df, num_perm=PROD_NUM_PERM, rows_per_band=PROD_ROWS_PER_BAND
+    )
+    assert {(r.id_a, r.id_b) for r in cand.collect()} == planted
+
+    got = {(r.id_a, r.id_b): r.jaccard for r in jaccard_pairs(df, cand, threshold=0.8).collect()}
+    ids = sorted(docs)
+    want = {
+        (a, b): j
+        for x, a in enumerate(ids)
+        for b in ids[x + 1:]
+        if (j := _py_jaccard(docs[a], docs[b])) >= 0.8
+    }
+    assert got == want
+
+
+# Empty, blank, 1-2-word (the whole-text shingle), case-only variants and
+# NULL text: hashed-set results must equal string-set results.
+EDGE_DOCS = [
+    (0, ""), (1, "   "), (2, "a"), (3, "A"), (4, "a b"), (5, "b a"),
+    (6, None), (7, None), (8, "one two three four"),
+    (9, "one two three four five"), (10, "a b"), (11, "x y z"),
+]
+
+
+def _string_sets(spark):
+    from narowi_ocr_spark.operators.dedup import shingles
+
+    df = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+    return df, df.select(F.col("doc_id").alias("id"), shingles("text").alias("sh"))
+
+
+def _all_pairs(sets, a="id_a", b="id_b"):
+    x, y = sets.alias("x"), sets.alias("y")
+    return x.join(y, F.col("x.id") < F.col("y.id")).select(
+        F.col("x.id").alias(a), F.col("y.id").alias(b),
+        F.col("x.sh").alias("sh_a"), F.col("y.sh").alias("sh_b"),
+    )
+
+
+def test_hashed_jaccard_and_containment_equal_string_sets(spark):
+    from narowi_ocr_spark.functions.native import round4
+    from narowi_ocr_spark.operators.dedup import containment_pairs
+
+    df, sets = _string_sets(spark)
+    pairs = _all_pairs(sets)
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    want_j = {
+        (r[0], r[1]): r[2]
+        for r in pairs.select(
+            "id_a", "id_b",
+            round4(inter.cast("double") / F.size(F.array_union("sh_a", "sh_b")).cast("double")),
+        ).collect()
+    }
+    got_j = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in jaccard_pairs(df, pairs.select("id_a", "id_b"), threshold=0.0).collect()
+    }
+    assert got_j == want_j
+    assert want_j[(6, 7)] == 1.0 and want_j[(0, 1)] == 1.0 and want_j[(2, 3)] == 1.0
+    assert want_j[(4, 5)] == 0.0 and want_j[(8, 9)] > 0.5
+
+    want_c = {
+        (r[0], r[1]): tuple(r[2:])
+        for r in pairs.where(inter > 0).select(
+            "id_a", "id_b", inter, F.size("sh_a"), F.size("sh_b"),
+            F.expr("(1000000 * size(array_intersect(sh_a, sh_b))) div size(sh_a)"),
+        ).collect()
+    }
+    got_c = {
+        (r.id_a, r.id_b): (r.n_shared, r.n_a, r.n_b, r.containment_a_ppm)
+        for r in containment_pairs(df, pairs.select("id_a", "id_b")).collect()
+    }
+    assert got_c == want_c
+
+
+def test_hashed_incremental_near_dup_equals_string_sets(spark):
+    from narowi_ocr_spark.functions.native import round4
+    from narowi_ocr_spark.operators.dedup import incremental_near_dup
+
+    df, sets = _string_sets(spark)
+    index = df.select((F.col("doc_id") + 100).alias("doc_id"), "text")
+    x = sets.alias("x")
+    y = sets.select((F.col("id") + 100).alias("id"), "sh").alias("y")
+    j = round4(
+        F.size(F.array_intersect("x.sh", "y.sh")).cast("double")
+        / F.size(F.array_union("x.sh", "y.sh")).cast("double")
+    )
+    want = {
+        (r[0], r[1]): r[2]
+        for r in x.crossJoin(y).select("x.id", "y.id", j.alias("j"))
+        .where(F.col("j") >= 0.5).collect()
+    }
+    got = {
+        (r.new_id, r.index_id): r.jaccard
+        for r in incremental_near_dup(df, index, threshold=0.5).collect()
+    }
+    assert got == want
+    assert (6, 107) in got and (0, 101) in got

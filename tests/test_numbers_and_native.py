@@ -3,7 +3,10 @@
 test_pattern_matcher.py:196-213) + differential check vs the reference
 NumberExtractor."""
 
+import hashlib
+import json
 import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -55,7 +58,6 @@ def test_numbers_spark_and_validation(spark):
 )
 def test_numbers_differential_vs_reference():
     import importlib.util
-    import random
 
     spec = importlib.util.spec_from_file_location(
         "ref_ne", "/root/reference/src/processing/number_extractor.py"
@@ -70,14 +72,51 @@ def test_numbers_differential_vs_reference():
             for n in ne.extract_numbers(text, conf)
         ]
 
+    for text in numbers_fuzz_corpus():
+        assert extract_numbers_py(text, 0.8) == ref_spans(text, 0.8), repr(text)
+
+
+def numbers_fuzz_corpus() -> list[str]:
+    """The differential's seeded fuzz texts (Random(11), 400 texts)."""
     rng = random.Random(11)
     frags = ["98.6F", "120/80", "mmHg", "BP:", "150.5 lbs", "kg", "98%", "SpO2:",
              "72 BPM", "HR: 72", "O2: 97%", "WT: 88.5 kg", "x", "12", "99.9"]
-    for _ in range(400):
-        text = rng.choice([" ", "\n"]).join(
+    return [
+        rng.choice([" ", "\n"]).join(
             rng.choice(frags) for _ in range(rng.randint(1, 6))
         )
-        assert extract_numbers_py(text, 0.8) == ref_spans(text, 0.8), repr(text)
+        for _ in range(400)
+    ]
+
+
+def output_digests(fn, corpus) -> list[str]:
+    """One 16-hex digest per text over (text, fn(text)) as sorted-key
+    JSON: pins the corpus and every output byte."""
+    return [
+        hashlib.sha256(json.dumps([t, fn(t)], sort_keys=True).encode()).hexdigest()[:16]
+        for t in corpus
+    ]
+
+
+DIGESTS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "fixtures", "kernel_digests.json",
+)
+
+
+def test_numbers_equal_pinned_digests():
+    """Byte identity without the reference checkout: the number
+    kernel's output over the differential's fuzz corpus must equal the
+    digests in fixtures/kernel_digests.json, written from the kernel
+    that test_numbers_differential_vs_reference verified equal to the
+    reference NumberExtractor (the kernel is unchanged since)."""
+    with open(DIGESTS) as f:
+        pinned = json.load(f)["extract_numbers_py"]
+    corpus = numbers_fuzz_corpus()
+    got = output_digests(lambda t: extract_numbers_py(t, 0.8), corpus)
+    assert len(got) == len(pinned) == 400
+    for text, g, p in zip(corpus, got, pinned):
+        assert g == p, repr(text)
 
 
 TEMP_FORMAT_CASES = [

@@ -575,45 +575,47 @@ def test_hashed_features_single_exchange(spark):
     assert "HashAggregate" in plan, plan
 
 
-def test_fast_minhash_signature_pass_is_pure_jvm(spark):
-    """The xxhash64 production MinHash kernel must stay entirely inside
-    whole-stage codegen: no Python boundary anywhere, and exactly one
-    Exchange (the per-doc signature min-agg) feeding the band explode —
-    at 100 TB the signature pass dominates near-dedup, so a stray
-    Python node or second shuffle here is a capacity bug."""
-    from narowi_ocr_spark.operators.dedup import with_minhash_bands_fast
+def test_minhash_signature_plan_hashes_each_shingle_once(spark):
+    """The one MinHash kernel (one-permutation hashing, production
+    128/8 geometry) is one narrow projection: no Python node, no
+    aggregate (so no SortAggregate) and no shuffle, and the shingle md5
+    appears once — one hash per shingle, not one per bin. The only
+    other md5 is the per-band digest."""
+    from narowi_ocr_spark.operators.dedup import minhash_bands
 
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta eta theta")],
         "doc_id long, text string",
     )
-    plan = _physical_plan(with_minhash_bands_fast(df))
+    plan = _physical_plan(minhash_bands(df, num_perm=128, rows_per_band=8))
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
-                   "MapInPandas", "FlatMapGroupsInPandas"):
+                   "MapInPandas", "FlatMapGroupsInPandas", "Aggregate",
+                   "Exchange"):
         assert marker not in plan, f"{marker} in:\n{plan}"
-    assert plan.count("Exchange") == 1, plan
-    assert "xxhash64" in plan.lower(), plan
+    assert plan.count("md5(") == 2, plan  # shingle hash + band digest
+    assert plan.count("conv(substring(md5(cast(lambda") == 1, plan
 
 
-def test_md5_minhash_signature_agg_shape(spark):
-    """The md5 (oracle-parity) MinHash variant min's the 8-hex slices
-    AS STRINGS — a deliberate SortAggregate: the hash-aggregable
-    alternative (conv() each slice to a long, reconstruct hex after the
-    agg) was tried in r4 and measured +35% SLOWER interleaved-A/B at
-    sf0.1×128 perms — the per-shingle-row parse tax exceeds the sort
-    cost. The at-scale kernel is with_minhash_bands_fast (native long
-    mins, HashAggregate, pinned above); this one exists for
-    DuckDB-reproducible byte identity. Pin: exactly ONE Exchange (the
-    signature agg), and no conv() parse anywhere in the plan."""
-    from narowi_ocr_spark.operators.dedup import with_minhash_bands
+def test_jaccard_verify_shingles_each_candidate_once(spark):
+    """jaccard_pairs builds each candidate document's shingle-hash set
+    once (left-semi join on the pair ids) and puts the pair's two sides
+    together with one hash aggregate, instead of shingling both sides
+    per pair: the executed plan has one shingle md5 and no
+    SortAggregate."""
+    from narowi_ocr_spark.operators.dedup import jaccard_pairs
 
     df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta")],
+        [(i, f"alpha beta gamma delta w{i % 3}") for i in range(6)],
         "doc_id long, text string",
     )
-    plan = _physical_plan(with_minhash_bands(df))
-    assert plan.count("Exchange") == 1, plan
-    assert "conv(" not in plan, plan
+    pairs = spark.createDataFrame(
+        [(0, 3), (1, 4), (0, 1), (2, 5)], "id_a long, id_b long"
+    )
+    out = jaccard_pairs(df, pairs, threshold=0.0)
+    assert {(r.id_a, r.id_b) for r in out.collect()} == {(0, 3), (1, 4), (0, 1), (2, 5)}
+    final = _physical_plan(out).split("== Initial Plan ==")[0]
+    assert final.count("md5(") == 1, final
+    assert "SortAggregate" not in final, final
 
 
 def test_span_dedup_gram_stream_shuffles_once(spark):

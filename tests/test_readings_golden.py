@@ -177,7 +177,6 @@ def test_null_and_empty(spark):
 def test_differential_vs_reference():
     """Differential check against the actual reference implementation."""
     import importlib.util
-    import random
 
     spec = importlib.util.spec_from_file_location(
         "ref_pm", "/root/reference/src/processing/pattern_matcher.py"
@@ -197,6 +196,15 @@ def test_differential_vs_reference():
             for r in pm.find_readings(text, 0.95)
         ]
 
+    for text in readings_fuzz_corpus():
+        assert extract_readings_py(text) == ref_rows(text), repr(text)
+
+
+def readings_fuzz_corpus() -> list[str]:
+    """The differential's corpus: the golden texts, the two multi-line
+    documents and 500 seeded fuzz texts (Random(7))."""
+    import random
+
     corpus = [t for t, *_ in GOLDEN] + [MULTI_DOC, INVALID_DOC]
     rng = random.Random(7)
     frags = [t for t, *_ in GOLDEN] + ["abc", "12", "°F", "cm", "P:", "R:", "\t"]
@@ -205,5 +213,23 @@ def test_differential_vs_reference():
         corpus.append(
             rng.choice([" ", "\n", ": "]).join(rng.choice(frags) for _ in range(n))
         )
-    for text in corpus:
-        assert extract_readings_py(text) == ref_rows(text), repr(text)
+    return corpus
+
+
+def test_readings_equal_pinned_digests():
+    """Byte identity without the reference checkout: the readings
+    kernel's output over the differential's corpus must equal the
+    digests in fixtures/kernel_digests.json, written from the kernel
+    that test_differential_vs_reference verified equal to the reference
+    PatternMatcher (the kernel is unchanged since)."""
+    import json
+
+    from test_numbers_and_native import DIGESTS, output_digests
+
+    with open(DIGESTS) as f:
+        pinned = json.load(f)["extract_readings_py"]
+    corpus = readings_fuzz_corpus()
+    got = output_digests(extract_readings_py, corpus)
+    assert len(got) == len(pinned) == len(GOLDEN) + 502
+    for text, g, p in zip(corpus, got, pinned):
+        assert g == p, repr(text)

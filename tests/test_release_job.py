@@ -291,3 +291,25 @@ def test_release_args_full_gates_flag():
 
     with pytest.raises(SystemExit):
         release_args(["p", "o", "--full-gate"])
+
+
+def test_release_job_empty_release_resumes(spark, tmp_path):
+    """A corpus the full gates reject entirely (the non-prose synth
+    pages) releases with train == 0, and a resume under the same
+    parameters loads every stage, the empty shards included."""
+    from run_release_job import run_release
+
+    src = str(tmp_path / "pages")
+    out = str(tmp_path / "release")
+    synth_pages(spark, 40, partitions=2).write.parquet(src)
+    first = run_release(spark, src, out, apply_c4=False, full_gates=True)
+    assert first["stages"]["train"] == 0
+    assert first["lineage"]["partition_histogram"] == []
+    again = run_release(spark, src, out, apply_c4=False, full_gates=True)
+    assert again["resumed_stages"] == [
+        "00_docs", "01_clean_ids", "02_exact_ids", "03_near_ids",
+        "shards", "wet",
+    ]
+    assert again["stages"] == first["stages"]
+    assert spark.read.parquet(out + "/shards").count() == 0
+    assert spark.read.parquet(out + "/shard_manifest").count() == 0

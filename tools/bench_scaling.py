@@ -504,7 +504,7 @@ local[{FOUR_N}]: `{json.dumps(lv[N].get('stage_seconds', {}))}` vs
 `tools/run_release_job.py` as ONE submitted job over a
 {rel['n_pages']}-page diverse corpus (+5% exact mirrors, +5% planted
 near-dups): extract → blocklist gate → exact dedup → MinHash-LSH
-near-dedup (production 128-perm/8-row geometry, xxhash64 kernel) →
+near-dedup (production 128-bin/8-row geometry, one-permutation kernel) →
 connected components → split → shards → WET segments → manifest.
 Single timed run per level (minutes-scale job; startup amortizes
 inside it).

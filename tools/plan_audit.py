@@ -27,7 +27,8 @@ after touching any operator dataflow:
 
 The allowlist pins the flag SET per query, so a justified query that
 grows a new smell (e.g. anchor_texts acquiring a Cartesian) still
-fails.
+fails, and so does one that lost an allowlisted flag or no longer
+exists: a stale exemption must be deleted, not carried.
 """
 
 from __future__ import annotations
@@ -73,15 +74,6 @@ ALLOWED = {
     "training_order": ("SinglePart", "epoch-boundary offset table"),
     "session_stats": ("SinglePart", "single-row summary"),
     "batch_summary": ("SinglePart", "single-row batch totals"),
-    # -- md5 MinHash byte-identity kernel: signature min over fixed-width
-    #    hex strings; the conv()-to-long hash-agg form measured +35% slower
-    #    (interleaved A/B, sf0.1×128 perms) — at-scale path is the xxhash64
-    #    kernel (native long mins, HashAggregate, plan-pinned) --
-    "minhash_bands": ("SortAgg", "md5 dev-kernel signature min (string) — xxhash64 kernel is the scale path"),
-    "lsh_pairs": ("SortAgg", "md5 dev-kernel signature min (string) — xxhash64 kernel is the scale path"),
-    "jaccard_near_dups": ("SortAgg", "md5 dev-kernel signature min (string) — xxhash64 kernel is the scale path"),
-    "incremental_near_dup": ("SortAgg", "md5 dev-kernel signature min (string) — xxhash64 kernel is the scale path"),
-    "containment_pairs": ("SortAgg", "md5 dev-kernel signature min (string) — xxhash64 kernel is the scale path"),
     # -- string ordering IS the semantics, input already reduced --
     "anchor_texts": ("SortAgg", "lexicographic top-anchor tie-break over the (target,anchor) tie-set"),
     "template_clusters": ("SortAgg", "lexicographic representative (url,n_tags) per template"),
@@ -95,7 +87,7 @@ ALLOWED = {
     "release:00_docs": ("SortAgg", "distinct-on-id struct-min: lexicographic (url,ts,text) pick per doc_id, documented at build_docs"),
     "release:01_clean_ids": ("SortAgg", "consumes 00_docs' struct-min (lazy chain only; the job reads the checkpoint)"),
     "release:02_exact_ids": ("SortAgg", "00_docs chain + exact_dedup keep-min over (md5,doc_id) struct"),
-    "release:03_near_ids": ("SortAgg", "00_docs chain; the near-dup pass itself is HashAggregate (xxhash64 kernel)"),
+    "release:03_near_ids": ("SortAgg", "00_docs chain; the near-dup pass adds none (aggregate-free MinHash signature, HashAggregate DISTINCT and components)"),
     "release:shards": ("SortAgg", "00_docs chain through splits + shard assignment"),
     "release:wet": ("SortAgg", "00_docs chain through WET record conversion"),
 }
@@ -151,21 +143,24 @@ def main() -> int:
             failures.append(f"{name}: PLAN-ERROR {type(ex).__name__}: {str(ex)[:100]}")
             continue
         flags = ",".join(k for k, marker in FLAG_MARKERS if marker in plan)
-        if not flags:
-            continue
-        flagged += 1
+        flagged += bool(flags)
         # the :full release variants share the base stages' allowlist —
         # the flags come from the same 00_docs struct-min chain; any
         # NEW flag the gate/PII additions introduce still fails here
         allowed, why = ALLOWED.get(
             name, ALLOWED.get(name.removesuffix(":full"), ("", ""))
         )
-        if flags == allowed:
-            print(f"  ok   {name}: {flags}  ({why})")
-        else:
+        if flags != allowed:
+            # a flag that went away fails too: its exemption is stale
             failures.append(
-                f"{name}: flags [{flags}] != allowlisted [{allowed or 'none'}]"
+                f"{name}: flags [{flags or 'none'}] != allowlisted [{allowed or 'none'}]"
             )
+        elif flags:
+            print(f"  ok   {name}: {flags}  ({why})")
+    failures += [
+        f"{name}: allowlisted but no such query or release stage"
+        for name in sorted(set(ALLOWED) - set(targets))
+    ]
     print(f"\n{flagged} flagged / {len(targets)} plans "
           f"({len(entry.queries())} queries + release stages); "
           f"{len(failures)} NOT allowlisted")

@@ -205,14 +205,14 @@ def build_near_ids(uniq: DataFrame, materialize: bool = True) -> DataFrame:
     """Near-dedup survivor ids (stage 03_near_ids): LSH candidates →
     exact-Jaccard verify → connected components → one rep per cluster.
 
-    PRODUCTION band geometry (128 perms, 16 bands x 8 rows, ~0.71
+    PRODUCTION band geometry (128 bins, 16 bands x 8 rows, ~0.71
     capture threshold): the dev 16/2 geometry's ~0.35 threshold turns
     any moderately self-similar corpus into a quadratic candidate
     join — at release scale the steep S-curve is what keeps this
-    stage linear in the number of TRUE near-dup pairs. The xxhash64
-    kernel keeps the 128-perm signature pass up to ~10× cheaper than
-    md5 on shingle-heavy corpora (the hash kernel IS the dedup cost
-    at scale); candidates are verified by exact Jaccard either way.
+    stage linear in the number of TRUE near-dup pairs. The signature
+    is one-permutation MinHash (one md5-derived hash per shingle, the
+    same kernel the DuckDB oracles mirror), and candidates are verified
+    by exact Jaccard over the same shingle hashes.
 
     ``materialize=False`` (plan audit only) skips the eager
     localCheckpoint of the candidate pair list so the full chain stays
@@ -230,10 +230,7 @@ def build_near_ids(uniq: DataFrame, materialize: bool = True) -> DataFrame:
     )
 
     cand = lsh_candidate_pairs(
-        uniq,
-        num_perm=PROD_NUM_PERM,
-        rows_per_band=PROD_ROWS_PER_BAND,
-        kernel="xxhash64",
+        uniq, num_perm=PROD_NUM_PERM, rows_per_band=PROD_ROWS_PER_BAND
     )
     if materialize:
         cand = cand.localCheckpoint(eager=True)
@@ -517,9 +514,13 @@ def run_release(
         ts = time.time()
         assigned = build_train_shards(released)
         counts["train"] = assigned.count()
-        assigned.write.mode("overwrite").partitionBy("shard").parquet(
-            f"{out_path}/shards"
-        )
+        # an empty partitionBy write leaves no parquet file, so nothing
+        # a resume could read the schema from: an empty train split is
+        # written unpartitioned (one empty file that keeps the schema)
+        writer = assigned.write.mode("overwrite")
+        if counts["train"]:
+            writer = writer.partitionBy("shard")
+        writer.parquet(f"{out_path}/shards")
         shard_manifest(assigned, assigned).write.mode("overwrite").parquet(
             f"{out_path}/shard_manifest"
         )
@@ -535,18 +536,14 @@ def run_release(
 
     # 7. per-partition lineage over the delivered shards: rows per
     # physical partition + skew ratio (O(partitions) collect — the
-    # audit row a 1000-executor run is debugged from). A fully-gated
-    # release (train == 0) leaves a schema-less empty dir; record an
-    # empty histogram rather than failing the manifest write.
-    try:
-        hist = [
-            r.asDict()
-            for r in partition_histogram(
-                spark.read.parquet(f"{out_path}/shards")
-            ).collect()
-        ]
-    except Exception:
-        hist = []
+    # audit row a 1000-executor run is debugged from). An empty
+    # release gives an empty histogram.
+    hist = [
+        r.asDict()
+        for r in partition_histogram(
+            spark.read.parquet(f"{out_path}/shards")
+        ).collect()
+    ]
     sizes = [h["rows"] for h in hist]
     manifest = {
         "ts": time.time(),
