@@ -128,6 +128,48 @@ def test_label_prop_falls_back_to_star_on_deep_chain(spark):
         connected_components(edges, max_iters=3, fallback_star=False)
 
 
+def test_connected_components_seeded_round_one(spark):
+    """The seed labels each endpoint with least(id, min(neighbour)),
+    which is round 1 of propagation: a star converges with a budget of
+    one round (a confirming round only), a 2-hop path needs two, and a
+    random forest with hash-sized ids gets the union-find labels."""
+    import random
+
+    import pytest as _pytest
+
+    from narowi_ocr_spark.operators.components import connected_components
+
+    star = spark.createDataFrame(
+        [(0, i) for i in range(1, 6)], "id_a long, id_b long"
+    )
+    out = connected_components(star, max_iters=1, fallback_star=False)
+    assert {r["id"]: r["comp"] for r in out.collect()} == {i: 0 for i in range(6)}
+
+    path = spark.createDataFrame([(0, 1), (1, 2)], "id_a long, id_b long")
+    with _pytest.raises(RuntimeError):
+        connected_components(path, max_iters=1, fallback_star=False)
+    out = connected_components(path, max_iters=2, fallback_star=False)
+    assert {r["id"]: r["comp"] for r in out.collect()} == {0: 0, 1: 0, 2: 0}
+
+    rng = random.Random(5)
+    ids = [rng.randrange(-(2**63), 2**63) for _ in range(300)]
+    pairs = [(rng.choice(ids), rng.choice(ids)) for _ in range(220)]
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    nodes = spark.createDataFrame([(i,) for i in ids], "id long")
+    got = {r["id"]: r["comp"] for r in connected_components(edges, nodes).collect()}
+    assert got == {i: find(i) for i in ids}
+
+
 def test_pagerank_fixed_symmetry_and_hubs(spark):
     from narowi_ocr_spark.operators.linkrank import (
         RANK_SCALE,

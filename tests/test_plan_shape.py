@@ -687,3 +687,36 @@ def test_clean_stage_tokenizes_once_and_filters_flags_only(spark):
     assert "ExistingRDD" in filt, ids
     for gate_expr in ("split(", "regexp_", "xxhash64(", "zip_with(", "size("):
         assert gate_expr not in ids, f"{gate_expr} in:\n{ids}"
+
+
+def test_build_docs_repartitions_once_at_session_width(spark, tmp_path):
+    """build_docs has one exchange: the doc_id repartition at the
+    session's shuffle width, which the distinct-on-id aggregate reads
+    without a second exchange. AQE does not coalesce it, so 00_docs is
+    written as one file per partition at any data size."""
+    import glob
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
+    from run_release_job import build_docs
+
+    pages = synth_pages(spark, 40, partitions=2)
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    for w in (width, "3"):
+        spark.conf.set(key, w)
+        try:
+            docs = build_docs(pages)
+            docs.collect()  # the executed, final adaptive plan
+            docs.write.parquet(str(tmp_path / w))
+        finally:
+            spark.conf.set(key, width)
+        final = _physical_plan(docs).split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in final, final
+        assert final.count("Exchange") == 1, final
+        assert f", {w}), REPARTITION_BY_NUM" in final, final
+        assert "AQEShuffleRead" not in final and "coalesced" not in final, final
+        assert len(glob.glob(str(tmp_path / w / "part-*.parquet"))) == int(w)

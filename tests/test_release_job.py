@@ -4,13 +4,16 @@ WET segments → manifest, all from library calls."""
 
 import glob
 import json
+import os
 import sys
 
 import pyspark.sql.functions as F
 
 from narowi_ocr_spark.sources.pages import synth_pages
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 
 def test_release_job_end_to_end(spark, tmp_path):
@@ -313,3 +316,87 @@ def test_release_job_empty_release_resumes(spark, tmp_path):
     assert again["stages"] == first["stages"]
     assert spark.read.parquet(out + "/shards").count() == 0
     assert spark.read.parquet(out + "/shard_manifest").count() == 0
+
+
+def _release_outputs(spark, out):
+    """Everything a release delivers, in order-free form: the id set of
+    every stage checkpoint, (doc_id, shard, pos), the shard manifest
+    rows and the multiset of WET records."""
+    from collections import Counter
+
+    stages = {
+        name: {r["doc_id"] for r in spark.read.parquet(f"{out}/checkpoints/{name}").collect()}
+        for name in ("00_docs", "01_clean_ids", "02_exact_ids", "03_near_ids")
+    }
+    shards = {
+        tuple(r) for r in spark.read.parquet(out + "/shards").select("doc_id", "shard", "pos").collect()
+    }
+    manifest = sorted(tuple(r) for r in spark.read.parquet(out + "/shard_manifest").collect())
+    blob = b"".join(open(p, "rb").read() for p in glob.glob(out + "/wet/part-*"))
+    wet = Counter(blob.split(b"WARC/1.0\r\n")[1:])
+    return stages, shards, manifest, wet
+
+
+def test_release_job_width_invariant_and_counts_stage_jobs(spark, tmp_path):
+    """The release is the same at shuffle width 1 and at the session's
+    width: 00_docs is written as one file per shuffle partition, and
+    every stage's ids, the shard assignment, the shard manifest and the
+    WET records are identical. The manifest counts the Spark jobs of
+    each step (per run, though the group ids repeat across runs), and
+    the caller's job group is back in place afterwards."""
+    from run_release_job import run_release
+
+    src = str(tmp_path / "pages")
+    base = synth_pages(spark, 150, partitions=4, vocab_scale=64, prose=True)
+    heads = base.where(F.pmod(F.xxhash64("url"), F.lit(10)) == 0)
+    mirrors = heads.withColumn("url", F.concat(F.lit("https://mirror.example/"), "url"))
+    near = heads.withColumn(
+        "url", F.concat(F.lit("https://near.example/"), "url")
+    ).withColumn(
+        "html",
+        F.expr(
+            "cast(replace(cast(html as string), '</body>',"
+            " '<p>one more closing line for this page.</p></body>') as binary)"
+        ),
+    )
+    base.unionByName(mirrors).unionByName(near).write.parquet(src)
+
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    sc = spark.sparkContext
+    runs = {}
+    try:
+        for w in ("1", width):
+            out = str(tmp_path / f"release{w}")
+            spark.conf.set(key, w)
+            sc.setJobGroup("caller", "the caller's group")
+            try:
+                m = run_release(spark, src, out, apply_c4=False)
+            finally:
+                spark.conf.set(key, width)
+            assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+            assert sc.getLocalProperty("spark.job.description") == "the caller's group"
+            assert m["checkpoint_partitions"]["00_docs"] == int(w)
+            runs[w] = (m, _release_outputs(spark, out))
+        again = run_release(spark, src, out, apply_c4=False)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+
+    (m1, got1), (mw, gotw) = runs["1"], runs[width]
+    assert m1["stages"] == mw["stages"]
+    st = mw["stages"]
+    # the planted mirrors and near variants die in their dedup stages
+    assert st["clean"] > st["exact_unique"] > st["near_unique"]
+    assert got1 == gotw
+
+    steps = {"00_docs", "01_clean_ids", "02_exact_ids", "03_near_ids", "shards", "wet", "lineage"}
+    for m in (m1, mw, again):
+        assert set(m["stage_jobs"]) == steps
+    assert all(n >= 1 for n in mw["stage_jobs"].values())
+    # WET reads the persisted shard assignment: one write job
+    assert mw["stage_jobs"]["wet"] == 1
+    # a resumed WET starts no job; the group's earlier job is not counted
+    assert len(again["resumed_stages"]) == 6
+    assert again["stage_jobs"]["wet"] == 0
+    assert sum(again["stage_jobs"].values()) < sum(mw["stage_jobs"].values())

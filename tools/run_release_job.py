@@ -50,7 +50,7 @@ import operator
 import os
 import sys
 import time
-from functools import reduce
+from functools import reduce, wraps
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,6 +74,15 @@ DEFAULT_BLOCKLIST = ["slow", "dup"]  # demo terms; deployments load the
 # run parameters a checkpoint depends on, written next to checkpoints/
 PARAMS_FILE = "release_params.json"
 
+# Spark job group of each run_release step (manifest ``stage_jobs``)
+JOB_GROUP = "run_release:{}"
+# the local properties setJobGroup sets, restored when run_release exits
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
 
 # --------------------------------------------------------------------------
 # Stage builders — pure DataFrame → DataFrame functions. run_release()
@@ -93,7 +102,18 @@ def build_docs(pages: DataFrame) -> DataFrame:
     typed spans found and valid), not an extraction-quality signal;
     extracted_text is byte-exact for partial/failed pages too, and a
     corpus release that kept only reading-bearing pages would silently
-    drop ~90% of good prose (measured on the fixture corpus)."""
+    drop ~90% of good prose (measured on the fixture corpus).
+
+    The one shuffle is ``repartition(<spark.sql.shuffle.partitions>,
+    doc_id)``, and the distinct-on-id aggregate runs on its output, so
+    00_docs is written as that many files and every later per-row stage
+    (gates, MinHash signature, verify) runs as that many tasks. The
+    width is explicit because AQE sizes partitions by bytes: it folded
+    the ~1.7 MB shuffle of a 1350-page release into one partition,
+    while the gate and signature cost is per document, not per byte.
+    It is the session's shuffle width, not the core count, so a large
+    release still gets as many partitions as it is configured for. A
+    ``REPARTITION_BY_NUM`` exchange is never coalesced by AQE."""
     from narowi_ocr_spark.operators.urls import url_host
     from narowi_ocr_spark.plans.pipeline import extract_pages
 
@@ -113,16 +133,18 @@ def build_docs(pages: DataFrame) -> DataFrame:
     # across re-ingested segments, and every downstream id-keyed
     # semi-join (c4_keep, bl_keep, exact_keep, reps) would fan rows
     # out multiplicatively on a duplicated id. Deterministic keep
-    # (min struct), ONE aggregate on doc_id — linear, no window.
-    # The struct-min buffer makes it sort-based (per-partition sort
-    # by the 8-byte doc_id, map-side combined to <=1 row per group
-    # per partition before the shuffle); kept deliberately — the
-    # lexicographic pick must compare text, so no fixed-width
-    # packing applies, and a hash-then-join-back alternative
-    # re-emits byte-identical duplicates (the common case) and
-    # would need a second text shuffle to drop them.
+    # (min struct), ONE aggregate on doc_id — linear, no window. The
+    # aggregate reads the doc_id repartition, whose hash partitioning
+    # it needs anyway, so it adds no exchange. The struct-min buffer
+    # makes it sort-based (a per-partition sort by the 8-byte doc_id);
+    # kept deliberately — the lexicographic pick must compare text, so
+    # no fixed-width packing applies, and a hash-then-join-back
+    # alternative re-emits byte-identical duplicates (the common case)
+    # and would need a second text shuffle to drop them.
+    width = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        extracted.groupBy("doc_id")
+        extracted.repartition(width, "doc_id")
+        .groupBy("doc_id")
         .agg(F.min(F.struct("url", "warc_ts", "text", "source")).alias("_r"))
         .select("doc_id", "_r.url", "_r.warc_ts", "_r.text", "_r.source")
     )
@@ -385,6 +407,24 @@ def _check_resume(spark: SparkSession, out_path: str, params: dict) -> None:
         )
 
 
+def _keeps_caller_job_group(fn):
+    """Restore the caller's Spark job group when ``fn(spark, ...)``
+    returns or raises: run_release sets one group per stage."""
+
+    @wraps(fn)
+    def call(spark: SparkSession, *args, **kwargs):
+        sc = spark.sparkContext
+        caller = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+        try:
+            return fn(spark, *args, **kwargs)
+        finally:
+            for k, v in caller.items():
+                sc.setLocalProperty(k, v)
+
+    return call
+
+
+@_keeps_caller_job_group
 def run_release(
     spark: SparkSession,
     pages_path: str,
@@ -418,7 +458,16 @@ def run_release(
 
     The manifest records the parameters (``params``) and each stage
     checkpoint's partition count (``checkpoint_partitions``): the
-    number of tasks a later per-row stage reading it runs as."""
+    number of tasks a later per-row stage reading it runs as.
+
+    ``stage_jobs`` counts the Spark jobs each step started: the six
+    stages ``00_docs`` … ``wet`` (a stage's checkpoint write, read-back
+    and survivor count included; ``00_docs`` also counts the input
+    pages) and ``lineage`` (the partition histogram). Every step runs
+    under its own job group, ``run_release:<step>``, and the count is
+    read from ``statusTracker().getJobIdsForGroup``; the final
+    manifest write is not counted. The caller's job group is restored
+    on exit."""
     from narowi_ocr_spark.operators.shards import shard_manifest
     from narowi_ocr_spark.sources.sink import partition_histogram
     from narowi_ocr_spark.sources.wet import write_wet
@@ -446,6 +495,18 @@ def run_release(
     resumed: list[str] = []
     stage_s: dict[str, float] = {}
     partitions: dict[str, int] = {}
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # job ids each group held before this run (an earlier run in the
+    # same session used the same group ids)
+    prior_jobs: dict[str, set[int]] = {}
+
+    def group(name: str) -> None:
+        """Attribute every Spark job from here on to step ``name``."""
+        gid = JOB_GROUP.format(name)
+        prior_jobs[name] = set(tracker.getJobIdsForGroup(gid))
+        sc.setJobGroup(gid, f"release step {name}")
+
     # once a stage recomputes, every later stage recomputes too: its
     # checkpoint was derived from the replaced one
     fresh = not resume
@@ -470,6 +531,7 @@ def run_release(
         partitions[name] = df.rdd.getNumPartitions()
         return df
 
+    group("00_docs")
     counts: dict[str, int] = {"pages": pages.count()}
 
     # 1. extraction (one Arrow stage) + admission + distinct-on-id
@@ -482,6 +544,7 @@ def run_release(
 
     # 2. cleaning gates (see build_clean_ids) — the checkpoint is the
     # surviving id list (ids-only: text never rewrites after 00_docs)
+    group("01_clean_ids")
     clean_ids = stage(
         "01_clean_ids",
         lambda: build_clean_ids(docs, blocklist, apply_c4, full_gates),
@@ -490,6 +553,7 @@ def run_release(
     counts["clean"] = clean_ids.count()
 
     # 3. exact dedup (keep-min over content md5)
+    group("02_exact_ids")
     exact_ids = stage("02_exact_ids", lambda: build_exact_ids(clean))
     uniq = clean.join(exact_ids, "doc_id")
     counts["exact_unique"] = exact_ids.count()
@@ -497,6 +561,7 @@ def run_release(
     # 4. near-dedup: LSH candidates → exact-Jaccard verify → CC reps
     # (see build_near_ids; materialize=True pins the candidate pair
     # list once for the verify → CC → count chain)
+    group("03_near_ids")
     near_ids = stage("03_near_ids", lambda: build_near_ids(uniq))
     released = build_released_text(
         docs.join(near_ids, "doc_id"), pii_scrub=full_gates
@@ -504,7 +569,11 @@ def run_release(
     counts["near_unique"] = near_ids.count()
 
     # 5. splits + shards + manifests — terminal writes are their own
-    # checkpoints: a committed shards dir is loaded, not rewritten
+    # checkpoints: a committed shards dir is loaded, not rewritten. A
+    # computed assignment is persisted like ``released``: the count, the
+    # shard write, shard_manifest and WET all read that one copy
+    # instead of each re-running the split and shard window.
+    group("shards")
     if not fresh and _committed(spark, f"{out_path}/shards"):
         resumed.append("shards")
         assigned = spark.read.parquet(f"{out_path}/shards")
@@ -512,7 +581,7 @@ def run_release(
     else:
         fresh = True
         ts = time.time()
-        assigned = build_train_shards(released)
+        assigned = build_train_shards(released).persist()
         counts["train"] = assigned.count()
         # an empty partitionBy write leaves no parquet file, so nothing
         # a resume could read the schema from: an empty train split is
@@ -527,6 +596,7 @@ def run_release(
         stage_s["shards"] = round(time.time() - ts, 2)
 
     # 6. WET segments for the released train split
+    group("wet")
     if not fresh and _committed(spark, f"{out_path}/wet"):
         resumed.append("wet")
     else:
@@ -538,6 +608,7 @@ def run_release(
     # physical partition + skew ratio (O(partitions) collect — the
     # audit row a 1000-executor run is debugged from). An empty
     # release gives an empty histogram.
+    group("lineage")
     hist = [
         r.asDict()
         for r in partition_histogram(
@@ -545,6 +616,13 @@ def run_release(
         ).collect()
     ]
     sizes = [h["rows"] for h in hist]
+    # the status store learns of jobs from the listener bus: drain it
+    # so every job started above is in the counts
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    stage_jobs = {
+        name: len(set(tracker.getJobIdsForGroup(JOB_GROUP.format(name))) - ids)
+        for name, ids in prior_jobs.items()
+    }
     manifest = {
         "ts": time.time(),
         "wall_s": round(time.time() - t0, 2),
@@ -553,6 +631,7 @@ def run_release(
         "resumed_stages": resumed,
         "params": params,
         "checkpoint_partitions": partitions,
+        "stage_jobs": stage_jobs,
         "survival_ppm": {
             k: int(v * 1_000_000 / counts["pages"]) if counts["pages"] else 0
             for k, v in counts.items()
@@ -572,6 +651,7 @@ def run_release(
     spark.sparkContext.parallelize([json.dumps(manifest)], 1).saveAsTextFile(
         f"{out_path}/release_manifest"
     )
+    assigned.unpersist()
     released.unpersist()
     return manifest
 
