@@ -21,14 +21,22 @@ later and the fixpoint, the star fallback and the output are unchanged.
 The same aggregate yields the endpoint set, so no separate distinct
 pass runs either.
 
+Edges read once: the symmetric edge list is built in one pass over
+``edges`` (each edge explodes into both directions, then one
+distinct), not as a union of two projections. An un-materialized edge
+frame (the Jaccard verify of the release job) is therefore evaluated
+once, not once per direction.
+
 Scale notes (10⁹+ nodes):
   - labels are localCheckpoint'ed each round: cuts the O(rounds)-deep
     lineage (otherwise every round re-executes all prior rounds) and
     materializes the (id, comp) pairs, which are the only shuffled
     state;
   - convergence is detected from sum(comp): labels only decrease under
-    min-propagation, so an unchanged sum ⇔ a fixpoint — one cheap
-    aggregate per round instead of an anti-join of old vs new;
+    min-propagation, so an unchanged sum ⇔ a fixpoint. The sum is an
+    ``Observation`` on the round's eager localCheckpoint, so the probe
+    rides on the job that materializes the labels: no extra job per
+    round, and no anti-join of old vs new;
   - for graphs with giant-diameter chains (adversarial, not near-dup
     shaped) switch to the large-star/small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -38,7 +46,7 @@ Scale notes (10⁹+ nodes):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -61,12 +69,15 @@ def connected_components(
     adversarial ones. Pass ``fallback_star=False`` to raise instead
     (useful when a blown round budget signals a data bug upstream)."""
     sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionByName(
-            edges.select(
-                F.col(dst_col).alias("src"), F.col(src_col).alias("dst")
-            )
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+                    F.struct(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")),
+                )
+            ).alias("_e")
         )
+        .select("_e.src", "_e.dst")
         .distinct()
         # materialize ONCE: the edge list is joined every round, and an
         # expensive upstream (e.g. the full MinHash/LSH candidate
@@ -75,11 +86,10 @@ def connected_components(
     )
     # the seeded round 1 (module docstring): one aggregate over the
     # symmetric edges; its keys are the endpoint set
-    labels = (
+    labels, prev_sum = _checkpoint_with_sum(
         sym.groupBy(F.col("src").alias("id"))
         .agg(F.min("dst").alias("_m"))
         .select("id", F.least("id", "_m").alias("comp"))
-        .localCheckpoint(eager=True)
     )
     endpoints = labels.select("id")
     # Isolated vertices (in ``nodes`` but on no edge) can never receive
@@ -101,27 +111,15 @@ def connected_components(
             isolated.select("id", F.col("id").alias("comp"))
         )
 
-    # fixpoint probe: labels only ever decrease, so an unchanged sum ⇔
-    # no label moved. Sum in decimal(38,0) — ids may be hash-sized
-    # (|id| up to 2⁶³), and an int64 sum of them overflows (ANSI mode
-    # throws) after a handful of rows; decimal(38) is exact to 10³⁸,
-    # comfortably above 10¹² nodes × 2⁶³.
-    def _label_sum(lb):
-        return lb.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).first()[0]
-
-    prev_sum = _label_sum(labels)
-
     for _ in range(max_iters):
         msgs = sym.join(labels, sym.dst == labels.id).select(
             F.col("src").alias("id"), "comp"
         )
-        labels = (
+        labels, cur_sum = _checkpoint_with_sum(
             labels.unionByName(msgs)
             .groupBy("id")
             .agg(F.min("comp").alias("comp"))
         )
-        labels = labels.localCheckpoint(eager=True)
-        cur_sum = _label_sum(labels)
         if cur_sum == prev_sum:  # labels only decrease → fixpoint
             return _with_isolated(labels)
         prev_sum = cur_sum
@@ -133,6 +131,21 @@ def connected_components(
         f"connected_components did not converge in {max_iters} rounds — "
         "graph diameter too large; use large-star/small-star"
     )
+
+
+def _checkpoint_with_sum(labels: DataFrame) -> tuple[DataFrame, object]:
+    """(eagerly localCheckpointed labels, sum of comp): the fixpoint
+    probe. Labels only ever decrease, so an unchanged sum ⇔ no label
+    moved. The sum is observed on the checkpoint's own job, so it costs
+    no job of its own. Sum in decimal(38,0) — ids may be hash-sized
+    (|id| up to 2⁶³), and an int64 sum of them overflows (ANSI mode
+    throws) after a handful of rows; decimal(38) is exact to 10³⁸,
+    comfortably above 10¹² nodes × 2⁶³."""
+    probe = Observation()
+    done = labels.observe(
+        probe, F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
+    ).localCheckpoint(eager=True)
+    return done, probe.get["s"]
 
 
 def component_representatives(labels: DataFrame) -> DataFrame:

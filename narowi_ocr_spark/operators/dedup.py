@@ -317,11 +317,26 @@ def _hash_sets(
     df: DataFrame, ids: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """(id, hs): ``shingle_hashes`` of each document of ``df`` whose id
-    is in ``ids`` (one column ``id``), built once per document. The
-    left-semi join drops the other documents before any shingling."""
+    is in ``ids`` (one column ``id``), built once per document and at
+    the session's shuffle width.
+
+    The documents are read through ``repartition(<spark.sql.shuffle.
+    partitions>, id)``, and the shingling runs on its output. The width
+    is explicit because AQE sizes partitions by bytes: it folded the
+    document shuffle of a 1350-page release into one partition, so every
+    candidate's shingle md5 ran in one task, while the cost is per
+    document, not per byte. A ``REPARTITION_BY_NUM`` exchange is never
+    coalesced. The filter is an inner join against the distinct ids,
+    not a left-semi join: the optimizer pushes a semi join below the
+    repartition, back onto the id exchange AQE coalesces. The ids are
+    the join's hash-built side (``shuffle_hash`` hint), so AQE cannot
+    broadcast the documents instead and move the shingling onto the
+    coalesced id side."""
+    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-        .join(ids, "id", "left_semi")
+        .repartition(width, "id")
+        .join(ids.distinct().hint("shuffle_hash"), "id")
         .select("id", shingle_hashes("_t").alias("hs"))
     )
 
@@ -330,14 +345,14 @@ def _pair_sets(
     df: DataFrame, pairs: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """(id_a, id_b, sh_a, sh_b): the candidate pairs with both sides'
-    shingle-hash sets, each document in a pair shingled once. Every
-    pair becomes one row per side, the rows join the once-built sets
-    (``_hash_sets``) on the document id, and one hash aggregate puts
-    the two sides of each pair back together. (Joining the sets twice,
-    once per side, would build them twice: the optimizer drops a
-    repartition above the semi join's own id partitioning, so there is
-    no exchange for the two consumers to share.) A pair whose document
-    is missing from ``df`` is dropped, as an inner join would."""
+    shingle-hash sets, each document in a pair shingled once, in as many
+    tasks as the session's shuffle width (``_hash_sets``). Every pair
+    becomes one row per side, the rows join the once-built sets on the
+    document id, and one hash aggregate puts the two sides of each pair
+    back together. (Joining the sets twice, once per side, would build
+    them twice: nothing makes the two consumers share one exchange.) A
+    pair whose document is missing from ``df`` is dropped, as an inner
+    join would."""
     sides = pairs.select(
         "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
     )
@@ -797,7 +812,8 @@ def incremental_near_dup(
     or index×index — re-crawls only need novelty vs the corpus, which
     is what keeps this linear in the batch, not the corpus);
     verification builds shingle-hash sets only for documents in a
-    candidate pair, once each (left-semi join on the candidate ids), so
+    candidate pair, once each (``_hash_sets``: a join on the distinct
+    candidate ids, at the session's shuffle width), so
     the INDEX side (the whole corpus) is never shingled wholesale on a
     refresh.
 

@@ -80,14 +80,24 @@ def export_csv(results: DataFrame, path: str, mode: str = "overwrite") -> None:
     flat.write.option("header", True).mode(mode).csv(path)
 
 
+def _partition_rows(df: DataFrame) -> DataFrame:
+    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+        F.count("*").alias("rows")
+    )
+
+
 def partition_histogram(df: DataFrame) -> DataFrame:
     """Rows per physical partition — the skew evidence the metrics
     manifest records (BASELINE.md protocol step 3)."""
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows"))
-        .orderBy("partition_id")
-    )
+    return _partition_rows(df).orderBy("partition_id")
+
+
+def collect_partition_histogram(df: DataFrame) -> list[dict]:
+    """``partition_histogram`` as a list of dicts. Its rows (one per
+    partition) are sorted on the driver, so the collect is one
+    aggregate and no range-partitioned sort."""
+    rows = _partition_rows(df).collect()
+    return sorted((r.asDict() for r in rows), key=lambda h: h["partition_id"])
 
 
 def write_manifest(df: DataFrame, manifest_dir: str, run_info: dict) -> dict:
@@ -95,7 +105,7 @@ def write_manifest(df: DataFrame, manifest_dir: str, run_info: dict) -> dict:
     is the snapshot's companion metrics table; locally a JSON file. The
     histogram collect is O(partitions), never O(rows)."""
     os.makedirs(manifest_dir, exist_ok=True)
-    hist = [r.asDict() for r in partition_histogram(df).collect()]
+    hist = collect_partition_histogram(df)
     rows = sum(h["rows"] for h in hist)
     manifest = {
         **run_info,

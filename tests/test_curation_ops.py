@@ -170,6 +170,30 @@ def test_connected_components_seeded_round_one(spark):
     assert got == {i: find(i) for i in ids}
 
 
+
+def test_connected_components_evaluates_edges_once(spark):
+    """The symmetric edge list is built in one pass over ``edges``: an
+    un-materialized edge frame (the release job's Jaccard verify) is
+    evaluated once, not once per direction. An accumulator counts the
+    rows the edge frame produces."""
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+    rows = [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (20, 21), (21, 20)]
+
+    def counted(r):
+        seen.add(1)
+        return r
+
+    edges = spark.createDataFrame(
+        sc.parallelize(rows, 2).map(counted), "id_a long, id_b long"
+    )
+    nodes = spark.createDataFrame(
+        [(i,) for i in (1, 2, 3, 10, 11, 12, 20, 21, 30)], "id long"
+    )
+    got = {r["id"]: r["comp"] for r in connected_components(edges, nodes).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 30: 30}
+    assert seen.value == len(rows)
+
 def test_pagerank_fixed_symmetry_and_hubs(spark):
     from narowi_ocr_spark.operators.linkrank import (
         RANK_SCALE,

@@ -598,10 +598,10 @@ def test_minhash_signature_plan_hashes_each_shingle_once(spark):
 
 def test_jaccard_verify_shingles_each_candidate_once(spark):
     """jaccard_pairs builds each candidate document's shingle-hash set
-    once (left-semi join on the pair ids) and puts the pair's two sides
-    together with one hash aggregate, instead of shingling both sides
-    per pair: the executed plan has one shingle md5 and no
-    SortAggregate."""
+    once (a join of the documents with the distinct pair ids) and puts
+    the pair's two sides together with one hash aggregate, instead of
+    shingling both sides per pair: the executed plan has one shingle md5
+    and no SortAggregate."""
     from narowi_ocr_spark.operators.dedup import jaccard_pairs
 
     df = spark.createDataFrame(
@@ -720,3 +720,50 @@ def test_build_docs_repartitions_once_at_session_width(spark, tmp_path):
         assert f", {w}), REPARTITION_BY_NUM" in final, final
         assert "AQEShuffleRead" not in final and "coalesced" not in final, final
         assert len(glob.glob(str(tmp_path / w / "part-*.parquet"))) == int(w)
+
+
+def _subtree(plan: str, marker: str) -> str:
+    """The lines of the first plan node containing ``marker`` and of
+    every node below it (deeper indentation)."""
+    lines = plan.splitlines()
+    at = next(i for i, ln in enumerate(lines) if marker in ln)
+    depth = len(lines[at]) - len(lines[at].lstrip(" :+-"))
+    out = [lines[at]]
+    for ln in lines[at + 1:]:
+        if len(ln) - len(ln.lstrip(" :+-")) <= depth:
+            break
+        out.append(ln)
+    return "\n".join(out)
+
+
+def test_jaccard_verify_hashes_at_session_width(spark):
+    """The verify's hash-set build reads the documents through the
+    ``REPARTITION_BY_NUM`` exchange at the session's shuffle width, and
+    no coalesced shuffle read feeds it: every candidate document is
+    shingled in one of ``width`` tasks, not in the one partition AQE
+    folds a small shuffle into (the case at widths 4 and 3)."""
+    from narowi_ocr_spark.operators.dedup import jaccard_pairs
+
+    df = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta w{i % 3} v{i % 5}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 3) for i in range(0, 30, 2)], "id_a long, id_b long"
+    )
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    for w in (width, "3"):
+        spark.conf.set(key, w)
+        try:
+            out = jaccard_pairs(df, pairs, threshold=0.0)
+            assert out.count() == 15
+            out.collect()  # the executed, final adaptive plan
+        finally:
+            spark.conf.set(key, width)
+        final = _physical_plan(out).split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in final, final
+        assert final.count("md5(") == 1, final
+        build = _subtree(final, "md5(")
+        assert f", {w}), REPARTITION_BY_NUM" in build, build
+        assert "AQEShuffleRead" not in build and "coalesced" not in build, build

@@ -343,7 +343,10 @@ def test_release_job_width_invariant_and_counts_stage_jobs(spark, tmp_path):
     every stage's ids, the shard assignment, the shard manifest and the
     WET records are identical. The manifest counts the Spark jobs of
     each step (per run, though the group ids repeat across runs), and
-    the caller's job group is back in place afterwards."""
+    the caller's job group is back in place afterwards. The survivor
+    counts observed on the checkpoint writes (fresh run) and counted
+    from the loaded checkpoints (resumed run) equal the rows of each
+    checkpoint, and the clean stage's write is its only job."""
     from run_release_job import run_release
 
     src = str(tmp_path / "pages")
@@ -400,3 +403,17 @@ def test_release_job_width_invariant_and_counts_stage_jobs(spark, tmp_path):
     assert len(again["resumed_stages"]) == 6
     assert again["stage_jobs"]["wet"] == 0
     assert sum(again["stage_jobs"].values()) < sum(mw["stage_jobs"].values())
+
+    written = {
+        "extracted": "checkpoints/00_docs",
+        "clean": "checkpoints/01_clean_ids",
+        "exact_unique": "checkpoints/02_exact_ids",
+        "near_unique": "checkpoints/03_near_ids",
+        "train": "shards",
+    }
+    n_pages = spark.read.parquet(src).count()
+    for m in (mw, again):
+        assert m["stages"]["pages"] == n_pages
+        for k, d in written.items():
+            assert m["stages"][k] == spark.read.parquet(f"{out}/{d}").count(), k
+    assert m1["stage_jobs"]["01_clean_ids"] == mw["stage_jobs"]["01_clean_ids"] == 1

@@ -36,11 +36,11 @@ LADDER = (2, 4, 8, 16, 32)
 N, FOUR_N = 2, 8
 
 GEN = r"""
-import sys
+import os, sys
 sys.path.insert(0, {repo!r})
 from narowi_ocr_spark.config import get_spark
 from narowi_ocr_spark.sources.pages import synth_pages
-spark = get_spark(app_name="gen", master="local[32]", shuffle_partitions=32)
+spark = get_spark(app_name="gen", master=f"local[{{len(os.sched_getaffinity(0))}}]", shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
 synth_pages(spark, {n}, partitions=64).write.mode("overwrite").parquet({path!r})
 spark.stop()
@@ -212,12 +212,12 @@ OPS_LADDER = (2, 8, 32)
 RELEASE_PAGES = 40000
 
 RELEASE_GEN = r"""
-import sys
+import os, sys
 sys.path.insert(0, {repo!r})
 from narowi_ocr_spark.config import get_spark
 from narowi_ocr_spark.sources.pages import synth_pages
 from pyspark.sql import functions as F
-spark = get_spark(app_name="relgen", master="local[32]",
+spark = get_spark(app_name="relgen", master=f"local[{{len(os.sched_getaffinity(0))}}]",
                   shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
 # vocab_scale=64: realistic inter-document diversity (the base 31-word
@@ -226,12 +226,12 @@ spark.sparkContext.setLogLevel("ERROR")
 base = synth_pages(spark, {n}, partitions=64, vocab_scale=64)
 # plant dups like a real crawl: 5% exact mirrors (same html, new url)
 # + 5% near-dups (one extra paragraph -> shingle Jaccard ~0.95)
-mirror = base.where(F.xxhash64("url") % 20 == 0).select(
+mirror = base.where(F.pmod(F.xxhash64("url"), F.lit(20)) == 0).select(
     F.concat(F.lit("https://mirror.example/x/"), F.col("url")).alias("url"),
     "warc_ts", "html", "text", "lang")
 extra = ("this mirror edition appends one full extra paragraph of "
          "fifteen plain words to the body content")
-near = base.where(F.xxhash64("url") % 20 == 1).select(
+near = base.where(F.pmod(F.xxhash64("url"), F.lit(20)) == 1).select(
     F.concat(F.lit("https://near.example/x/"), F.col("url")).alias("url"),
     "warc_ts",
     F.encode(F.regexp_replace(F.decode("html", "utf-8"), "<footer>",
@@ -278,21 +278,21 @@ spark.stop()
 # gate), and PII-bearing near-copies (their text carries an email the
 # delivery scrub must redact).
 RELEASE_GEN_FULL = r"""
-import sys
+import os, sys
 sys.path.insert(0, {repo!r})
 from narowi_ocr_spark.config import get_spark
 from narowi_ocr_spark.sources.pages import synth_pages
 from pyspark.sql import functions as F
-spark = get_spark(app_name="relgenfull", master="local[32]",
+spark = get_spark(app_name="relgenfull", master=f"local[{{len(os.sched_getaffinity(0))}}]",
                   shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
 base = synth_pages(spark, {n}, partitions=64, vocab_scale=64, prose=True)
-mirror = base.where(F.xxhash64("url") % 20 == 0).select(
+mirror = base.where(F.pmod(F.xxhash64("url"), F.lit(20)) == 0).select(
     F.concat(F.lit("https://mirror.example/x/"), F.col("url")).alias("url"),
     "warc_ts", "html", "text", "lang")
 extra = ("this mirror edition appends one full extra paragraph of "
          "fifteen plain words to the body content.")
-near = base.where(F.xxhash64("url") % 20 == 1).select(
+near = base.where(F.pmod(F.xxhash64("url"), F.lit(20)) == 1).select(
     F.concat(F.lit("https://near.example/x/"), F.col("url")).alias("url"),
     "warc_ts",
     F.encode(F.regexp_replace(F.decode("html", "utf-8"), "<footer>",
@@ -303,13 +303,13 @@ rep_body = ("<html><body>"
             + "".join("<p>" + ("buy cheap deals now " * 12).strip() + ".</p>"
                       for _ in range(6))
             + "</body></html>")
-rep = base.where(F.xxhash64("url") % 40 == 2).select(
+rep = base.where(F.pmod(F.xxhash64("url"), F.lit(40)) == 2).select(
     F.concat(F.lit("https://rep.example/x/"), F.col("url")).alias("url"),
     "warc_ts", F.encode(F.lit(rep_body), "utf-8").alias("html"),
     F.lit("x").alias("text"), "lang")
 pii_line = ("contact the team of and with editors at "
             "alice.smith@mail.example for details.")
-pii = base.where(F.xxhash64("url") % 40 == 3).select(
+pii = base.where(F.pmod(F.xxhash64("url"), F.lit(40)) == 3).select(
     F.concat(F.lit("https://pii.example/x/"), F.col("url")).alias("url"),
     "warc_ts",
     F.encode(F.regexp_replace(F.decode("html", "utf-8"), "<footer>",
@@ -337,14 +337,14 @@ spark.stop()
 HOTGRAM_DOCS = 400_000
 
 HOTGRAM_CHILD = r"""
-import json, sys, time
+import json, os, sys, time
 sys.path.insert(0, {repo!r})
 from narowi_ocr_spark.config import get_spark
 from narowi_ocr_spark.operators.corpus import dup_span_stats
 from pyspark.sql import functions as F
 
 n_docs = int(sys.argv[1]); hot_pct = int(sys.argv[2])
-spark = get_spark(app_name="hotgram", master="local[32]",
+spark = get_spark(app_name="hotgram", master=f"local[{{len(os.sched_getaffinity(0))}}]",
                   shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
 

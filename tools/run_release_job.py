@@ -52,7 +52,7 @@ import sys
 import time
 from functools import reduce, wraps
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # `python tools/run_release_job.py` puts tools/ (not the repo root) on
@@ -238,8 +238,8 @@ def build_near_ids(uniq: DataFrame, materialize: bool = True) -> DataFrame:
 
     ``materialize=False`` (plan audit only) skips the eager
     localCheckpoint of the candidate pair list so the full chain stays
-    lazy; the real job materializes it because the verify → CC → count
-    chain walks the (cheap, sparse) pair list several times."""
+    lazy; the real job materializes it because the verify walks the
+    (cheap, sparse) pair list more than once."""
     from narowi_ocr_spark.operators.components import (
         component_representatives,
         connected_components,
@@ -460,16 +460,25 @@ def run_release(
     checkpoint's partition count (``checkpoint_partitions``): the
     number of tasks a later per-row stage reading it runs as.
 
+    The survivor counts (``stages``) are observed, not counted: each
+    computed stage's row count is a ``DataFrame.observe`` metric of its
+    checkpoint write, and the input pages are observed on the 00_docs
+    write. A checkpoint is read back with the written frame's schema, so
+    no footer-inference job runs. A stage loaded on resume has no write
+    to observe, so its checkpoint (and, for 00_docs, the input) is
+    counted.
+
     ``stage_jobs`` counts the Spark jobs each step started: the six
-    stages ``00_docs`` … ``wet`` (a stage's checkpoint write, read-back
-    and survivor count included; ``00_docs`` also counts the input
-    pages) and ``lineage`` (the partition histogram). Every step runs
-    under its own job group, ``run_release:<step>``, and the count is
-    read from ``statusTracker().getJobIdsForGroup``; the final
-    manifest write is not counted. The caller's job group is restored
-    on exit."""
+    stages ``00_docs`` … ``wet`` (a computed stage's checkpoint write
+    and the work feeding it, such as the near-dedup candidate and
+    connected-components checkpoints; a resumed stage's count) and
+    ``lineage`` (the partition histogram of the delivered shards). Every
+    step runs under its own job group, ``run_release:<step>``, and the
+    count is read from ``statusTracker().getJobIdsForGroup``. The
+    manifest itself is written from the driver, not by a job. The
+    caller's job group is restored on exit."""
     from narowi_ocr_spark.operators.shards import shard_manifest
-    from narowi_ocr_spark.sources.sink import partition_histogram
+    from narowi_ocr_spark.sources.sink import collect_partition_histogram
     from narowi_ocr_spark.sources.wet import write_wet
 
     t0 = time.time()
@@ -511,62 +520,80 @@ def run_release(
     # checkpoint was derived from the replaced one
     fresh = not resume
 
-    def stage(name: str, compute: "callable") -> DataFrame:
+    def stage(name: str, compute: "callable") -> tuple[DataFrame, int]:
         """Load the stage from its committed checkpoint (resume) or
         compute it, write the checkpoint, and read it back — downstream
         stages always consume the durable parquet, so lineage never
         chains through a lost executor's cache and a restarted driver
-        sees identical bytes. Per-stage wall-clock lands in the manifest
-        (`stage_seconds`) — the number capacity planning reads first."""
+        sees identical bytes. Returns the checkpoint and its row count.
+        A computed stage's count is observed on its write and it is read
+        back with the written schema, so no job runs after the write; a
+        loaded checkpoint has no write to observe and is counted.
+        Per-stage wall-clock lands in the manifest (`stage_seconds`) —
+        the number capacity planning reads first."""
         nonlocal fresh
         path = f"{out_path}/checkpoints/{name}"
         if not fresh and _committed(spark, path):
             resumed.append(name)
+            df = spark.read.parquet(path)
+            rows = df.count()
         else:
             fresh = True
             ts = time.time()
-            compute().write.mode("overwrite").parquet(path)
+            out = compute()
+            seen = Observation()
+            out.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(path)
+            rows = seen.get["rows"]
+            df = spark.read.schema(out.schema).parquet(path)
             stage_s[name] = round(time.time() - ts, 2)
-        df = spark.read.parquet(path)
         partitions[name] = df.rdd.getNumPartitions()
-        return df
-
-    group("00_docs")
-    counts: dict[str, int] = {"pages": pages.count()}
+        return df, rows
 
     # 1. extraction (one Arrow stage) + admission + distinct-on-id
     # (see build_docs). The downstream chain re-reads the survivor set
     # many times (gates, dedup, splits); it is served from the
     # checkpoint parquet — the disk-backed equivalent of the old
-    # .persist(), and it survives a driver restart.
-    docs = stage("00_docs", lambda: build_docs(pages))
-    counts["extracted"] = docs.count()
+    # .persist(), and it survives a driver restart. The input pages are
+    # counted on the 00_docs write; a loaded 00_docs counts them alone.
+    group("00_docs")
+    read = Observation()
+    docs, extracted = stage(
+        "00_docs",
+        lambda: build_docs(pages.observe(read, F.count(F.lit(1)).alias("rows"))),
+    )
+    counts: dict[str, int] = {
+        "pages": pages.count() if "00_docs" in resumed else read.get["rows"],
+        "extracted": extracted,
+    }
 
     # 2. cleaning gates (see build_clean_ids) — the checkpoint is the
     # surviving id list (ids-only: text never rewrites after 00_docs)
     group("01_clean_ids")
-    clean_ids = stage(
+    clean_ids, counts["clean"] = stage(
         "01_clean_ids",
         lambda: build_clean_ids(docs, blocklist, apply_c4, full_gates),
     )
     clean = docs.join(clean_ids, "doc_id")
-    counts["clean"] = clean_ids.count()
 
     # 3. exact dedup (keep-min over content md5)
     group("02_exact_ids")
-    exact_ids = stage("02_exact_ids", lambda: build_exact_ids(clean))
+    exact_ids, counts["exact_unique"] = stage(
+        "02_exact_ids", lambda: build_exact_ids(clean)
+    )
     uniq = clean.join(exact_ids, "doc_id")
-    counts["exact_unique"] = exact_ids.count()
 
     # 4. near-dedup: LSH candidates → exact-Jaccard verify → CC reps
     # (see build_near_ids; materialize=True pins the candidate pair
-    # list once for the verify → CC → count chain)
+    # list once for the verify → CC chain)
     group("03_near_ids")
-    near_ids = stage("03_near_ids", lambda: build_near_ids(uniq))
+    near_ids, counts["near_unique"] = stage(
+        "03_near_ids", lambda: build_near_ids(uniq)
+    )
     released = build_released_text(
         docs.join(near_ids, "doc_id"), pii_scrub=full_gates
     ).persist()
-    counts["near_unique"] = near_ids.count()
 
     # 5. splits + shards + manifests — terminal writes are their own
     # checkpoints: a committed shards dir is loaded, not rewritten. A
@@ -609,12 +636,9 @@ def run_release(
     # audit row a 1000-executor run is debugged from). An empty
     # release gives an empty histogram.
     group("lineage")
-    hist = [
-        r.asDict()
-        for r in partition_histogram(
-            spark.read.parquet(f"{out_path}/shards")
-        ).collect()
-    ]
+    hist = collect_partition_histogram(
+        spark.read.schema(assigned.schema).parquet(f"{out_path}/shards")
+    )
     sizes = [h["rows"] for h in hist]
     # the status store learns of jobs from the listener bus: drain it
     # so every job started above is in the counts
@@ -646,11 +670,13 @@ def run_release(
             "partition_histogram": hist,
         },
     }
-    _rmdir(spark, f"{out_path}/release_manifest")  # saveAsTextFile cannot
-    # overwrite; reruns into the same release dir must not fail here
-    spark.sparkContext.parallelize([json.dumps(manifest)], 1).saveAsTextFile(
-        f"{out_path}/release_manifest"
+    # the layout saveAsTextFile would leave (one part file + _SUCCESS),
+    # written from the driver; a rerun replaces the old manifest
+    _rmdir(spark, f"{out_path}/release_manifest")
+    _write_text(
+        spark, f"{out_path}/release_manifest/part-00000", json.dumps(manifest) + "\n"
     )
+    _write_text(spark, f"{out_path}/release_manifest/_SUCCESS", "")
     assigned.unpersist()
     released.unpersist()
     return manifest
