@@ -32,7 +32,7 @@ from narowi_ocr_spark.functions.native import (
     round4,
     validate_temperature_format,
 )
-from narowi_ocr_spark.functions.numbers import extract_numbers
+from narowi_ocr_spark.functions.numbers import extract_numbers, extract_weight_spans
 from narowi_ocr_spark.functions.patterns import NUMBER_PATTERNS
 from narowi_ocr_spark.functions.readings import extract_readings
 from narowi_ocr_spark.functions.textstats import STOPWORDS, fingerprint
@@ -43,7 +43,6 @@ from narowi_ocr_spark.operators.dedup import (
     jaccard_pairs,
     lsh_candidate_pairs,
     simhash_near_pairs,
-    with_simhash,
 )
 from narowi_ocr_spark.operators.multimodal import (
     attach_binary,
@@ -713,30 +712,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["readings_spans"] = readings_spans
 
-    def readings_spans_fast(spark, sf_dir):
-        """K6 native fast path (functions/fastpath.py): the same spans as
-        readings_spans with zero Python — Java regex + HOF dedup fold in
-        one narrow projection. Shares the reference-derived golden
-        oracle, so a hash match proves fast == byte-identical on these
-        inputs (broader equivalence: tests/test_fastpath.py fuzz)."""
-        from narowi_ocr_spark.functions.fastpath import extract_readings_fast
-
-        docs = _docs(spark, sf_dir)
-        aug = docs.select("doc_id", _aug_expr().alias("aug"))
-        r = aug.select("doc_id", extract_readings_fast("aug").alias("readings"))
-        return r.select(
-            "doc_id", F.posexplode("readings").alias("span_idx", "r")
-        ).select(
-            "doc_id",
-            "span_idx",
-            F.col("r.type").alias("type"),
-            F.col("r.value").alias("value"),
-            F.col("r.unit").alias("unit"),
-            F.col("r.is_valid").alias("is_valid"),
-        )
-
-    q["readings_spans_fast"] = readings_spans_fast
-
     def batch_status(spark, sf_dir):
         return with_status(_readings_df(spark, sf_dir)).select(
             "doc_id", "n_readings", "n_valid", "status", "error_message"
@@ -813,33 +788,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["number_spans"] = number_spans
 
-    def number_spans_fast(spark, sf_dir):
-        """K2 native fast path — same spans, all-JVM (shares the
-        independent DuckDB-regex oracle with number_spans)."""
-        from narowi_ocr_spark.functions.fastpath import extract_numbers_fast
-
-        docs = _docs(spark, sf_dir)
-        aug = docs.select("doc_id", _aug_expr().alias("aug"))
-        n = aug.select(
-            "doc_id",
-            F.explode(extract_numbers_fast("aug", F.lit(NUM_CONFIDENCE))).alias("s"),
-        )
-        return n.select(
-            "doc_id",
-            F.col("s.value").alias("value"),
-            F.col("s.unit").alias("unit"),
-            F.col("s.confidence").alias("confidence"),
-            F.col("s.raw_text").alias("raw_text"),
-        )
-
-    q["number_spans_fast"] = number_spans_fast
-
     def weight_spans(spark, sf_dir):
         """K9 intended semantics (the reference's extract_weight crashes
         on every match — group(2) of 1-group patterns; this is the
         documented non-contract native variant, COVERAGE.md K9)."""
-        from narowi_ocr_spark.functions.fastpath import extract_weight_spans
-
         docs = _docs(spark, sf_dir)
         aug = docs.select("doc_id", _aug_expr().alias("aug"))
         w = aug.select(
@@ -2355,8 +2307,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["dedup_eval"] = dedup_eval_q
 
     def simhash_q(spark, sf_dir):
-        """Arrow-kernel signature path (value-identical JVM twin:
-        with_simhash; differential-asserted in tests)."""
+        """The Arrow signature kernel (value-identical to the simhash()
+        fold; differential-asserted in tests)."""
         from narowi_ocr_spark.operators.dedup import with_simhash_arrow
 
         docs = _docs(spark, sf_dir)
@@ -6207,10 +6159,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "incremental_dedup", "incremental_dedup_bloom",
         "jaccard_near_dups", "lang_id", "lang_id_v2", "lsh_pairs",
         "media_features", "media_resized", "minhash_bands",
-        "multimodal_meta", "number_spans", "number_spans_fast",
-        "number_validation", "pii_scrub", "quality_deciles",
+        "multimodal_meta", "number_spans", "number_validation",
+        "pii_scrub", "quality_deciles",
         "quality_scores", "reading_type_counts", "readings_flat",
-        "readings_spans", "readings_spans_fast", "repetition_stats",
+        "readings_spans", "repetition_stats",
         "revenue_by_nation", "rolling_fingerprints", "script_mix",
         "segment_top_spenders", "sessions_stateful", "simhash",
         "simhash_pairs", "stratified_sample", "stream_extract",
@@ -7518,10 +7470,6 @@ def oracle_sql() -> dict[str, str]:
         FROM documents d
         JOIN golden g ON CAST(d.doc_id % {K_SNIPPETS} AS INT) = g.idx
     """
-    # The fast path must reproduce the byte-identical kernel's output on
-    # these inputs exactly — same reference-derived golden oracle.
-    o["readings_spans_fast"] = o["readings_spans"]
-
     o["batch_status"] = f"""
         WITH {_golden_cte()}, {_status_cte()}
         SELECT doc_id, n_readings, n_valid,
@@ -7593,7 +7541,6 @@ def oracle_sql() -> dict[str, str]:
         f"WITH aug_docs AS (SELECT doc_id, {_aug_sql()} AS aug FROM documents)\n"
         + "\nUNION ALL\n".join(branches)
     )
-    o["number_spans_fast"] = o["number_spans"]
 
     # K4: per-unit range validation over the K2 spans; unknown units
     # validate true (reference number_extractor.py:167-170)
@@ -7612,7 +7559,7 @@ def oracle_sql() -> dict[str, str]:
 
     # K9 intended-semantics weight spans: independent DuckDB regex
     # re-execution with the first-occurrence raw_text dedup (pattern
-    # order → match order), mirroring fastpath.extract_weight_spans.
+    # order → match order), mirroring numbers.extract_weight_spans.
     from narowi_ocr_spark.functions.patterns import READING_PATTERNS
 
     w_branches = []

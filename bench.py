@@ -161,7 +161,7 @@ def main() -> None:
     # that builds `aug` is NOT what the kernel benches should measure,
     # and interpreted (HOF-bearing) consumers would re-evaluate it per
     # reference (no CSE outside codegen) — measured 3.6× inflation on
-    # the native fast path.
+    # an all-JVM span kernel.
     # cache key includes a digest of the augmentation recipe, so editing
     # the snippet set / aug expression invalidates the materialization
     # instead of silently benchmarking stale text
@@ -180,20 +180,6 @@ def main() -> None:
         lambda: materialize(
             aug.select("doc_id", F.explode(extract_readings("aug")).alias("r"))
         ),
-    )
-    from narowi_ocr_spark.functions.fastpath import extract_readings_fast
-
-    # "jvm" = the Python-free pure-Catalyst variant (operational choice:
-    # no Arrow workers to provision). It is NOT the fast one on this box
-    # (~4.8x slower than the Arrow kernel above); benched for the
-    # plan-robustness story, renamed from "readings_kernel_fast" in r4 so
-    # the row doesn't read as a perf claim (VERDICT r3 nit 3).
-    bench(
-        "readings_kernel_jvm",
-        lambda: materialize(
-            aug.select("doc_id", F.explode(extract_readings_fast("aug")).alias("r"))
-        ),
-        extra_set=True,
     )
     bench(
         "text_quality",

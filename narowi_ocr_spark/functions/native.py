@@ -1,18 +1,13 @@
-"""Native (whole-stage-codegen) column functions: K7 range validation and
-K8 temperature-format validation. No Python executes at runtime — these
-build pure Catalyst expression trees.
+"""Native (whole-stage-codegen) column functions: K8 temperature-format
+validation and the shared expression helpers (``bind_once``, ``round4``).
+No Python executes at runtime — these build pure Catalyst expression
+trees.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from narowi_ocr_spark.functions.patterns import (
-    BP_DIA_RANGE,
-    BP_SYS_RANGE,
-    READING_RANGES,
-)
 
 
 def bind_once(expr: Column, fn) -> Column:
@@ -125,22 +120,3 @@ def validate_temperature_format(text: Column | str) -> Column:
         .otherwise(_vresult(True, 0.0, None, None))
     )
 
-
-def is_valid_reading(rtype: Column, value: Column, unit: Column) -> Column:
-    """Native fast-path of the per-type range validators (K7,
-    pattern_matcher.py:222-268). BP rows parse the composite
-    "sys/dia mmHg" unit back into its two components."""
-    sys_v = F.split(unit, "/").getItem(0).cast("int")
-    dia_v = F.regexp_extract(unit, r"/(\d+)", 1).cast("int")
-    expr = F.lit(None).cast("boolean")
-    for name, by_unit in READING_RANGES.items():
-        fallback_lo, fallback_hi = by_unit[""]
-        branch = value.between(F.lit(fallback_lo), F.lit(fallback_hi))
-        for u, (lo, hi) in by_unit.items():
-            if u:
-                branch = F.when(
-                    unit == F.lit(u), value.between(F.lit(lo), F.lit(hi))
-                ).otherwise(branch)
-        expr = F.when(rtype == F.lit(name), branch).otherwise(expr)
-    bp_ok = sys_v.between(*BP_SYS_RANGE) & dia_v.between(*BP_DIA_RANGE)
-    return F.when(rtype == F.lit("BLOOD_PRESSURE"), bp_ok).otherwise(expr)

@@ -11,7 +11,8 @@ Reference semantics kept exactly:
   - emission order: category order → pattern order → match position.
 
 ``validate_number_span`` (K4, :146-170) is provided natively so it stays
-inside whole-stage codegen.
+inside whole-stage codegen, and so is ``extract_weight_spans`` (K9, the
+reference's ``extract_weight``, which crashes on every match).
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ import re as _re
 from narowi_ocr_spark.schema import NUMBERS_SCHEMA
 from narowi_ocr_spark.functions.patterns import (
     NUMBER_UNIT_RANGES,
+    READING_PATTERNS,
     compiled_number_patterns,
 )
 
@@ -99,18 +101,8 @@ def _extract_numbers_udf(
         )
 
 
-def extract_numbers(
-    text: Column | str, confidence: Column | float, byte_identical: bool = True
-) -> Column:
-    """array<struct<value,unit,confidence,raw_text>> of numeric spans.
-
-    ``byte_identical=False`` switches to the all-JVM fast path
-    (functions/fastpath.py): Java regex, no Arrow boundary — same
-    no-dedup/two-span-BP semantics without the Python ``re`` contract."""
-    if not byte_identical:
-        from narowi_ocr_spark.functions.fastpath import extract_numbers_fast
-
-        return extract_numbers_fast(text, confidence)
+def extract_numbers(text: Column | str, confidence: Column | float) -> Column:
+    """array<struct<value,unit,confidence,raw_text>> of numeric spans."""
     tcol = F.col(text) if isinstance(text, str) else text
     ccol = F.lit(confidence) if isinstance(confidence, (int, float)) else confidence
     return _extract_numbers_udf(tcol, ccol.cast("double"))
@@ -125,3 +117,87 @@ def validate_number_span(value: Column, unit: Column) -> Column:
             expr
         )
     return expr
+
+
+# --------------------------------------------------------------------------
+# K9 intended semantics: extract_weight (reference pattern_matcher.py:
+# 328-348). The reference implementation crashes on every match
+# (``match.group(2)`` with 1-group patterns → IndexError), so there is no
+# byte-identical behavior to preserve; this implements the INTENDED
+# semantics — whole-text scan of the weight patterns with a document-
+# global raw-text dedup set — natively. Deliberately NOT byte-compatible
+# with the broken reference (COVERAGE.md K9).
+# --------------------------------------------------------------------------
+
+_WEIGHT_UNIT_RX = r"(?i)(lbs?|pounds?|lb\.|kg|kilos?|kilograms?)"
+
+
+def _java(pat: str, flags: int = _re.IGNORECASE) -> str:
+    """Python pattern → Java pattern string (the constructs used —
+    lookaheads, \\b, non-capturing groups, anchors — are identical; only
+    the IGNORECASE flag moves inline)."""
+    return ("(?i)" + pat) if flags & _re.IGNORECASE else pat
+
+
+def _norm(t: Column) -> Column:
+    return F.regexp_replace(t, "\r\n|\r", "\n")
+
+
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def extract_weight_spans(
+    text: Column | str, confidence: Column | float
+) -> Column:
+    """array<struct<value,unit,raw_text,conf>> of weight spans: pattern
+    order → match order, first occurrence of each raw_text wins (the
+    ``seen_raw_texts`` set of the reference), value = group(1), unit =
+    the lowercased unit token of the match (what the reference's
+    ``match.group(2)`` intended to capture)."""
+    t = _norm(_col(text))
+    ccol = (
+        F.lit(float(confidence))
+        if isinstance(confidence, (int, float))
+        else confidence.cast("double")
+    )
+    span_t = "array<struct<value:double,unit:string,raw_text:string,conf:double>>"
+    arrays = []
+    for pat, flags in READING_PATTERNS["WEIGHT"]:
+        jp = _java(pat, flags)
+        m0 = F.regexp_extract_all(t, F.lit(jp), 0)
+
+        def _mk_factory(c: Column, jp: str):
+            def mk(m):
+                return F.struct(
+                    F.regexp_extract(m, jp, 1).cast("double").alias("value"),
+                    F.lower(
+                        F.regexp_extract(m, _WEIGHT_UNIT_RX, 1)
+                    ).alias("unit"),
+                    m.alias("raw_text"),
+                    c.alias("conf"),
+                )
+
+            return mk
+
+        arrays.append(F.transform(m0, _mk_factory(ccol, jp)))
+    spans = F.concat(*arrays)
+
+    acc0 = F.struct(
+        F.array().cast(span_t).alias("out"),
+        F.array().cast("array<string>").alias("seen"),
+    )
+
+    def merge(acc, sp):
+        dup = F.array_contains(acc["seen"], sp["raw_text"])
+        return F.struct(
+            F.when(dup, acc["out"]).otherwise(F.array_append(acc["out"], sp)).alias(
+                "out"
+            ),
+            F.when(dup, acc["seen"])
+            .otherwise(F.array_append(acc["seen"], sp["raw_text"]))
+            .alias("seen"),
+        )
+
+    out = F.aggregate(spans, acc0, merge, lambda acc: acc["out"])
+    return F.when(_col(text).isNotNull(), out).otherwise(F.array().cast(span_t))

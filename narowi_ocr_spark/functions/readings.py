@@ -145,18 +145,7 @@ def _extract_readings_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield s.map(extract_readings_py)
 
 
-def extract_readings(text: Column | str, byte_identical: bool = True) -> Column:
-    """array<struct<type,value,unit,is_valid>> of typed reading spans.
-
-    ``byte_identical=False`` switches to the all-JVM fast path
-    (functions/fastpath.py): identical dataflow semantics via Java regex
-    + native fold, no Arrow boundary — for pipelines that don't need the
-    Python-``re`` byte contract (the only known divergences are inputs
-    on which the reference itself crashes; see the fastpath module
-    docstring and tests/test_fastpath.py)."""
-    if not byte_identical:
-        from narowi_ocr_spark.functions.fastpath import extract_readings_fast
-
-        return extract_readings_fast(text)
+def extract_readings(text: Column | str) -> Column:
+    """array<struct<type,value,unit,is_valid>> of typed reading spans."""
     col = F.col(text) if isinstance(text, str) else text
     return _extract_readings_udf(col)

@@ -378,6 +378,17 @@ def _jaccard(a: str = "sh_a", b: str = "sh_b") -> Column:
     return round4(inter / F.size(F.array_union(a, b)).cast("double"))
 
 
+def _with_once(df: DataFrame, name: str, expr: Column) -> DataFrame:
+    """``df`` plus the column ``name`` = ``expr``, evaluated once per row
+    even when a filter reads it. The optimizer pushes a filter on a
+    projected alias below the projection with the alias replaced by its
+    expression, which evaluates the expression twice per row (the
+    verify's set algebra, in the filter and in the projection). A
+    filter on the output of a generator (here a one-element
+    ``explode``) stays above it and reads the value."""
+    return df.select("*", F.explode(F.array(expr)).alias(name))
+
+
 def jaccard_pairs(
     df: DataFrame,
     pairs: DataFrame,
@@ -390,9 +401,9 @@ def jaccard_pairs(
     documents in a pair are shingled, each once (``_pair_sets``); the
     intersection and union run over long arrays (``shingle_hashes``)."""
     return (
-        _pair_sets(df, pairs, text_col, id_col)
-        .select("id_a", "id_b", _jaccard().alias("jaccard"))
+        _with_once(_pair_sets(df, pairs, text_col, id_col), "jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -410,20 +421,19 @@ def containment_pairs(
     ``jaccard_pairs``."""
     n_shared = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
-        _pair_sets(df, pairs, text_col, id_col)
+        _with_once(_pair_sets(df, pairs, text_col, id_col), "n_shared", n_shared)
+        .where(F.col("n_shared") > 0)
         .select(
             "id_a",
             "id_b",
-            n_shared.alias("n_shared"),
+            "n_shared",
             F.size("sh_a").alias("n_a"),
             F.size("sh_b").alias("n_b"),
             F.expr(
                 "CASE WHEN size(sh_a) > 0 THEN"
-                " (1000000 * size(array_intersect(sh_a, sh_b)))"
-                " div size(sh_a) END"
+                " (1000000L * n_shared) div size(sh_a) END"
             ).alias("containment_a_ppm"),
         )
-        .where(F.col("n_shared") > 0)
     )
 
 
@@ -445,74 +455,15 @@ def simhash(text: Column | str, bits: int = SIMHASH_BITS) -> Column:
     sum — all computed with ``aggregate`` over the hashed-word array:
     narrow, shuffle-free, and byte-reproducible in the DuckDB oracle.
 
-    For hot paths use ``with_simhash`` — it stages the hash-per-word
-    projection so the tokenize+hash expression runs once per row, not
-    re-inlined once per bit.
+    This fold is the reference definition that tests compare the
+    signature kernel against; to sign a whole frame use
+    ``with_simhash_arrow``, which hashes each distinct word once per
+    worker instead of evaluating an interpreted lambda per (word, bit).
     """
     hw = F.transform(
         F.array_distinct(words(F.lower(_col(text)))), _word_hash
     )
     return _simhash_from_hashes(hw, bits)
-
-
-def with_simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = SIMHASH_BITS
-) -> DataFrame:
-    """(id, h) via explode → ``bits`` conditional SUMs → hash aggregate.
-
-    Value-identical to ``simhash()`` (same digest/digit-parity
-    definition, same oracle), but executes entirely in whole-stage
-    codegen: the narrow ``aggregate()``-fold variant evaluates its
-    lambda per (word, bit) in Catalyst's INTERPRETED higher-order-
-    function path, which measured ~1 ms/doc at sf0.1 — the hash
-    aggregation here is ~6× faster warm and JIT-compiles in seconds
-    instead of tens of seconds. Cost shape at scale: one exchange of
-    (id, 64 longs) rows — map-side partial aggregation collapses each
-    document's words before the shuffle (a document's exploded words
-    stay in its input partition), so shuffle volume is ~0.5 KB/doc,
-    independent of document length; text never moves.
-
-    Vote extraction is numeric, not textual: each row's 64-hex-digit
-    digest is parsed ONCE into eight 32-bit longs (``conv``), and bit
-    *b*'s vote is a shift-and-mask off the right chunk — 8 string ops +
-    64 ALU ops per word instead of 64 substring allocations (measured
-    ~3.5× the whole-operator cost at sf0.1). Digit *b* (parity ≥ '8')
-    is the msb of nibble 7−(b mod 8) of chunk b/8, so ``digit ≥ 8`` ≡
-    ``(chunk >> (4·(7−b%8)+3)) & 1``. The ±1 vote sum over *n* words
-    equals ``2·popcount_b − n``, so the sign test is ``2·Σbit_b > n``.
-
-    ``explode_outer`` keeps zero-word documents (null digest row →
-    null sums → every sign test false → h = 0, matching the fold
-    variant)."""
-    exploded = df.select(
-        F.col(id_col).alias("id"),
-        F.explode_outer(
-            F.array_distinct(words(F.lower(F.col(text_col))))
-        ).alias("w"),
-    ).select("id", _word_hash(F.col("w")).alias("hw"))
-    chunks = [
-        F.conv(F.substring("hw", 8 * k + 1, 8), 16, 10)
-        .cast("long")
-        .alias(f"c{k}")
-        for k in range(8)
-    ]
-    ch = exploded.select("id", *chunks)
-    aggs = [F.count(F.col("c0")).alias("nw")]
-    for b in range(bits):
-        k, j = divmod(b, 8)
-        shift = 4 * (7 - j) + 3
-        aggs.append(
-            F.sum(
-                F.shiftright(F.col(f"c{k}"), shift).bitwiseAND(F.lit(1))
-            ).alias(f"s{b}")
-        )
-    sums = ch.groupBy("id").agg(*aggs)
-    h = F.lit(0).cast("long")
-    for b in range(bits):
-        h = h + F.when(
-            F.lit(2) * F.col(f"s{b}") > F.col("nw"), F.lit(_bit_value(b))
-        ).otherwise(F.lit(0)).cast("long")
-    return sums.select("id", h.alias("h"))
 
 
 def _bit_value(b: int) -> int:
@@ -524,13 +475,12 @@ def _bit_value(b: int) -> int:
 def with_simhash_arrow(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Arrow-kernel twin of ``with_simhash`` — value-identical (same
-    tokenize → distinct → 2×md5 digest → nibble-msb votes → majority
-    sign; asserted equal by tests/test_dedup_similarity.py incl. a
-    unicode-edge differential), but ONE narrow mapInPandas projection:
-    no explode, no shuffle, and none of the 64-aggregate codegen tree
-    whose JIT dominated the JVM variant's wall time at small-to-medium
-    scale (3.8–5.5 s run-to-run wobble at sf0.1, VERDICT r2 item 4).
+    """(id, h): the 64-bit SimHash of each row, value-identical to the
+    ``simhash()`` fold (same tokenize → distinct → 2×md5 digest →
+    nibble-msb votes → majority sign; asserted equal by
+    tests/test_dedup_similarity.py incl. a unicode-edge differential),
+    as ONE narrow mapInPandas projection: no explode, no shuffle, and
+    no interpreted per-(word, bit) lambda.
 
     Kernel shape: per distinct word, the 64 hex digits of
     md5(w) ‖ md5('1:'+w) are one ``bytes.fromhex`` + ``unpackbits``;
@@ -544,10 +494,7 @@ def with_simhash_arrow(
     disagree at the edges, see ``bpe_encode_udf``).
 
     Scale shape: embarrassingly parallel scan-side projection —
-    (id, h) longs out, text never leaves the stage. At 100 TB this is
-    strictly better than the JVM variant's exchange of (id, 64 longs)
-    partial-agg rows; keep ``with_simhash`` where a Python-free
-    executor matters more than wall time."""
+    (id, h) longs out, text never leaves the stage."""
     import re
     from collections.abc import Iterator as _Iter
     from hashlib import md5 as _md5
@@ -637,7 +584,7 @@ def simhash_band_key(h: Column, band: int) -> Column:
 
 def simhash_near_pairs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    max_hamming: int = 3, engine: str = "arrow",
+    max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance. Candidate generation
     uses the four 16-bit bands of the 64-bit hash as blocking keys: a
@@ -650,20 +597,13 @@ def simhash_near_pairs(
 
     The d+1-band guarantee requires ``max_hamming`` ≤ 3; larger radii
     would need more/finer bands (recall would silently drop otherwise).
-
-    ``engine``: 'arrow' (default — one-pass kernel, see
-    ``with_simhash_arrow``; note the self-join evaluates the signature
-    subtree twice, amortized by the per-worker vote memo) or 'jvm'
-    (Python-free executors, ``with_simhash``). Both produce identical
-    hashes, so identical pairs.
     """
     if max_hamming > SIMHASH_BANDS - 1:
         raise ValueError(
             f"max_hamming={max_hamming} exceeds the {SIMHASH_BANDS}-band "
             f"pigeonhole guarantee (≤ {SIMHASH_BANDS - 1})"
         )
-    sig = with_simhash_arrow if engine == "arrow" else with_simhash
-    h = sig(df, text_col, id_col)
+    h = with_simhash_arrow(df, text_col, id_col)
     halves = h.select(
         "id",
         "h",
@@ -847,11 +787,11 @@ def incremental_near_dup(
     si = _hash_sets(
         index_docs, cand.select(F.col("index_id").alias("id")), text_col, id_col
     ).select(F.col("id").alias("index_id"), F.col("hs").alias("sh_b"))
+    paired = cand.join(sn, "new_id").join(si, "index_id")
     return (
-        cand.join(sn, "new_id")
-        .join(si, "index_id")
-        .select("new_id", "index_id", _jaccard().alias("jaccard"))
+        _with_once(paired, "jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
+        .select("new_id", "index_id", "jaccard")
     )
 
 

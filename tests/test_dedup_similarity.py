@@ -12,6 +12,7 @@ from narowi_ocr_spark.operators.dedup import (
     shingles,
     simhash,
     simhash_near_pairs,
+    with_simhash_arrow,
 )
 from narowi_ocr_spark.operators.similarity import (
     brute_force_topk,
@@ -255,16 +256,20 @@ def test_quantize_embeddings_codes_bounded(vectors):
     assert "Exchange" not in plan, plan
 
 
+def _fold_hashes(df) -> dict:
+    rows = df.select("doc_id", simhash("text").alias("h")).collect()
+    return {r["doc_id"]: r["h"] for r in rows}
+
+
+def _arrow_hashes(df) -> dict:
+    return {r["id"]: r["h"] for r in with_simhash_arrow(df).collect()}
+
+
 def test_simhash_arrow_twin_identical(spark):
     """The Arrow kernel (with_simhash_arrow) must produce EXACTLY the
-    JVM variant's hashes — including unicode case-fold edges, mixed
-    whitespace (the Java-\\s class), empty and null documents — so the
-    two engines are interchangeable under simhash_near_pairs."""
-    from narowi_ocr_spark.operators.dedup import (
-        with_simhash,
-        with_simhash_arrow,
-    )
-
+    hashes of the simhash() fold, the definition the DuckDB oracle
+    mirrors — including unicode case-fold edges, mixed whitespace (the
+    Java-\\s class), empty and null documents."""
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
         (1, "THE QUICK Brown fox JUMPS over the lazy dog"),
@@ -278,9 +283,8 @@ def test_simhash_arrow_twin_identical(spark):
         (9, "0123456789 !@#$%^&*() <html><body>&amp;</body></html>"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string").repartition(3)
-    jvm = {r["id"]: r["h"] for r in with_simhash(df).collect()}
-    arrow = {r["id"]: r["h"] for r in with_simhash_arrow(df).collect()}
-    assert arrow == jvm
+    arrow = _arrow_hashes(df)
+    assert arrow == _fold_hashes(df)
     # empty/null → 0 by contract
     assert arrow[2] == 0 and arrow[3] == 0
 
@@ -306,15 +310,8 @@ def test_simhash_arrow_twin_fuzz(spark):
         return "".join(parts)
 
     rows = [(i, doc()) for i in range(300)]
-    from narowi_ocr_spark.operators.dedup import (
-        with_simhash,
-        with_simhash_arrow,
-    )
-
     df = spark.createDataFrame(rows, "doc_id long, text string").repartition(4)
-    jvm = {r["id"]: r["h"] for r in with_simhash(df).collect()}
-    arrow = {r["id"]: r["h"] for r in with_simhash_arrow(df).collect()}
-    assert arrow == jvm
+    assert _arrow_hashes(df) == _fold_hashes(df)
 
 
 # --------------------------------------- production MinHash geometry
@@ -513,6 +510,18 @@ def test_hashed_jaccard_and_containment_equal_string_sets(spark):
         for r in containment_pairs(df, pairs.select("id_a", "id_b")).collect()
     }
     assert got_c == want_c
+
+
+def test_containment_of_long_documents(spark):
+    """Pairs sharing more than 2147 shingles: the parts-per-million
+    product is a long, so it neither overflows nor raises under ANSI."""
+    from narowi_ocr_spark.operators.dedup import containment_pairs
+
+    text = " ".join(f"w{i}" for i in range(2300))
+    df = spark.createDataFrame([(0, text), (1, text)], "doc_id long, text string")
+    pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    [row] = containment_pairs(df, pairs).collect()
+    assert (row.n_shared, row.n_a, row.containment_a_ppm) == (2298, 2298, 1000000)
 
 
 def test_hashed_incremental_near_dup_equals_string_sets(spark):

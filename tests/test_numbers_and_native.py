@@ -1,7 +1,8 @@
 """K1-K4 numeric-span kernel + K8 native temperature-format validation
 (golden cases from reference tests/test_thermometer.py:10-40 and
 test_pattern_matcher.py:196-213) + differential check vs the reference
-NumberExtractor."""
+NumberExtractor + K9 weight spans (the reference's extract_weight, which
+crashes on every match, in its intended semantics)."""
 
 import hashlib
 import json
@@ -15,6 +16,7 @@ from narowi_ocr_spark.functions.native import validate_temperature_format
 from narowi_ocr_spark.functions.numbers import (
     extract_numbers,
     extract_numbers_py,
+    extract_weight_spans,
     validate_number_span,
 )
 
@@ -173,3 +175,32 @@ def test_rolling_fingerprint(spark):
         .collect()
     }
     assert out == {0: py_roll("abc"), 1: ROLL_SEED, 2: py_roll("the quick brown fox")}
+
+
+def test_extract_weight_spans_intended_semantics(spark):
+    """K9 intended semantics: whole-text scan, first occurrence of each
+    raw_text wins across patterns, unit = lowercased unit token."""
+    df = spark.createDataFrame(
+        [(0, "WT: 150.5 lbs then 150.5 lbs again and 68.2 kg")], "doc_id long, text string"
+    )
+    out = [
+        x.asDict()
+        for x in df.select(extract_weight_spans("text", 90.0).alias("w")).first()["w"]
+    ]
+    # pattern 1 finds "150.5 lbs" twice (dedup keeps one) and pattern 3
+    # finds "68.2 kg"; "WT: 150.5 lbs" (pattern 5) is a DIFFERENT raw
+    # text and therefore also emits
+    raws = [o["raw_text"] for o in out]
+    assert raws.count("150.5 lbs") == 1
+    assert "68.2 kg" in raws
+    by_raw = {o["raw_text"]: o for o in out}
+    assert by_raw["150.5 lbs"] == {
+        "value": 150.5, "unit": "lbs", "raw_text": "150.5 lbs", "conf": 90.0
+    }
+    assert by_raw["68.2 kg"]["unit"] == "kg"
+
+
+def test_extract_weight_spans_null_and_empty(spark):
+    df = spark.createDataFrame([(0, None), (1, "")], "doc_id long, text string")
+    out = df.select(extract_weight_spans("text", 1.0).alias("w")).collect()
+    assert [row["w"] for row in out] == [[], []]

@@ -43,21 +43,6 @@ def test_parquet_filter_pushdown(spark, tmp_path):
     )
 
 
-def test_fastpath_kernel_is_pure_jvm_and_shuffle_free(spark):
-    """The byte_identical=False kernel path must introduce neither a
-    Python boundary nor a shuffle — it is one narrow native projection."""
-    from narowi_ocr_spark.functions.readings import extract_readings
-
-    pages = synth_pages(spark, 50, partitions=2).select(
-        "url", extract_readings("text", byte_identical=False).alias("r")
-    )
-    plan = _physical_plan(pages)
-    body = plan.split("MapInPandas")[0]  # synth generator node excluded
-    assert "Exchange" not in body, body
-    for marker in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in body, body
-
-
 def test_curation_full_has_exactly_two_shuffles(spark, tmp_path):
     """The full curation recipe (lang → quality → repetition → exact
     dedup → per-source cap) is gates-as-narrow-projections plus exactly
@@ -767,3 +752,38 @@ def test_jaccard_verify_hashes_at_session_width(spark):
         build = _subtree(final, "md5(")
         assert f", {w}), REPARTITION_BY_NUM" in build, build
         assert "AQEShuffleRead" not in build and "coalesced" not in build, build
+
+
+def test_verify_set_algebra_runs_once_per_pair(spark):
+    """A filter on the verify's similarity reads the value computed for
+    the output instead of recomputing it: the final plan of
+    ``jaccard_pairs`` and of ``incremental_near_dup`` holds one
+    ``array_intersect`` and one ``array_union``, and that of
+    ``containment_pairs`` one ``array_intersect``. (The optimizer
+    substitutes a projected alias into a filter it pushes below the
+    projection, which would run the set algebra twice per pair.)"""
+    from narowi_ocr_spark.operators.dedup import (
+        containment_pairs,
+        incremental_near_dup,
+        jaccard_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta w{i % 3}") for i in range(6)],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame(
+        [(0, 3), (1, 4), (0, 1), (2, 5)], "id_a long, id_b long"
+    )
+    index = df.select((F.col("doc_id") + 100).alias("doc_id"), "text")
+    for out, n_union in (
+        (jaccard_pairs(df, pairs, threshold=0.5), 1),
+        (incremental_near_dup(df, index, threshold=0.5), 1),
+        (containment_pairs(df, pairs), 0),
+    ):
+        assert out.count() > 0
+        out.collect()  # the executed, final adaptive plan
+        final = _physical_plan(out).split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in final, final
+        assert final.count("array_intersect(") == 1, final
+        assert final.count("array_union(") == n_union, final

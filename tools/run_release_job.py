@@ -88,7 +88,7 @@ _JOB_GROUP_PROPS = (
 # Stage builders — pure DataFrame → DataFrame functions. run_release()
 # wraps each in its checkpoint/resume protocol; release_stage_plans()
 # chains them lazily so tools/plan_audit.py can sweep the release
-# job's physical plans with the same allowlist discipline as the 218
+# job's physical plans with the same allowlist discipline as the
 # queries (VERDICT r4 item 4: a new SortAggregate/CartesianProduct in
 # the release path must fail the audit, not ship silently).
 # --------------------------------------------------------------------------
