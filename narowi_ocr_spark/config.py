@@ -17,6 +17,19 @@ from pyspark.sql import SparkSession
 # (~4k docs x ~20KB = 80MB per batch upper bound at default).
 ARROW_BATCH_ROWS = 2048
 
+# Generated-code classes Spark keeps compiled per JVM
+# (``spark.sql.codegen.cache.maxEntries``, a static conf; Spark's default
+# is 100). One full-gate release pass compiles about 183 units: counted
+# with the JVM-wide ``CodegenMetrics.METRIC_COMPILATION_TIME`` counter
+# over a traced pass of one 1350-page benchmark corpus, 00_docs 15,
+# 01_clean_ids 14, 02_exact_ids 8, 03_near_ids 81 (LSH 17, verify 28,
+# components 32, reps 4), shards 62, wet 3. With 100 entries a session
+# that runs the pass again misses the cache on almost every unit, so
+# Janino recompiles each class and the JIT warms each fresh class from
+# the interpreter again. 1000 holds the release working set about five
+# times over, room for the other plans a long-lived session runs.
+CODEGEN_CACHE_ENTRIES = 1000
+
 # Default parallelism knobs; overridden per-environment.
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -32,6 +45,8 @@ def get_spark(
     - AQE on: runtime coalescing + skew-join splitting at cluster scale.
     - Arrow on: every Python-side kernel moves data as Arrow batches.
     - maxRecordsPerBatch bounded: html payloads are fat rows.
+    - codegen cache sized to the working set (``CODEGEN_CACHE_ENTRIES``):
+      a plan the session already ran compiles no class again.
     """
     # Make the package importable inside executor Python workers regardless
     # of the driver's cwd. Local mode: workers inherit PYTHONPATH. Cluster
@@ -61,6 +76,9 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
         )
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

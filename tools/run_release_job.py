@@ -407,6 +407,13 @@ def _check_resume(spark: SparkSession, out_path: str, params: dict) -> None:
         )
 
 
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Generated-code classes this JVM has compiled so far (Spark's
+    codegen cache misses; a cache hit compiles nothing)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _keeps_caller_job_group(fn):
     """Restore the caller's Spark job group when ``fn(spark, ...)``
     returns or raises: run_release sets one group per stage."""
@@ -476,12 +483,21 @@ def run_release(
     step runs under its own job group, ``run_release:<step>``, and the
     count is read from ``statusTracker().getJobIdsForGroup``. The
     manifest itself is written from the driver, not by a job. The
-    caller's job group is restored on exit."""
+    caller's job group is restored on exit.
+
+    ``codegen_compiles`` is the number of generated-code classes the
+    run compiled: the delta of Spark's ``CodegenMetrics`` compilation
+    counter over the run, i.e. codegen cache misses. The counter is
+    JVM-wide, so a concurrent job in the same driver counts too, and on
+    a cluster it sees the driver's compiles only (executors compile in
+    their own JVMs). A session that already ran the same plans compiles
+    none (see ``config.CODEGEN_CACHE_ENTRIES``)."""
     from narowi_ocr_spark.operators.shards import shard_manifest
     from narowi_ocr_spark.sources.sink import collect_partition_histogram
     from narowi_ocr_spark.sources.wet import write_wet
 
     t0 = time.time()
+    compiles0 = _codegen_compiles(spark)
     reader = spark.read
     pages = (
         reader.format("iceberg").load(pages_path)
@@ -597,9 +613,10 @@ def run_release(
 
     # 5. splits + shards + manifests — terminal writes are their own
     # checkpoints: a committed shards dir is loaded, not rewritten. A
-    # computed assignment is persisted like ``released``: the count, the
-    # shard write, shard_manifest and WET all read that one copy
-    # instead of each re-running the split and shard window.
+    # computed assignment is persisted like ``released``: the shard
+    # write, shard_manifest and WET all read that one copy instead of
+    # each re-running the split and shard window. The train count is
+    # observed on the shard write.
     group("shards")
     if not fresh and _committed(spark, f"{out_path}/shards"):
         resumed.append("shards")
@@ -609,14 +626,17 @@ def run_release(
         fresh = True
         ts = time.time()
         assigned = build_train_shards(released).persist()
-        counts["train"] = assigned.count()
-        # an empty partitionBy write leaves no parquet file, so nothing
-        # a resume could read the schema from: an empty train split is
-        # written unpartitioned (one empty file that keeps the schema)
-        writer = assigned.write.mode("overwrite")
-        if counts["train"]:
-            writer = writer.partitionBy("shard")
-        writer.parquet(f"{out_path}/shards")
+        seen = Observation()
+        assigned.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).partitionBy("shard").parquet(f"{out_path}/shards")
+        counts["train"] = seen.get["rows"]
+        if not counts["train"]:
+            # an empty partitionBy write leaves no parquet file, so
+            # nothing a resume could read the schema from: an empty train
+            # split is rewritten unpartitioned (one empty file that keeps
+            # the schema)
+            assigned.write.mode("overwrite").parquet(f"{out_path}/shards")
         shard_manifest(assigned, assigned).write.mode("overwrite").parquet(
             f"{out_path}/shard_manifest"
         )
@@ -656,6 +676,7 @@ def run_release(
         "params": params,
         "checkpoint_partitions": partitions,
         "stage_jobs": stage_jobs,
+        "codegen_compiles": _codegen_compiles(spark) - compiles0,
         "survival_ppm": {
             k: int(v * 1_000_000 / counts["pages"]) if counts["pages"] else 0
             for k, v in counts.items()
