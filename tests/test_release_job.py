@@ -454,3 +454,18 @@ def test_release_job_width_invariant_and_counts_stage_jobs(spark, tmp_path):
         for k, d in written.items():
             assert m["stages"][k] == spark.read.parquet(f"{out}/{d}").count(), k
     assert m1["stage_jobs"]["01_clean_ids"] == mw["stage_jobs"]["01_clean_ids"] == 1
+
+
+def test_release_outputs_match_pinned_digests(spark, tmp_path):
+    """A full-gate release of the benchmark's warm-up slice (every
+    planted class) delivers exactly the pinned outputs: the id set of
+    every stage, the verified near-dup pairs, the shards, the shard
+    manifest, the WET records and the survivor counts
+    (``fixtures/release_digests.json``, ``tools/release_digests.py``)."""
+    import release_digests as rd
+
+    pages, planted = rd.corpus(str(tmp_path))
+    got = rd.release_digests(spark, pages, str(tmp_path / "release"))
+    assert {k: got["counts"][k] for k in planted} == planted
+    with open(rd.FIXTURE) as f:
+        assert rd.differences(got, json.load(f)) == []

@@ -223,9 +223,9 @@ def build_exact_ids(clean: DataFrame) -> DataFrame:
     return exact_dedup(clean).select(F.col("keep_id").alias("doc_id"))
 
 
-def build_near_ids(uniq: DataFrame, materialize: bool = True) -> DataFrame:
-    """Near-dedup survivor ids (stage 03_near_ids): LSH candidates →
-    exact-Jaccard verify → connected components → one rep per cluster.
+def near_dup_pairs(uniq: DataFrame, materialize: bool = True) -> DataFrame:
+    """Verified near-duplicate pairs ``(id_a, id_b, jaccard)`` of
+    ``uniq`` (stage 03_near_ids): LSH candidates → exact-Jaccard verify.
 
     PRODUCTION band geometry (128 bins, 16 bands x 8 rows, ~0.71
     capture threshold): the dev 16/2 geometry's ~0.35 threshold turns
@@ -240,10 +240,6 @@ def build_near_ids(uniq: DataFrame, materialize: bool = True) -> DataFrame:
     localCheckpoint of the candidate pair list so the full chain stays
     lazy; the real job materializes it because the verify walks the
     (cheap, sparse) pair list more than once."""
-    from narowi_ocr_spark.operators.components import (
-        component_representatives,
-        connected_components,
-    )
     from narowi_ocr_spark.operators.dedup import (
         PROD_NUM_PERM,
         PROD_ROWS_PER_BAND,
@@ -256,9 +252,20 @@ def build_near_ids(uniq: DataFrame, materialize: bool = True) -> DataFrame:
     )
     if materialize:
         cand = cand.localCheckpoint(eager=True)
-    verified = jaccard_pairs(uniq, cand, threshold=0.8)
+    return jaccard_pairs(uniq, cand, threshold=0.8)
+
+
+def build_near_ids(uniq: DataFrame, materialize: bool = True) -> DataFrame:
+    """Near-dedup survivor ids (stage 03_near_ids): the verified pairs
+    (``near_dup_pairs``) → connected components → one rep per cluster."""
+    from narowi_ocr_spark.operators.components import (
+        component_representatives,
+        connected_components,
+    )
+
     labels = connected_components(
-        verified, nodes=uniq.select(F.col("doc_id").alias("id"))
+        near_dup_pairs(uniq, materialize),
+        nodes=uniq.select(F.col("doc_id").alias("id")),
     )
     return component_representatives(labels).select(
         F.col("keep_id").alias("doc_id")
