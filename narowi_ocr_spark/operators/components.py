@@ -112,9 +112,13 @@ def connected_components(
         )
 
     for _ in range(max_iters):
-        msgs = sym.join(labels, sym.dst == labels.id).select(
-            F.col("src").alias("id"), "comp"
-        )
+        # labels are the hash-built side, pinned: when every component
+        # is a pair, sym and labels are the same size, and AQE's runtime
+        # choice of the broadcast side flipped between identical passes
+        # (each flip compiles the join again)
+        msgs = sym.join(
+            labels.hint("shuffle_hash"), sym.dst == labels.id
+        ).select(F.col("src").alias("id"), "comp")
         labels, cur_sum = _checkpoint_with_sum(
             labels.unionByName(msgs)
             .groupBy("id")
@@ -154,6 +158,22 @@ def component_representatives(labels: DataFrame) -> DataFrame:
     return labels.groupBy("comp").agg(
         F.min("id").alias("keep_id"), F.count("*").alias("n_members")
     ).withColumnRenamed("comp", "component")
+
+
+def component_keep_ids(
+    nodes: DataFrame, labels: DataFrame, id_col: str = "id"
+) -> DataFrame:
+    """``nodes`` (one column ``id_col``) without the ids whose component
+    label in ``labels`` is a smaller id: the ``keep_id`` set of
+    ``component_representatives(connected_components(edges, nodes))``,
+    from labels of the edge-connected nodes alone. A component's label
+    is its minimum id, so exactly its other members are dropped, and a
+    node on no edge has no label and stays. One anti join, no
+    aggregate, and the isolated nodes never enter the fixpoint."""
+    dropped = labels.where(F.col("comp") < F.col("id")).select(
+        F.col("id").alias(id_col)
+    )
+    return nodes.join(dropped, id_col, "left_anti")
 
 
 def _large_star(sym: DataFrame) -> DataFrame:

@@ -18,15 +18,22 @@ both read one md5-derived long per shingle (``shingle_hashes``).
 Scale notes (the part that matters at 100 TB):
   - exact dedup is one shuffle on a 32-byte digest — the payload column is
     dropped before the shuffle and re-joined only if needed;
+  - near-dedup reads each document's text once: ``hash_sets`` turns it
+    into one (id, shingle-hash array) row, and both the MinHash
+    signature and the Jaccard verify read that array. A pipeline that
+    runs both over the same documents materializes the hash sets once
+    (the release job's 03_near_ids stage does) and never shuffles or
+    re-hashes text;
   - MinHash signatures are one-permutation hashing over each row's
     shingle-hash array (narrow, no shuffle); only the tiny (doc_id,
     band_idx, band hash) triples shuffle for the LSH bucket join —
     never text;
   - candidate pairs come from an equi-join on (band_idx, band_hash), which
     AQE splits if a degenerate bucket (all-identical docs) skews;
-  - Jaccard verification hashes the shingles of candidate documents
-    only, once per document, and intersects long arrays — never
-    all-pairs.
+  - Jaccard verification intersects long arrays of candidate pairs
+    only — never all-pairs. The text-taking entry points
+    (``jaccard_pairs``, ``containment_pairs``) hash only the documents
+    in a candidate pair, once each.
 """
 
 from __future__ import annotations
@@ -172,6 +179,17 @@ def shingle_hashes(text: Column | str, n: int = 3) -> Column:
     )
 
 
+def hash_sets(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(id, hs): the ``shingle_hashes`` of every row of ``df``, one
+    narrow projection — the hash-set table the hash-set forms
+    (``hash_set_candidates``, ``hash_set_jaccard``) read."""
+    return df.select(
+        F.col(id_col).alias("id"), shingle_hashes(text_col).alias("hs")
+    )
+
+
 def minhash_bands(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_perm: int = NUM_PERM, rows_per_band: int = ROWS_PER_BAND,
@@ -200,6 +218,11 @@ def minhash_bands(
     and the ≤ num_perm present bins are densified and banded. It is
     narrow (no shuffle, no aggregate), and the same on any
     partitioning; only the ~48-byte band rows cross the band join."""
+    return _bands(hash_sets(df, text_col, id_col), num_perm, rows_per_band)
+
+
+def _bands(hs: DataFrame, num_perm: int, rows_per_band: int) -> DataFrame:
+    """``minhash_bands`` of a hash-set table (``hash_sets``)."""
     if num_perm & (num_perm - 1) or not 0 < num_perm <= 128:
         raise ValueError("num_perm must be a power of two ≤ 128")
     lg = num_perm.bit_length() - 1
@@ -249,16 +272,14 @@ def minhash_bands(
             ),
         )
 
-    keys = F.sort_array(F.transform(shingle_hashes(text_col), key))
+    keys = F.sort_array(F.transform(F.col("hs"), key))
     sig = bind_once(
         keys,
         lambda ks: bind_once(
             bin_mins(ks), lambda pk: bind_once(densified(pk), bands)
         ),
     )
-    return df.select(
-        F.col(id_col).alias("id"), F.posexplode(sig).alias("band_idx", "band_hash")
-    )
+    return hs.select("id", F.posexplode(sig).alias("band_idx", "band_hash"))
 
 
 def lsh_candidate_pairs(
@@ -288,9 +309,18 @@ def lsh_candidate_pairs(
     is still accepted because existing compositions (the benchmark's
     traced release) pass ``kernel="xxhash64"``.
     """
-    bands = minhash_bands(
-        df, text_col, id_col, num_perm=num_perm, rows_per_band=rows_per_band
+    return hash_set_candidates(
+        hash_sets(df, text_col, id_col), num_perm, rows_per_band
     )
+
+
+def hash_set_candidates(
+    hs: DataFrame,
+    num_perm: int = NUM_PERM,
+    rows_per_band: int = ROWS_PER_BAND,
+) -> DataFrame:
+    """``lsh_candidate_pairs`` of a hash-set table (``hash_sets``)."""
+    bands = _bands(hs, num_perm, rows_per_band)
     # Explicit exchange on the join keys: both self-join sides share ONE
     # identical Exchange subtree, so ReuseExchange materializes the
     # signature pass once instead of once per side. Shuffled rows stay
@@ -313,12 +343,18 @@ def lsh_candidate_pairs(
     )
 
 
+def _pair_ids(pairs: DataFrame) -> DataFrame:
+    """(id): both ids of every pair of ``pairs`` (``id_a``, ``id_b``)."""
+    return pairs.select(F.explode(F.array("id_a", "id_b")).alias("id"))
+
+
 def _hash_sets(
     df: DataFrame, ids: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """(id, hs): ``shingle_hashes`` of each document of ``df`` whose id
     is in ``ids`` (one column ``id``), built once per document and at
-    the session's shuffle width.
+    the session's shuffle width — the hash-set table of the text-taking
+    verify entry points, which shingle candidate documents only.
 
     The documents are read through ``repartition(<spark.sql.shuffle.
     partitions>, id)``, and the shingling runs on its output. The width
@@ -333,30 +369,27 @@ def _hash_sets(
     broadcast the documents instead and move the shingling onto the
     coalesced id side."""
     width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
+    return hash_sets(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
         .repartition(width, "id")
-        .join(ids.distinct().hint("shuffle_hash"), "id")
-        .select("id", shingle_hashes("_t").alias("hs"))
+        .join(ids.distinct().hint("shuffle_hash"), "id"),
+        "_t",
+        "id",
     )
 
 
-def _pair_sets(
-    df: DataFrame, pairs: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
+def _pair_sets(hs: DataFrame, pairs: DataFrame) -> DataFrame:
     """(id_a, id_b, sh_a, sh_b): the candidate pairs with both sides'
-    shingle-hash sets, each document in a pair shingled once, in as many
-    tasks as the session's shuffle width (``_hash_sets``). Every pair
-    becomes one row per side, the rows join the once-built sets on the
-    document id, and one hash aggregate puts the two sides of each pair
-    back together. (Joining the sets twice, once per side, would build
-    them twice: nothing makes the two consumers share one exchange.) A
-    pair whose document is missing from ``df`` is dropped, as an inner
-    join would."""
+    hash sets from the hash-set table ``hs``, which is read once. Every
+    pair becomes one row per side, the rows join ``hs`` on the document
+    id, and one hash aggregate puts the two sides of each pair back
+    together. (Joining ``hs`` twice, once per side, would evaluate an
+    un-materialized ``hs`` twice: nothing makes the two consumers share
+    one exchange.) A pair whose document is missing from ``hs`` is
+    dropped, as an inner join would."""
     sides = pairs.select(
         "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
     )
-    hs = _hash_sets(df, sides.select("id"), text_col, id_col)
     # ids are distinct within a pair (id_a < id_b): the sort puts a first
     both = F.sort_array(F.collect_list(F.struct("id", "hs")))
     return (
@@ -398,10 +431,21 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact shingle Jaccard for candidate pairs; keeps pairs ≥ threshold.
     Joined only to the candidate pairs, never all-pairs, and only the
-    documents in a pair are shingled, each once (``_pair_sets``); the
+    documents in a pair are shingled, each once (``_hash_sets``); the
     intersection and union run over long arrays (``shingle_hashes``)."""
+    return hash_set_jaccard(
+        _hash_sets(df, _pair_ids(pairs), text_col, id_col), pairs, threshold
+    )
+
+
+def hash_set_jaccard(
+    hs: DataFrame, pairs: DataFrame, threshold: float = 0.8
+) -> DataFrame:
+    """``jaccard_pairs`` of a hash-set table (``hash_sets``): (id_a,
+    id_b, jaccard) of the ``pairs`` at or above ``threshold``, reading
+    ``pairs`` and ``hs`` once each (``_pair_sets``)."""
     return (
-        _with_once(_pair_sets(df, pairs, text_col, id_col), "jaccard", _jaccard())
+        _with_once(_pair_sets(hs, pairs), "jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -421,7 +465,11 @@ def containment_pairs(
     ``jaccard_pairs``."""
     n_shared = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
-        _with_once(_pair_sets(df, pairs, text_col, id_col), "n_shared", n_shared)
+        _with_once(
+            _pair_sets(_hash_sets(df, _pair_ids(pairs), text_col, id_col), pairs),
+            "n_shared",
+            n_shared,
+        )
         .where(F.col("n_shared") > 0)
         .select(
             "id_a",

@@ -102,7 +102,7 @@ def shard_sizes(assigned: DataFrame) -> DataFrame:
 
 def shard_manifest(
     assigned: DataFrame,
-    df: DataFrame,
+    df: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -117,19 +117,23 @@ def shard_manifest(
     overflow: Spark wraps or throws under ANSI while DuckDB widens to
     HUGEINT and errors on the BIGINT cast).
 
-    One broadcast-sized shuffle: the join keys on id against the
-    already-assigned table, and the rollup groups by shard. Re-running
-    the manifest after any shard rewrite and diffing checksums is the
-    cheap end-to-end corruption check.
+    The text is read from ``df`` joined on id, or, with ``df`` omitted,
+    from the assignment itself (``shard_assign`` keeps every input
+    column), which needs no join: the rollup's group-by on shard is the
+    only shuffle. Re-running the manifest after any shard rewrite and
+    diffing checksums is the cheap end-to-end corruption check.
     """
-    content = df.select(
-        F.col(id_col).alias("_mid"),
+    csum = (
         F.conv(F.substring(F.md5(F.col(text_col)), 1, 8), 16, 10)
         .cast("long")
-        .alias("_csum"),
-        token_count_col(F.col(text_col)).alias("_ntok"),
+        .alias("_csum")
     )
-    j = assigned.join(content, assigned[id_col] == content._mid)
+    ntok = token_count_col(F.col(text_col)).alias("_ntok")
+    if df is None:
+        j = assigned.select("shard", id_col, csum, ntok)
+    else:
+        content = df.select(F.col(id_col).alias("_mid"), csum, ntok)
+        j = assigned.join(content, assigned[id_col] == content._mid)
     return j.groupBy("shard").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("_ntok").cast("long").alias("n_tokens"),

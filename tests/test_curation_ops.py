@@ -171,6 +171,52 @@ def test_connected_components_seeded_round_one(spark):
 
 
 
+def test_component_keep_ids_equal_representatives_on_random_graphs(spark):
+    """Survivors by anti join (every node but those labelled with a
+    smaller id, labels over the edges alone) equal the keep ids of
+    ``component_representatives(connected_components(edges, nodes))``
+    and the union-find minima, on random graphs of isolated nodes,
+    pairs, stars, chains and random trees over hash-sized ids."""
+    import random
+
+    from narowi_ocr_spark.operators.components import component_keep_ids
+
+    for seed in (1, 2, 3):
+        rng = random.Random(seed)
+        ids = sorted({rng.randrange(-(2**63), 2**63) for _ in range(160)})
+        rng.shuffle(ids)
+        pairs, at = [], 0
+        while at < len(ids):
+            shape, k = rng.choice(("isolated", "pair", "star", "chain", "tree")), rng.randint(2, 9)
+            group, at = ids[at:at + (2 if shape == "pair" else k)], at + k
+            if shape == "star":
+                pairs += [(group[0], g) for g in group[1:]]
+            elif shape in ("pair", "chain"):
+                pairs += list(zip(group, group[1:]))
+            elif shape == "tree":
+                pairs += [(g, rng.choice(group[:i])) for i, g in enumerate(group) if i]
+        # edges in either direction, with a repeat
+        pairs = [p if rng.random() < 0.5 else p[::-1] for p in pairs + pairs[:3]]
+        root = {i: i for i in ids}
+
+        def find(x):
+            while root[x] != x:
+                x = root[x]
+            return x
+
+        for a, b in pairs:
+            ra, rb = find(a), find(b)
+            root[max(ra, rb)] = min(ra, rb)
+        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+        nodes = spark.createDataFrame([(i,) for i in ids], "id long")
+        reps = {
+            r["keep_id"]
+            for r in component_representatives(connected_components(edges, nodes)).collect()
+        }
+        kept = {r["id"] for r in component_keep_ids(nodes, connected_components(edges)).collect()}
+        assert kept == reps == {find(i) for i in ids}, seed
+
+
 def test_connected_components_evaluates_edges_once(spark):
     """The symmetric edge list is built in one pass over ``edges``: an
     un-materialized edge frame (the release job's Jaccard verify) is

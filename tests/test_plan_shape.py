@@ -787,3 +787,62 @@ def test_verify_set_algebra_runs_once_per_pair(spark):
         assert "isFinalPlan=true" in final, final
         assert final.count("array_intersect(") == 1, final
         assert final.count("array_union(") == n_union, final
+
+
+def _exchanges(plan):
+    """Every exchange node of a (non-adaptive) physical plan."""
+    if "Exchange" in plan.nodeName():
+        yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _exchanges(children.apply(i))
+
+
+def test_near_dedup_reads_each_document_once(spark):
+    """The release's near-dup pass (``near_dup_pairs``) shingles and
+    hashes each document once: the documents are read once although
+    the MinHash bands and the Jaccard verify both consume their hash
+    sets (an accumulator counts the rows the document frame produces),
+    the executed plan reads the hash sets instead of hashing shingles
+    again, and no exchange of the lazy chain carries the text column."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
+    from narowi_ocr_spark.operators.dedup import jaccard_pairs, lsh_candidate_pairs
+    from run_release_job import near_dup_pairs
+
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+    body = " ".join(f"w{i}" for i in range(60))
+    rows = [(i, f"{body} tail{i % 4}") for i in range(12)]
+
+    def counted(r):
+        seen.add(1)
+        return r
+
+    uniq = spark.createDataFrame(
+        sc.parallelize(rows, 3).map(counted), "doc_id long, text string"
+    )
+    pairs = near_dup_pairs(uniq)
+    got = {tuple(r) for r in pairs.collect()}
+    assert seen.value == len(rows)
+    assert "conv(substring(md5(" not in _physical_plan(pairs)
+    # the same pairs as the text-taking entry points
+    cand = lsh_candidate_pairs(uniq, num_perm=128, rows_per_band=8)
+    assert got == {tuple(r) for r in jaccard_pairs(uniq, cand, threshold=0.8).collect()}
+    assert len(got) == 66  # all pairs: 58 of 60 shingles shared at worst
+
+    key = "spark.sql.adaptive.enabled"
+    aqe = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        lazy = near_dup_pairs(uniq, materialize=False)._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set(key, aqe)
+    exchanges = list(_exchanges(lazy))
+    assert exchanges
+    for ex in exchanges:
+        assert "text" not in ex.output().toString(), ex.toString()

@@ -87,7 +87,7 @@ ALLOWED = {
     "release:00_docs": ("SortAgg", "distinct-on-id struct-min: lexicographic (url,ts,text) pick per doc_id over the one doc_id repartition at the session's shuffle width (not AQE-coalesced, so later per-row stages run on every partition), documented at build_docs"),
     "release:01_clean_ids": ("SortAgg", "consumes 00_docs' struct-min (lazy chain only; the job reads the checkpoint)"),
     "release:02_exact_ids": ("SortAgg", "00_docs chain + exact_dedup keep-min over (md5,doc_id) struct"),
-    "release:03_near_ids": ("SortAgg", "00_docs chain; the near-dup pass adds none (aggregate-free MinHash signature, HashAggregate DISTINCT and components)"),
+    "release:03_near_ids": ("SortAgg", "00_docs chain; the near-dup pass adds none (one shingle-hash set per document feeds the aggregate-free MinHash signature and the verify's hash aggregate; HashAggregate DISTINCT, components, and an anti join for the survivors)"),
     "release:shards": ("SortAgg", "00_docs chain through splits + shard assignment"),
     "release:wet": ("SortAgg", "00_docs chain through WET record conversion"),
 }

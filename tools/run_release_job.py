@@ -225,7 +225,8 @@ def build_exact_ids(clean: DataFrame) -> DataFrame:
 
 def near_dup_pairs(uniq: DataFrame, materialize: bool = True) -> DataFrame:
     """Verified near-duplicate pairs ``(id_a, id_b, jaccard)`` of
-    ``uniq`` (stage 03_near_ids): LSH candidates → exact-Jaccard verify.
+    ``uniq`` (stage 03_near_ids): LSH candidates → exact-Jaccard verify,
+    both over one shingle-hash set per document.
 
     PRODUCTION band geometry (128 bins, 16 bands x 8 rows, ~0.71
     capture threshold): the dev 16/2 geometry's ~0.35 threshold turns
@@ -236,40 +237,46 @@ def near_dup_pairs(uniq: DataFrame, materialize: bool = True) -> DataFrame:
     same kernel the DuckDB oracles mirror), and candidates are verified
     by exact Jaccard over the same shingle hashes.
 
-    ``materialize=False`` (plan audit only) skips the eager
-    localCheckpoint of the candidate pair list so the full chain stays
-    lazy; the real job materializes it because the verify walks the
-    (cheap, sparse) pair list more than once."""
+    Each document's text is read once: ``hash_sets`` shingles and
+    hashes it in the tasks that read ``uniq``, and the band join and
+    the verify both read that (id, hs) table, so no text is shuffled
+    and no shingle is hashed twice. The table passes a lazy
+    ``localCheckpoint``: it is computed by the first job that reads it
+    and served from the block manager to the second. The verify reads
+    the candidate pair list once (``hash_set_jaccard``), so the pairs
+    are not materialized. ``materialize=False`` (plan audit only)
+    leaves the boundary out."""
     from narowi_ocr_spark.operators.dedup import (
         PROD_NUM_PERM,
         PROD_ROWS_PER_BAND,
-        jaccard_pairs,
-        lsh_candidate_pairs,
+        hash_set_candidates,
+        hash_set_jaccard,
+        hash_sets,
     )
 
-    cand = lsh_candidate_pairs(
-        uniq, num_perm=PROD_NUM_PERM, rows_per_band=PROD_ROWS_PER_BAND
-    )
+    hs = hash_sets(uniq)
     if materialize:
-        cand = cand.localCheckpoint(eager=True)
-    return jaccard_pairs(uniq, cand, threshold=0.8)
+        hs = hs.localCheckpoint(eager=False)
+    cand = hash_set_candidates(
+        hs, num_perm=PROD_NUM_PERM, rows_per_band=PROD_ROWS_PER_BAND
+    )
+    return hash_set_jaccard(hs, cand, threshold=0.8)
 
 
 def build_near_ids(uniq: DataFrame, materialize: bool = True) -> DataFrame:
     """Near-dedup survivor ids (stage 03_near_ids): the verified pairs
-    (``near_dup_pairs``) → connected components → one rep per cluster."""
+    (``near_dup_pairs``) → connected components → the ids of ``uniq``
+    that represent their component (``component_keep_ids``: every id
+    but those labelled with a smaller one). Only the edge-connected
+    documents enter the components; a document on no verified pair
+    survives as its own representative."""
     from narowi_ocr_spark.operators.components import (
-        component_representatives,
+        component_keep_ids,
         connected_components,
     )
 
-    labels = connected_components(
-        near_dup_pairs(uniq, materialize),
-        nodes=uniq.select(F.col("doc_id").alias("id")),
-    )
-    return component_representatives(labels).select(
-        F.col("keep_id").alias("doc_id")
-    )
+    labels = connected_components(near_dup_pairs(uniq, materialize))
+    return component_keep_ids(uniq.select("doc_id"), labels, "doc_id")
 
 
 def build_released_text(released: DataFrame, pii_scrub: bool = False) -> DataFrame:
@@ -320,7 +327,7 @@ def release_stage_plans(
     full_gates: bool = False,
 ) -> dict[str, DataFrame]:
     """Lazily chain every release stage off ``pages`` — NOTHING
-    executes (no checkpoints, no counts, no candidate materialization),
+    executes (no checkpoints, no counts, no hash-set materialization),
     so tools/plan_audit.py can inspect each stage's physical plan
     exactly as run_release() would compose it. Downstream stages read
     their upstream through the lazy chain instead of run_release()'s
@@ -484,8 +491,8 @@ def run_release(
 
     ``stage_jobs`` counts the Spark jobs each step started: the six
     stages ``00_docs`` … ``wet`` (a computed stage's checkpoint write
-    and the work feeding it, such as the near-dedup candidate and
-    connected-components checkpoints; a resumed stage's count) and
+    and the work feeding it, such as the near-dedup connected-components
+    checkpoints; a resumed stage's count) and
     ``lineage`` (the partition histogram of the delivered shards). Every
     step runs under its own job group, ``run_release:<step>``, and the
     count is read from ``statusTracker().getJobIdsForGroup``. The
@@ -608,8 +615,7 @@ def run_release(
     uniq = clean.join(exact_ids, "doc_id")
 
     # 4. near-dedup: LSH candidates → exact-Jaccard verify → CC reps
-    # (see build_near_ids; materialize=True pins the candidate pair
-    # list once for the verify → CC chain)
+    # over one shingle-hash set per document (see build_near_ids)
     group("03_near_ids")
     near_ids, counts["near_unique"] = stage(
         "03_near_ids", lambda: build_near_ids(uniq)
@@ -644,7 +650,7 @@ def run_release(
             # split is rewritten unpartitioned (one empty file that keeps
             # the schema)
             assigned.write.mode("overwrite").parquet(f"{out_path}/shards")
-        shard_manifest(assigned, assigned).write.mode("overwrite").parquet(
+        shard_manifest(assigned).write.mode("overwrite").parquet(
             f"{out_path}/shard_manifest"
         )
         stage_s["shards"] = round(time.time() - ts, 2)
