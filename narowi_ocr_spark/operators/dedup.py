@@ -798,12 +798,14 @@ def incremental_near_dup(
     (``minhash_bands`` — narrow, only ~48-byte rows shuffle);
     candidates come from the band equi-join NEW × INDEX (never new×new
     or index×index — re-crawls only need novelty vs the corpus, which
-    is what keeps this linear in the batch, not the corpus);
+    keeps the pair count linear in the batch, not the corpus);
     verification builds shingle-hash sets only for documents in a
     candidate pair, once each (``_hash_sets``: a join on the distinct
-    candidate ids, at the session's shuffle width), so
-    the INDEX side (the whole corpus) is never shingled wholesale on a
-    refresh.
+    candidate ids, at the session's shuffle width). The signatures are
+    not confined that way: ``minhash_bands(index_docs)`` shingles every
+    index document on every call, so this function's cost grows with
+    the corpus; the production shape below keeps the index signatures
+    persisted instead.
 
     Production shape: the index side's band triples and shingle-digest
     arrays are PERSISTED tables (written bucketed by (band_idx,

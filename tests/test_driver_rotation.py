@@ -16,12 +16,10 @@ the pins below track the rotation instead of trailing it.
 import glob
 import json
 import os
-import sys
+
+import __spark_entry__ as entry
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-import __spark_entry__ as entry  # noqa: E402
 
 # Every name with a driver CORRECTNESS row in any past round, plus the
 # per-name row lists (to recompute the regate set the way the runtime

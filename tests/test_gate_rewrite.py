@@ -6,8 +6,6 @@ its survivors must equal the AND of the gates' stat-table forms, and the
 hashed repetition statistics must equal the string n-gram statistics
 (``ngrams`` + exact counting in Python)."""
 
-import os
-import sys
 from collections import Counter
 
 import pytest
@@ -24,10 +22,6 @@ from narowi_ocr_spark.functions.textstats import (
 )
 from narowi_ocr_spark.operators.corpus import blocklist_gate
 from narowi_ocr_spark.sources.pages import build_page
-
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
-)
 
 BLOCKLIST = ["slow", "dup"]
 REP = ("buy cheap deals now " * 12).strip() + "."
@@ -131,11 +125,8 @@ def test_fused_verdicts_equal_the_stat_table_forms(docs, ref):
     for full_gates, want in ((False, base), (True, full)):
         flags = by_id(clean_flags(docs, BLOCKLIST, True, full_gates), "doc_id", "keep")
         assert {i for i, k in flags.items() if k} == want
-        for materialize in (True, False):
-            got = build_clean_ids(
-                docs, BLOCKLIST, True, full_gates, materialize=materialize
-            )
-            assert {r["doc_id"] for r in got.collect()} == want
+        got = build_clean_ids(docs, BLOCKLIST, True, full_gates)
+        assert {r["doc_id"] for r in got.collect()} == want
 
     # every planted reject class dies under the full stack; organic
     # pages and their near/exact dups survive it

@@ -647,12 +647,6 @@ def test_clean_stage_tokenizes_once_and_filters_flags_only(spark):
     hashed 2- and 3-grams, no string joins), and the filter reads the
     materialized (doc_id, keep) flags: no gate expression re-inlines
     into it."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
-    )
     from run_release_job import build_clean_ids, clean_flags
 
     docs = spark.createDataFrame(
@@ -680,12 +674,6 @@ def test_build_docs_repartitions_once_at_session_width(spark, tmp_path):
     without a second exchange. AQE does not coalesce it, so 00_docs is
     written as one file per partition at any data size."""
     import glob
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
-    )
     from run_release_job import build_docs
 
     pages = synth_pages(spark, 40, partitions=2)
@@ -789,29 +777,19 @@ def test_verify_set_algebra_runs_once_per_pair(spark):
         assert final.count("array_union(") == n_union, final
 
 
-def _exchanges(plan):
-    """Every exchange node of a (non-adaptive) physical plan."""
-    if "Exchange" in plan.nodeName():
-        yield plan
-    children = plan.children()
-    for i in range(children.size()):
-        yield from _exchanges(children.apply(i))
-
-
 def test_near_dedup_reads_each_document_once(spark):
     """The release's near-dup pass (``near_dup_pairs``) shingles and
     hashes each document once: the documents are read once although
     the MinHash bands and the Jaccard verify both consume their hash
     sets (an accumulator counts the rows the document frame produces),
     the executed plan reads the hash sets instead of hashing shingles
-    again, and no exchange of the lazy chain carries the text column."""
-    import os
-    import sys
+    again, and no exchange of the executed plans carries the text
+    column: neither the pairs' final plan nor the hash-set build behind
+    its checkpoint (read back from Spark's SQL status store)."""
+    import re
 
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
-    )
     from narowi_ocr_spark.operators.dedup import jaccard_pairs, lsh_candidate_pairs
+    from plan_audit import executed_plans, execution_mark
     from run_release_job import near_dup_pairs
 
     sc = spark.sparkContext
@@ -826,8 +804,10 @@ def test_near_dedup_reads_each_document_once(spark):
     uniq = spark.createDataFrame(
         sc.parallelize(rows, 3).map(counted), "doc_id long, text string"
     )
+    since = execution_mark(spark)
     pairs = near_dup_pairs(uniq)
     got = {tuple(r) for r in pairs.collect()}
+    executed = [plan for _, plan in executed_plans(spark, since)]
     assert seen.value == len(rows)
     assert "conv(substring(md5(" not in _physical_plan(pairs)
     # the same pairs as the text-taking entry points
@@ -835,14 +815,14 @@ def test_near_dedup_reads_each_document_once(spark):
     assert got == {tuple(r) for r in jaccard_pairs(uniq, cand, threshold=0.8).collect()}
     assert len(got) == 66  # all pairs: 58 of 60 shingles shared at worst
 
-    key = "spark.sql.adaptive.enabled"
-    aqe = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        lazy = near_dup_pairs(uniq, materialize=False)._jdf.queryExecution().executedPlan()
-    finally:
-        spark.conf.set(key, aqe)
-    exchanges = list(_exchanges(lazy))
+    # the hash-set build (the one execution that reads the text) and
+    # the pairs' final plan, each node with its detail section
+    assert len(executed) == 2, executed
+    assert [re.search(r"\btext#", plan) is not None for plan in executed] == [True, False]
+    exchanges = [
+        sec for plan in executed for sec in plan.split("\n\n")
+        if re.match(r"\(\d+\) \w*Exchange", sec)
+    ]
     assert exchanges
     for ex in exchanges:
-        assert "text" not in ex.output().toString(), ex.toString()
+        assert not re.search(r"\btext#", ex), ex

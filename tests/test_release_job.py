@@ -4,16 +4,10 @@ WET segments → manifest, all from library calls."""
 
 import glob
 import json
-import os
-import sys
 
 import pyspark.sql.functions as F
 
 from narowi_ocr_spark.sources.pages import synth_pages
-
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
-)
 
 
 def test_release_job_end_to_end(spark, tmp_path):
@@ -458,11 +452,16 @@ def test_release_outputs_match_pinned_digests(spark, tmp_path):
     planted class) delivers exactly the pinned outputs: the id set of
     every stage, the verified near-dup pairs, the shards, the shard
     manifest, the WET records and the survivor counts
-    (``fixtures/release_digests.json``, ``tools/release_digests.py``)."""
+    (``fixtures/release_digests.json``, ``tools/release_digests.py``).
+    The plans the release executed pass the plan audit
+    (``plan_audit.audit_release``)."""
+    import plan_audit
     import release_digests as rd
 
     pages, planted = rd.corpus(str(tmp_path))
+    since = plan_audit.execution_mark(spark)
     got = rd.release_digests(spark, pages, str(tmp_path / "release"))
     assert {k: got["counts"][k] for k in planted} == planted
     with open(rd.FIXTURE) as f:
         assert rd.differences(got, json.load(f)) == []
+    assert plan_audit.audit_release(spark, since) == []

@@ -132,15 +132,7 @@ def test_weights_table_dense(spark):
 def test_entry_queries_match_oracle(spark):
     """classifier_train / classifier_train_eval hash-match their DuckDB
     oracles at sf0.001 (the same comparison the driver runs)."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
-    import importlib
-
-    entry = importlib.import_module("__spark_entry__")
-    sys.path.insert(0, os.path.join(repo, "tools"))
+    import __spark_entry__ as entry
     from check_oracles import frame_hash
 
     import duckdb

@@ -18,7 +18,14 @@ Methodology (matters a lot in local mode):
     printed as evidence that the limit is the box, not the dataflow
     (which is a single shuffle-free stage — no algorithmic serial part).
 
+Every mode prints its report (markdown + raw JSON) to stdout; curating
+it into BENCH.md is a manual step, so a run never replaces the
+recorded history there.
+
 Usage: python tools/bench_scaling.py [n_pages]
+       python tools/bench_scaling.py --ops-only | --extract-only [n_pages]
+       python tools/bench_scaling.py --release-only | --release-full [n_pages]
+       python tools/bench_scaling.py --release-level <cpus> [n_pages] [full]
 """
 
 from __future__ import annotations
@@ -118,13 +125,8 @@ qv = vecs.where(F.col("vec_id") < 16)
 def noop(df):
     df.write.format("noop").mode("overwrite").save()
 
-# Global-rank pair (VERDICT r2 items 1+8): the SAME 4M-row exact rank,
-# once through the old unpartitioned window (every row through ONE
-# task's sort — the pre-fix quality_deciles/events_rfm shape) and once
-# through the distributed bucketed_rank that replaced it. The ladder
-# shows the window variant flat across core counts while the bucketed
-# variant scales — the efficiency number the fix exists for.
-from pyspark.sql.window import Window
+# 4M-row exact global rank through the distributed bucketed_rank
+# (quality_deciles / events_rfm / events_power_users ride it).
 from narowi_ocr_spark.operators.ranking import bucketed_rank, loglin_bucket
 RANK_N = 4_000_000
 rank_base = (spark.range(RANK_N, numPartitions=cpus)
@@ -172,9 +174,6 @@ ops = {{
     # plus two doc-keyed rollups; heaviest honest shuffle job here
     "dup_span_removal": lambda: noop(dup_span_removal(corpus)),
     "pack_sequences": lambda: noop(pack_sequences(docs, capacity=256)),
-    "rank_global_window": lambda: noop(
-        rank_base.select("id", F.row_number().over(
-            Window.orderBy(*rank_order)).alias("rn"))),
     "rank_bucketed_dist": lambda: noop(
         bucketed_rank(rank_base, loglin_bucket(F.col("v")), rank_order,
                       ascending_buckets=False, rank_name="rn")),
@@ -322,106 +321,6 @@ spark.stop()
 """
 
 
-# --------------------------------------------------------------------
-# Adversarial hot-gram drive (VERDICT r4 item 5): the span-dedup
-# family's single-exchange plan runs its occurrence count COMPLETE-mode
-# above the pre-partitioned digest stream (documented trade at
-# dup_span_stats), so one pathological boilerplate gram is counted by
-# ONE task scanning its partition serially. The documented bound is
-# O(1) aggregate state and linear single-task CPU — no OOM, no
-# straggler cliff. This drive PROVES it: plant one 15-token boilerplate
-# sentence in ``hot_pct``% of an ``n_docs``-page corpus, time
-# dup_span_stats against a uniform twin of identical token shape, and
-# report the wall-clock ratio. Interleaved U/H/U/H timings in one
-# session (the box has 2-4x noisy-neighbor swings; never serial A-then-B).
-HOTGRAM_DOCS = 400_000
-
-HOTGRAM_CHILD = r"""
-import json, os, sys, time
-sys.path.insert(0, {repo!r})
-from narowi_ocr_spark.config import get_spark
-from narowi_ocr_spark.operators.corpus import dup_span_stats
-from pyspark.sql import functions as F
-
-n_docs = int(sys.argv[1]); hot_pct = int(sys.argv[2])
-spark = get_spark(app_name="hotgram", master=f"local[{{len(os.sched_getaffinity(0))}}]",
-                  shuffle_partitions=32)
-spark.sparkContext.setLogLevel("ERROR")
-
-HOT = ("this site uses cookies to improve your browsing experience "
-       "accept our policy now")  # 15 tokens -> 8 hot k=8 windows
-
-def corpus(hot):
-    # ~28 unique filler tokens per doc + a 15-token tail: the planted
-    # boilerplate for hot docs, a per-doc-unique sentence otherwise —
-    # both corpora have identical token counts, only df(g) differs.
-    base = spark.range(n_docs).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.transform(F.sequence(F.lit(1), F.lit(28)),
-                        lambda i: F.substring(
-                            F.md5(F.concat(F.col("id").cast("string"),
-                                           F.lit("-"), i.cast("string"))),
-                            1, 8)),
-        ).alias("_fill"),
-    )
-    tail = (
-        F.when(F.col("doc_id") % 100 < F.lit(hot_pct), F.lit(HOT))
-        .otherwise(F.concat_ws(" ", F.transform(
-            F.sequence(F.lit(1), F.lit(15)),
-            lambda i: F.substring(
-                F.md5(F.concat(F.lit("tail"), F.col("doc_id").cast("string"),
-                               i.cast("string"))), 1, 8))))
-        if hot else
-        F.concat_ws(" ", F.transform(
-            F.sequence(F.lit(1), F.lit(15)),
-            lambda i: F.substring(
-                F.md5(F.concat(F.lit("tail"), F.col("doc_id").cast("string"),
-                               i.cast("string"))), 1, 8)))
-    )
-    return base.select(
-        "doc_id", F.concat_ws(" ", "_fill", tail).alias("text")
-    ).repartition(64).localCheckpoint(eager=True)  # pin bytes: timing
-    # below measures dup_span_stats, not the generator expressions
-
-uni, hot = corpus(False), corpus(True)
-
-def timed(df):
-    t0 = time.time()
-    n = dup_span_stats(df, k=8).count()
-    return time.time() - t0, n
-
-timed(uni)  # warm-up: JIT + worker pools
-pairs = [(timed(uni), timed(hot)) for _ in range(2)]  # interleaved U/H
-u_sec = min(p[0][0] for p in pairs)
-h_sec = min(p[1][0] for p in pairs)
-h_rows = pairs[0][1][1]
-# verify the plant: every hot doc must report dup windows
-n_hot = n_docs * hot_pct // 100
-print(json.dumps({{
-    "n_docs": n_docs, "hot_pct": hot_pct, "planted_docs": n_hot,
-    "uniform_sec": round(u_sec, 2), "hot_sec": round(h_sec, 2),
-    "ratio": round(h_sec / u_sec, 3),
-    "hot_dup_docs": h_rows,
-    "plant_verified": bool(h_rows >= n_hot),
-}}))
-spark.stop()
-"""
-
-
-def hotgram_drive(n_docs: int = HOTGRAM_DOCS, hot_pct: int = 50) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", HOTGRAM_CHILD.format(repo=REPO),
-         str(n_docs), str(hot_pct)],
-        capture_output=True, text=True, timeout=3600, cwd=REPO,
-    )
-    lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-    if not lines:
-        raise RuntimeError(out.stderr[-2000:])
-    return json.loads(lines[-1])
-
-
 def run_release_level(cpus: int, src: str, full: bool = False) -> dict:
     args = [sys.executable, "-c", RELEASE_CHILD.format(repo=REPO),
             str(cpus), src]
@@ -485,7 +384,10 @@ switched on (`run_release(full_gates=True)`): C4 line rules + blocklist
 filter at the clean stage, and PII redaction applied to the released
 text at delivery. Corpus: {rel['n_pages']} prose-mode pages +5% exact
 mirrors +5% near-dups +2.5% repetitive boilerplate +2.5% PII-bearing
-near-copies — every gate and both dedup stages filter real rows.
+near-copies. The repetition gate and both dedup stages remove many
+rows. The language, quality, Gopher, C4 and blocklist gates remove few
+(about 37 rows together in the 120,000-page runs in BENCH.md), because
+every prose page, the de/fr-labelled ones too, carries English text.
 Single timed run per level.
 
 | parallelism | wall-clock (s) | pages/sec |
@@ -643,94 +545,11 @@ def ops_table(ops_ladder: dict) -> str:
 
 def ops_only() -> None:
     """Re-run just the dedup/ANN operator ladder (REP×-amplified jobs)
-    and print the table + raw JSON without rewriting BENCH.md."""
+    and print the table + raw JSON."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     ops_ladder = {c: run_ops_level(c, sf_dir)["ops"] for c in OPS_LADDER}
     print(ops_table(ops_ladder))
     print(json.dumps({"ops_ladder": ops_ladder}))
-
-
-CC_CHILD = r"""
-import sys, time, json
-sys.path.insert(0, {repo!r})
-from narowi_ocr_spark.config import get_spark
-from pyspark.sql import functions as F
-from narowi_ocr_spark.operators.components import connected_components
-
-spark = get_spark(app_name="cc-exp", master="local[8]", shuffle_partitions=8)
-spark.sparkContext.setLogLevel("ERROR")
-# 32M nodes; 25k chains of length 8 among the first 200k ids (99.4%
-# isolated) — the shape of run_release's nodes=all-documents CC, where
-# near-dup participants are a small minority of the corpus. Node count
-# matters: at 4M both variants are fixed-cost-bound on this box
-# (parity, ~0.9-1.0x); at 32M the all-nodes loop's per-round state
-# dominates and the split measures ~10x. The gap GROWS with corpus
-# size — at 10^12 docs the old shape shuffles and checkpoints 10^12
-# labels x rounds, the split ~the near-dup minority only.
-nodes = spark.range({n_nodes}).select(F.col("id"))
-edges = (spark.range(200_000).where(F.col("id") % 8 != 7)
-         .select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")))
-
-
-def allnodes_cc(edges, nodes):
-    # the PRE-FIX shape, kept inline for the controlled comparison
-    # (like rank_global_window): isolated vertices ride every fixpoint
-    # round's union+groupBy and the label-sum probe.
-    sym = (edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-           .unionByName(edges.select(F.col("id_b").alias("src"),
-                                     F.col("id_a").alias("dst")))
-           .distinct().localCheckpoint(eager=True))
-    endpoints = sym.select(F.col("src").alias("id")).distinct()
-    endpoints = endpoints.unionByName(nodes.select("id")).distinct()
-    labels = endpoints.select("id", F.col("id").alias("comp"))
-    labels = labels.localCheckpoint(eager=True)
-
-    def s(lb):
-        return lb.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).first()[0]
-
-    prev = s(labels)
-    for _ in range(25):
-        msgs = sym.join(labels, sym.dst == labels.id).select(
-            F.col("src").alias("id"), "comp")
-        labels = (labels.unionByName(msgs).groupBy("id")
-                  .agg(F.min("comp").alias("comp"))
-                  .localCheckpoint(eager=True))
-        cur = s(labels)
-        if cur == prev:
-            return labels
-        prev = cur
-    raise RuntimeError("no fixpoint")
-
-
-t0 = time.time(); split = connected_components(edges, nodes=nodes)
-n_split = split.count(); t_split = time.time() - t0
-t0 = time.time(); allv = allnodes_cc(edges, nodes)
-n_all = allv.count(); t_all = time.time() - t0
-diff = split.exceptAll(allv).count() + allv.exceptAll(split).count()
-print(json.dumps({{"cc_isolated_split_s": round(t_split, 1),
-                   "cc_all_nodes_s": round(t_all, 1),
-                   "speedup": round(t_all / t_split, 2),
-                   "rows": n_split, "rows_match": n_split == n_all,
-                   "label_diff": diff}}))
-spark.stop()
-"""
-
-
-def cc_only(n_nodes: int = 32_000_000) -> None:
-    """Controlled CC-fixpoint experiment (BENCH.md §release): isolated
-    vertices out of the loop vs the pre-fix all-nodes shape, on a
-    mostly-isolated chain graph. Bit-identical labels asserted.
-    ``--cc-only [n_nodes]``: 32M default shows the at-scale regime;
-    4M shows the fixed-cost-bound parity regime."""
-    out = subprocess.run(
-        [sys.executable, "-c",
-         CC_CHILD.format(repo=REPO, n_nodes=n_nodes)],
-        capture_output=True, text=True, timeout=1800, cwd=REPO,
-    )
-    lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-    if not lines:
-        raise RuntimeError(out.stderr[-2000:])
-    print(lines[-1])
 
 
 def main() -> None:
@@ -739,9 +558,6 @@ def main() -> None:
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--extract-only":
         extract_only(int(sys.argv[2]) if len(sys.argv) > 2 else 400000)
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--cc-only":
-        cc_only(int(sys.argv[2]) if len(sys.argv) > 2 else 32_000_000)
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--release-only":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else RELEASE_PAGES
@@ -756,11 +572,6 @@ def main() -> None:
         rel = release_ladder(n, full=True)
         print(release_md(rel))
         print(json.dumps({"release_ladder_full": rel}))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--hotgram":
-        n = int(sys.argv[2]) if len(sys.argv) > 2 else HOTGRAM_DOCS
-        pct = int(sys.argv[3]) if len(sys.argv) > 3 else 50
-        print(json.dumps({"hotgram": hotgram_drive(n, pct)}))
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--release-level":
         # One timed run of ONE parallelism level of the release job, for
@@ -808,18 +619,7 @@ the shuffle-free extraction ladder above. Efficiency = t_N / (4·t_4N)
 
 {ops_table(ops_ladder)}
 
-The `rank_*` pair is a controlled experiment on the SAME 4M-row exact
-global rank (VERDICT r2 item 1): `rank_global_window` is the pre-fix
-shape (unpartitioned `Window.orderBy` — every row through ONE task's
-sort), `rank_bucketed_dist` is `operators/ranking.bucketed_rank`.
-The window variant is FLAT across core counts — its efficiency number
-is the definition of a serial bottleneck — while the bucketed variant
-scales; at 2 cores the distributed plan pays its extra shuffles, and
-the crossover lands exactly where the fix matters (≥8 cores, i.e. any
-real cluster). quality_deciles / events_rfm / events_power_users /
-vocab_stats / bpe_learn's vocab cap all ride the bucketed path now.
-
-Caveat on the other ops rows (unchanged from r2): at sf0.1 these jobs
+Caveat on the ops rows (unchanged from r2): at sf0.1 these jobs
 are seconds-scale, so per-job fixed costs (stage scheduling, codegen,
 Arrow pool) bound the measurable efficiency well below the dataflow's
 asymptotic scaling; the REP× amplification mitigates but does not
@@ -886,8 +686,6 @@ partitioning concentrates the hot hosts
 Raw JSON: {json.dumps({'ladder': ladder, 'efficiency_2_8': eff, 'efficiency_8_32': eff_8_32, 'ops_ladder': ops_ladder, 'release_ladder': rel})}
 Generated by tools/bench_scaling.py in {round(time.time() - t0, 1)} s.
 """
-    with open(os.path.join(REPO, "BENCH.md"), "w") as f:
-        f.write(md)
     print(md)
 
 

@@ -76,6 +76,9 @@ PARAMS_FILE = "release_params.json"
 
 # Spark job group of each run_release step (manifest ``stage_jobs``)
 JOB_GROUP = "run_release:{}"
+# the description of each step's jobs and SQL executions (tools/plan_audit.py
+# groups the executed plans by it)
+STEP_DESCRIPTION = "release step {}"
 # the local properties setJobGroup sets, restored when run_release exits
 _JOB_GROUP_PROPS = (
     "spark.jobGroup.id",
@@ -86,11 +89,12 @@ _JOB_GROUP_PROPS = (
 
 # --------------------------------------------------------------------------
 # Stage builders — pure DataFrame → DataFrame functions. run_release()
-# wraps each in its checkpoint/resume protocol; release_stage_plans()
-# chains them lazily so tools/plan_audit.py can sweep the release
-# job's physical plans with the same allowlist discipline as the
-# queries (VERDICT r4 item 4: a new SortAggregate/CartesianProduct in
-# the release path must fail the audit, not ship silently).
+# wraps each in its checkpoint/resume protocol and runs every step under
+# the execution description STEP_DESCRIPTION; tools/plan_audit.py reads
+# the final plans Spark recorded under it and checks their flags with
+# the same allowlist discipline as the queries (a new
+# SortAggregate/CartesianProduct in the release path must fail the
+# audit, not ship silently).
 # --------------------------------------------------------------------------
 
 
@@ -194,7 +198,6 @@ def build_clean_ids(
     blocklist: list[str] | None = None,
     apply_c4: bool = True,
     full_gates: bool = False,
-    materialize: bool = True,
 ) -> DataFrame:
     """Cleaning gates (stage 01_clean_ids): the ids whose
     ``clean_flags`` verdict is keep. The survivor set is ids-only (the
@@ -207,12 +210,9 @@ def build_clean_ids(
     (the full-gate plan had 33 ``split(`` instead of 3). The checkpoint
     is the 2-column flag frame, computed by the first action on the
     result (an upstream shuffle, if any, runs when the boundary is
-    built). ``materialize=False`` (plan audit only) leaves the boundary
-    out so nothing executes while the plan is built."""
+    built)."""
     flags = clean_flags(docs, blocklist, apply_c4, full_gates)
-    if materialize:
-        flags = flags.localCheckpoint(eager=False)
-    return flags.where("keep").select("doc_id")
+    return flags.localCheckpoint(eager=False).where("keep").select("doc_id")
 
 
 def build_exact_ids(clean: DataFrame) -> DataFrame:
@@ -223,7 +223,7 @@ def build_exact_ids(clean: DataFrame) -> DataFrame:
     return exact_dedup(clean).select(F.col("keep_id").alias("doc_id"))
 
 
-def near_dup_pairs(uniq: DataFrame, materialize: bool = True) -> DataFrame:
+def near_dup_pairs(uniq: DataFrame) -> DataFrame:
     """Verified near-duplicate pairs ``(id_a, id_b, jaccard)`` of
     ``uniq`` (stage 03_near_ids): LSH candidates → exact-Jaccard verify,
     both over one shingle-hash set per document.
@@ -244,8 +244,7 @@ def near_dup_pairs(uniq: DataFrame, materialize: bool = True) -> DataFrame:
     ``localCheckpoint``: it is computed by the first job that reads it
     and served from the block manager to the second. The verify reads
     the candidate pair list once (``hash_set_jaccard``), so the pairs
-    are not materialized. ``materialize=False`` (plan audit only)
-    leaves the boundary out."""
+    are not materialized."""
     from narowi_ocr_spark.operators.dedup import (
         PROD_NUM_PERM,
         PROD_ROWS_PER_BAND,
@@ -254,16 +253,14 @@ def near_dup_pairs(uniq: DataFrame, materialize: bool = True) -> DataFrame:
         hash_sets,
     )
 
-    hs = hash_sets(uniq)
-    if materialize:
-        hs = hs.localCheckpoint(eager=False)
+    hs = hash_sets(uniq).localCheckpoint(eager=False)
     cand = hash_set_candidates(
         hs, num_perm=PROD_NUM_PERM, rows_per_band=PROD_ROWS_PER_BAND
     )
     return hash_set_jaccard(hs, cand, threshold=0.8)
 
 
-def build_near_ids(uniq: DataFrame, materialize: bool = True) -> DataFrame:
+def build_near_ids(uniq: DataFrame) -> DataFrame:
     """Near-dedup survivor ids (stage 03_near_ids): the verified pairs
     (``near_dup_pairs``) → connected components → the ids of ``uniq``
     that represent their component (``component_keep_ids``: every id
@@ -275,7 +272,7 @@ def build_near_ids(uniq: DataFrame, materialize: bool = True) -> DataFrame:
         connected_components,
     )
 
-    labels = connected_components(near_dup_pairs(uniq, materialize))
+    labels = connected_components(near_dup_pairs(uniq))
     return component_keep_ids(uniq.select("doc_id"), labels, "doc_id")
 
 
@@ -318,41 +315,6 @@ def build_wet(assigned: DataFrame) -> DataFrame:
         ts_col="warc_ts",
         text_col="text",
     )
-
-
-def release_stage_plans(
-    pages: DataFrame,
-    blocklist: list[str] | None = None,
-    apply_c4: bool = True,
-    full_gates: bool = False,
-) -> dict[str, DataFrame]:
-    """Lazily chain every release stage off ``pages`` — NOTHING
-    executes (no checkpoints, no counts, no hash-set materialization),
-    so tools/plan_audit.py can inspect each stage's physical plan
-    exactly as run_release() would compose it. Downstream stages read
-    their upstream through the lazy chain instead of run_release()'s
-    checkpoint parquet; the logical dataflow is identical, only the
-    exchange-with-disk boundary differs."""
-    docs = build_docs(pages)
-    clean_ids = build_clean_ids(
-        docs, blocklist, apply_c4, full_gates, materialize=False
-    )
-    clean = docs.join(clean_ids, "doc_id")
-    exact_ids = build_exact_ids(clean)
-    uniq = clean.join(exact_ids, "doc_id")
-    near_ids = build_near_ids(uniq, materialize=False)
-    released = build_released_text(
-        docs.join(near_ids, "doc_id"), pii_scrub=full_gates
-    )
-    assigned = build_train_shards(released)
-    return {
-        "release:00_docs": docs,
-        "release:01_clean_ids": clean_ids,
-        "release:02_exact_ids": exact_ids,
-        "release:03_near_ids": near_ids,
-        "release:shards": assigned,
-        "release:wet": build_wet(assigned),
-    }
 
 
 def _fs(spark: SparkSession, path: str):
@@ -494,8 +456,10 @@ def run_release(
     and the work feeding it, such as the near-dedup connected-components
     checkpoints; a resumed stage's count) and
     ``lineage`` (the partition histogram of the delivered shards). Every
-    step runs under its own job group, ``run_release:<step>``, and the
-    count is read from ``statusTracker().getJobIdsForGroup``. The
+    step runs under its own job group, ``run_release:<step>``, described
+    as ``release step <step>`` (``STEP_DESCRIPTION``, which also labels
+    the step's SQL executions), and the count is read from
+    ``statusTracker().getJobIdsForGroup``. The
     manifest itself is written from the driver, not by a job. The
     caller's job group is restored on exit.
 
@@ -544,7 +508,7 @@ def run_release(
         """Attribute every Spark job from here on to step ``name``."""
         gid = JOB_GROUP.format(name)
         prior_jobs[name] = set(tracker.getJobIdsForGroup(gid))
-        sc.setJobGroup(gid, f"release step {name}")
+        sc.setJobGroup(gid, STEP_DESCRIPTION.format(name))
 
     # once a stage recomputes, every later stage recomputes too: its
     # checkpoint was derived from the replaced one
