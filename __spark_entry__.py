@@ -2562,25 +2562,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["incremental_dedup"] = incremental_dedup_q
 
-    def incremental_dedup_bloom_q(spark, sf_dir):
-        """Bloom-pruned twin of incremental_dedup: batch fingerprints
-        are pre-screened against a broadcast Bloom bitmap built from
-        the index by a distributed bit_or aggregation; only the
-        maybe-duplicate sliver pays for the exact anti-join. Output is
-        EXACTLY incremental_dedup's (the filter has no false negatives,
-        so it only routes rows) — hence the identical oracle."""
-        from narowi_ocr_spark.operators.dedup import (
-            build_fingerprint_index,
-            incremental_dedup_bloom,
-        )
-
-        docs = _docs(spark, sf_dir)
-        index = build_fingerprint_index(docs)
-        incoming = _dup_corpus(docs)
-        return incremental_dedup_bloom(incoming, index)
-
-    q["incremental_dedup_bloom"] = incremental_dedup_bloom_q
-
     def source_caps(spark, sf_dir):
         """Per-source document quota (the C4/RefinedWeb-style per-domain
         cap): keep the first 10 docs of every source by doc_id order."""
@@ -6156,8 +6137,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "emb_topk_exact", "events_hourly", "events_json",
         "events_sessions", "exact_dedup", "extract_main_text",
         "extraction_modes", "fingerprints", "frame_samples",
-        "incremental_dedup", "incremental_dedup_bloom",
-        "jaccard_near_dups", "lang_id", "lang_id_v2", "lsh_pairs",
+        "incremental_dedup", "jaccard_near_dups", "lang_id",
+        "lang_id_v2", "lsh_pairs",
         "media_features", "media_resized", "minhash_bands",
         "multimodal_meta", "number_spans", "number_validation",
         "pii_scrub", "quality_deciles",
@@ -8217,10 +8198,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT f.doc_id, f.fp, c.text
         FROM fresh f JOIN corpus c ON c.doc_id = f.doc_id
     """
-
-    # Bloom pre-screen is routing-only (no false negatives): the result
-    # is definitionally identical to the exact incremental path.
-    o["incremental_dedup_bloom"] = o["incremental_dedup"]
 
     o["source_caps"] = """
         WITH r AS (

@@ -4,6 +4,7 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
 line: {"metric": ..., "value": <total sec>, "unit": "sec",
 "queries": {name: sec}, "sf": ..., "extraction_docs_per_sec": ...}.
+``$SPARK_GRAFT_CPUS`` defaults to the cores this process may run on.
 
 The flagship extraction measurement uses a synthesized deterministic
 pages corpus (FIXTURES.md §1 — no external data) sized by
@@ -57,7 +58,7 @@ def teardown_watchdog(seconds: float):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "20000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
@@ -237,20 +238,12 @@ def main() -> None:
     from narowi_ocr_spark.operators.dedup import (
         build_fingerprint_index,
         incremental_dedup,
-        incremental_dedup_bloom,
     )
 
-    # crawl-refresh twins: the Bloom variant routes definitely-new
-    # fingerprints past the anti-join (output identical by construction)
     _idx = build_fingerprint_index(docs)
     bench(
         "incr_dedup_exact",
         lambda: materialize(incremental_dedup(corpus, _idx)),
-        extra_set=True,
-    )
-    bench(
-        "incr_dedup_bloom",
-        lambda: materialize(incremental_dedup_bloom(corpus, _idx)),
         extra_set=True,
     )
     bench("minhash_lsh_pairs", lambda: materialize(lsh_candidate_pairs(corpus)))

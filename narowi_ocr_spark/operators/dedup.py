@@ -8,12 +8,10 @@ near-duplicates for web crawling", WWW 2007), and n-gram Jaccard
 verification.
 
 All of these are Catalyst expression trees (``with_simhash_arrow`` is
-the one Arrow kernel). Every hash whose value reaches query output is
-derived from ``md5``, so the DuckDB oracles in ``__spark_entry__.py``
-reproduce it bit for bit: the MinHash signature and the Jaccard verify
-both read one md5-derived long per shingle (``shingle_hashes``).
-``xxhash64`` appears only where the value never leaves the operator
-(Bloom probe positions).
+the one Arrow kernel). Every hash is derived from ``md5``, so the
+DuckDB oracles in ``__spark_entry__.py`` reproduce it bit for bit: the
+MinHash signature and the Jaccard verify both read one md5-derived long
+per shingle (``shingle_hashes``).
 
 Scale notes (the part that matters at 100 TB):
   - exact dedup is one shuffle on a 32-byte digest — the payload column is
@@ -794,31 +792,33 @@ def incremental_near_dup(
     ≥ ``threshold``; ``new_id``s absent from the result are genuinely
     novel content and proceed to extraction.
 
-    Dataflow: both sides reduce to (id, band_idx, band_hash) triples
-    (``minhash_bands`` — narrow, only ~48-byte rows shuffle);
-    candidates come from the band equi-join NEW × INDEX (never new×new
-    or index×index — re-crawls only need novelty vs the corpus, which
-    keeps the pair count linear in the batch, not the corpus);
-    verification builds shingle-hash sets only for documents in a
-    candidate pair, once each (``_hash_sets``: a join on the distinct
-    candidate ids, at the session's shuffle width). The signatures are
-    not confined that way: ``minhash_bands(index_docs)`` shingles every
-    index document on every call, so this function's cost grows with
-    the corpus; the production shape below keeps the index signatures
-    persisted instead.
+    Dataflow: each side's text is read once. ``hash_sets`` turns every
+    document into one (id, shingle-hash array) row, and that table
+    passes a lazy ``localCheckpoint``: the first stage that reads it
+    computes it and the block manager serves it to the second. The
+    bands (``_bands`` — narrow, only ~48-byte rows shuffle) and the
+    Jaccard verify both read it, so no shingle is hashed twice and no
+    text shuffles. Candidates come from the band equi-join NEW × INDEX
+    (never new×new or index×index — re-crawls only need novelty vs the
+    corpus, which keeps the pair count linear in the batch, not the
+    corpus). The hashing is not confined that way: every index document
+    is shingled on every call, so this function's cost grows with the
+    corpus; the production shape below keeps the index side persisted
+    instead.
 
-    Production shape: the index side's band triples and shingle-digest
-    arrays are PERSISTED tables (written bucketed by (band_idx,
-    band_hash) and id respectively), so the candidate join is
-    co-located with no exchange on the corpus side and each refresh
-    recomputes signatures only for the new batch; this function derives
-    them from ``index_docs`` inline because the dev harness has no
-    persistent store. After the run, union the novel docs' bands into
-    the index — exactly the fingerprint-index lifecycle of
-    ``build_fingerprint_index``.
+    Production shape: the index side's band triples and hash sets are
+    PERSISTED tables (written bucketed by (band_idx, band_hash) and id
+    respectively), so the candidate join is co-located with no exchange
+    on the corpus side and each refresh hashes only the new batch; this
+    function derives them from ``index_docs`` inline because the dev
+    harness has no persistent store. After the run, union the novel
+    docs' bands into the index — exactly the fingerprint-index
+    lifecycle of ``build_fingerprint_index``.
     """
-    bn = minhash_bands(new_docs, text_col, id_col)
-    bi = minhash_bands(index_docs, text_col, id_col)
+    hn = hash_sets(new_docs, text_col, id_col).localCheckpoint(eager=False)
+    hi = hash_sets(index_docs, text_col, id_col).localCheckpoint(eager=False)
+    bn = _bands(hn, NUM_PERM, ROWS_PER_BAND)
+    bi = _bands(hi, NUM_PERM, ROWS_PER_BAND)
     cand = (
         bn.alias("n")
         .join(
@@ -831,134 +831,13 @@ def incremental_near_dup(
         )
         .distinct()
     )
-    sn = _hash_sets(
-        new_docs, cand.select(F.col("new_id").alias("id")), text_col, id_col
-    ).select(F.col("id").alias("new_id"), F.col("hs").alias("sh_a"))
-    si = _hash_sets(
-        index_docs, cand.select(F.col("index_id").alias("id")), text_col, id_col
-    ).select(F.col("id").alias("index_id"), F.col("hs").alias("sh_b"))
+    sn = hn.select(F.col("id").alias("new_id"), F.col("hs").alias("sh_a"))
+    si = hi.select(F.col("id").alias("index_id"), F.col("hs").alias("sh_b"))
     paired = cand.join(sn, "new_id").join(si, "index_id")
     return (
         _with_once(paired, "jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
         .select("new_id", "index_id", "jaccard")
-    )
-
-
-# ------------------------------------------- bloom-pruned incremental
-
-def bloom_build(
-    index: DataFrame, fp_col: str = "fp", m_bits: int = 1 << 14, k: int = 5
-) -> DataFrame:
-    """Distributed Bloom-filter build over a corpus fingerprint index:
-    explode the ``k`` probe positions per fingerprint, OR the bits into
-    64-bit words with a partial-aggregating ``bit_or``, then densify
-    into ONE ``array<long>`` row of ``m_bits/64`` words.
-
-    Scale shape: the only shuffle moves ``(word_idx, word_bits)`` pairs
-    — at most ``m_bits/64`` distinct groups regardless of index size —
-    and map-side combine collapses each partition to ≤ ``m_bits/64``
-    rows before the exchange. The finished bitmap is broadcast-sized by
-    construction (2²⁷ bits = 16 MB covers ~10⁹ fingerprints at ~1% FPR
-    with k=9; size via m/n = -ln(p)/ln²2, k = (m/n)·ln 2).
-
-    Bloom filters of two indexes OR-merge (``bloom_merge``), so a crawl
-    pipeline maintains the bitmap INCREMENTALLY alongside the index —
-    each refresh ORs in the new batch's bits instead of rebuilding.
-    Uses ``xxhash64`` (no oracle-parity constraint: the filter only
-    prunes, it never appears in query output)."""
-    assert m_bits % 64 == 0, (
-        "m_bits must be a multiple of 64 — probe positions beyond the "
-        "last full word would index past the dense bitmap (NULL probes "
-        "silently drop rows from BOTH routes of the bloom split)"
-    )
-    n_words = m_bits // 64
-    pos = F.explode(
-        F.array(
-            *[
-                F.pmod(F.xxhash64(F.col(fp_col), F.lit(i)), F.lit(m_bits))
-                for i in range(k)
-            ]
-        )
-    ).alias("pos")
-    bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pmod(pos, 64) AS INT))")
-    word_rows = (
-        index.select(pos)
-        .select(F.shiftright(F.col("pos"), 6).alias("w"), bit.alias("m"))
-        .groupBy("w")
-        .agg(F.bit_or("m").alias("bits"))
-    )
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(n_words - 1)),
-        lambda i: F.coalesce(
-            F.element_at(F.col("mm"), i.cast("long")), F.lit(0).cast("long")
-        ),
-    )
-    return word_rows.agg(
-        F.map_from_entries(F.collect_list(F.struct("w", "bits"))).alias("mm")
-    ).select(dense.alias("bitmap"))
-
-
-def bloom_merge(a: Column | str, b: Column | str) -> Column:
-    """OR-merge two equal-geometry Bloom bitmaps (array<long>)."""
-    return F.zip_with(_col(a), _col(b), lambda x, y: x.bitwiseOR(y))
-
-
-def bloom_might_contain(
-    bitmap: str = "bitmap", fp: str = "fp", m_bits: int = 1 << 14, k: int = 5
-) -> Column:
-    """True iff all ``k`` probe bits for ``fp`` are set — one Catalyst
-    expression over the broadcast bitmap, no shuffle, no Python.
-    ``bitmap``/``fp`` are column NAMES (the probe literals must be typed
-    identically to ``bloom_build``'s: integer ``i``, so the xxhash64
-    seeds agree)."""
-    assert m_bits % 64 == 0, "m_bits must match bloom_build's (×64) geometry"
-    terms = []
-    for i in range(k):
-        p = f"pmod(xxhash64({fp}, {i}), {m_bits})"
-        word = f"element_at({bitmap}, CAST(shiftright({p}, 6) AS INT) + 1)"
-        mask = f"shiftleft(CAST(1 AS BIGINT), CAST(pmod({p}, 64) AS INT))"
-        terms.append(f"(({word} & {mask}) != 0)")
-    return F.expr(" AND ".join(terms))
-
-
-def incremental_dedup_bloom(
-    new_docs: DataFrame,
-    index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    m_bits: int = 1 << 14,
-    k: int = 5,
-) -> DataFrame:
-    """``incremental_dedup`` with a Bloom-filter fast path: batch
-    fingerprints whose probe bits are not all set are DEFINITELY absent
-    from the index (no false negatives) and skip the anti-join
-    entirely; only the maybe-duplicate remainder — the true-dup
-    fraction plus the filter's ~1% false positives — pays for the exact
-    anti-join against the index. Output is EXACTLY ``incremental_dedup``'s
-    (the filter only routes rows, it never decides).
-
-    Why this matters at 100 TB: the fingerprint index is corpus-sized,
-    but the bitmap is megabytes and OR-maintained incrementally
-    (``bloom_merge``), so a mostly-novel crawl batch resolves almost
-    entirely against a broadcast bitmap — the per-batch anti-join
-    touches only the candidate sliver, and partition-prunes the
-    fp-bucketed index to matching buckets."""
-    fps = new_docs.select(F.col(id_col), fingerprint(text_col).alias("fp"))
-    # materialize the batch reps once: the maybe/definitely split below
-    # consumes them through TWO filters, which would otherwise re-run
-    # the md5 fingerprint scan and the groupBy exchange per branch
-    batch_reps = (
-        fps.groupBy("fp").agg(F.min(id_col).alias(id_col)).localCheckpoint()
-    )
-    bloom = bloom_build(index, m_bits=m_bits, k=k)
-    probed = batch_reps.crossJoin(F.broadcast(bloom))
-    maybe = bloom_might_contain("bitmap", "fp", m_bits, k)
-    definitely_new = probed.where(~maybe).select("fp", id_col)
-    candidates = probed.where(maybe).select("fp", id_col)
-    fresh = definitely_new.unionByName(candidates.join(index, "fp", "left_anti"))
-    return fresh.join(new_docs, id_col).select(
-        id_col, "fp", *[c for c in new_docs.columns if c != id_col]
     )
 
 
@@ -987,17 +866,17 @@ def dedup_eval(
     division drift).
     """
     key = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+    # the sample's hash sets, computed by the truth job and read back by
+    # the candidate job: each sampled document is shingled once
     sampled = df.where(key < F.lit(hex_lt))
-    sh = sampled.select(
-        F.col(id_col).alias("id"), shingle_hashes(text_col).alias("sh")
-    )
-    a, b = sh.alias("a"), sh.alias("b")
+    hs = hash_sets(sampled, text_col, id_col).localCheckpoint(eager=False)
+    a, b = hs.alias("a"), hs.alias("b")
     truth = (
         a.join(b, F.col("a.id") < F.col("b.id"))  # eval-only all-pairs
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            _jaccard("a.sh", "b.sh").alias("jaccard"),
+            _jaccard("a.hs", "b.hs").alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
         # materialized once: consumed by both the hit join and n_truth —
@@ -1005,9 +884,7 @@ def dedup_eval(
         # winnow_near_pairs above)
         .localCheckpoint(eager=True)
     )
-    pred = lsh_candidate_pairs(sampled, text_col, id_col).localCheckpoint(
-        eager=True
-    )
+    pred = hash_set_candidates(hs).localCheckpoint(eager=True)
     hit = pred.join(truth.select("id_a", "id_b"), ["id_a", "id_b"])
     nt = truth.agg(F.count("*").cast("long").alias("n_truth"))
     np_ = pred.agg(F.count("*").cast("long").alias("n_pred"))

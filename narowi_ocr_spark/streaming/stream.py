@@ -313,11 +313,9 @@ def run_ingest_stream(
     the batch until the final id-join pullback inside
     ``incremental_dedup``. The per-batch index read is a parquet scan of
     fingerprints only; in production the index is written bucketed by
-    ``fp`` so the anti-join co-locates, and the Bloom-pruned variant
-    (``incremental_dedup_bloom``) screens mostly-novel batches against a
-    broadcast bitmap maintained incrementally by OR-merge. In-horizon
-    URL-level dedup (``dedup_stream``) composes upstream of this sink to
-    drop same-key re-crawls before they are even fingerprinted.
+    ``fp`` so the anti-join co-locates. In-horizon URL-level dedup
+    (``dedup_stream``) composes upstream of this sink to drop same-key
+    re-crawls before they are even fingerprinted.
 
     ``source`` overrides the default pages-schema file stream (any
     streaming DataFrame with ``id_col`` and ``text_col``)."""

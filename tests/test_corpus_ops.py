@@ -248,55 +248,6 @@ def test_incremental_dedup_keeps_only_unseen(spark):
     assert got == [(11, "brand new"), (13, "another new")]
 
 
-def test_incremental_dedup_bloom_matches_exact_path(spark):
-    from narowi_ocr_spark.operators.dedup import (
-        bloom_build,
-        bloom_merge,
-        bloom_might_contain,
-        build_fingerprint_index,
-        incremental_dedup,
-        incremental_dedup_bloom,
-    )
-
-    old = spark.createDataFrame(
-        [Row(doc_id=i, text=f"seen document number {i}") for i in range(40)]
-    )
-    index = build_fingerprint_index(old)
-    batch = spark.createDataFrame(
-        [Row(doc_id=100 + i, text=f"seen document number {i}") for i in range(10)]
-        + [Row(doc_id=200 + i, text=f"fresh document number {i}") for i in range(10)]
-        + [Row(doc_id=300, text="fresh document number 0")]  # in-batch dup
-    )
-    exact = sorted(
-        (r["doc_id"], r["fp"]) for r in incremental_dedup(batch, index).collect()
-    )
-    bloomed = sorted(
-        (r["doc_id"], r["fp"])
-        for r in incremental_dedup_bloom(batch, index).collect()
-    )
-    assert bloomed == exact and len(exact) == 10
-
-    # no false negatives: every indexed fingerprint must probe positive
-    bloom = bloom_build(index)
-    misses = (
-        index.crossJoin(F.broadcast(bloom))
-        .where(~bloom_might_contain("bitmap", "fp"))
-        .count()
-    )
-    assert misses == 0
-
-    # OR-merge of two halves == build over the union
-    lo = build_fingerprint_index(old.where(F.col("doc_id") < 20))
-    hi = build_fingerprint_index(old.where(F.col("doc_id") >= 20))
-    merged = (
-        bloom_build(lo)
-        .crossJoin(bloom_build(hi).select(F.col("bitmap").alias("b2")))
-        .select(bloom_merge("bitmap", "b2").alias("bitmap"))
-        .collect()[0]["bitmap"]
-    )
-    assert merged == bloom.collect()[0]["bitmap"]
-
-
 def test_passage_dedup_first_occurrence_wins(spark):
     # 4-word passages; doc 0 owns passages P0 P1; doc 1 repeats P1 then
     # adds a novel passage; doc 2 is an exact copy of doc 0; doc 3 has a

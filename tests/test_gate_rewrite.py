@@ -139,6 +139,16 @@ def test_fused_verdicts_equal_the_stat_table_forms(docs, ref):
     assert {i for i in ids if planted[i] in ("organic", "near_dup", "exact_dup")} <= full
 
 
+def test_empty_blocklist_blocks_nothing(spark):
+    """An empty blocklist has no terms; only ``None`` selects the
+    default list."""
+    from run_release_job import clean_flags
+
+    docs = spark.createDataFrame([(1, BLOCK)], "doc_id long, text string")
+    assert clean_flags(docs, [], apply_c4=False).collect()[0]["keep"]
+    assert not clean_flags(docs, apply_c4=False).collect()[0]["keep"]
+
+
 def test_preserve_forms_select_the_stat_forms_verdicts(docs):
     """Each gate's preserve form appends the stat form's keep column, and
     leaves the input columns (the shared token array included) as they

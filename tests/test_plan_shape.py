@@ -360,39 +360,6 @@ def test_attribution_batch_is_equi_join_on_user(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_bloom_build_shuffles_only_bitmap_words(spark, tmp_path):
-    """Over a MATERIALIZED index (production state: the index is a
-    persisted table), the Bloom build's only hash exchange carries
-    (word_idx, bits) pairs — never fingerprints or text — and the probe
-    side routes the batch through a broadcast of the one-row bitmap."""
-    from pyspark.sql import Row
-
-    from narowi_ocr_spark.operators.dedup import (
-        bloom_build,
-        build_fingerprint_index,
-        incremental_dedup_bloom,
-    )
-
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"document {i}") for i in range(50)]
-    )
-    idx_dir = str(tmp_path / "fp_index")
-    build_fingerprint_index(docs).write.parquet(idx_dir)
-    index = spark.read.parquet(idx_dir)
-
-    plan = _physical_plan(bloom_build(index))
-    # exactly one hash exchange (the word groupBy); the final
-    # densify-to-one-row agg is a SinglePartition exchange
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "fp" not in line, f"fingerprints shuffled:\n{line}"
-
-    full = _physical_plan(incremental_dedup_bloom(docs, index))
-    assert "BroadcastExchange" in full, full
-    assert "CartesianProduct" not in full, full
-
-
 def test_tpch_q19_disjunction_pushdown(spark):
     """Catalyst must extract the per-side disjunctions of the
     OR-of-ANDs predicate and push them into BOTH parquet scans (the
@@ -826,3 +793,31 @@ def test_near_dedup_reads_each_document_once(spark):
     assert exchanges
     for ex in exchanges:
         assert not re.search(r"\btext#", ex), ex
+
+
+def test_incremental_near_dup_and_dedup_eval_hash_each_document_once(spark):
+    """``incremental_near_dup`` evaluates the shingle hash once per side
+    and ``dedup_eval`` once for its sample, although the bands and the
+    verify (the truth join and the candidates) both read the hash sets:
+    counted over every plan the call executed, read back from Spark's
+    SQL status store."""
+    from narowi_ocr_spark.operators.dedup import dedup_eval, incremental_near_dup
+    from plan_audit import executed_plans, execution_mark
+
+    body = " ".join(f"w{i}" for i in range(40))
+    docs = spark.createDataFrame(
+        [(i, f"{body} tail{i % 3}") for i in range(6)], "doc_id long, text string"
+    )
+
+    def shingle_hashes_executed(run) -> int:
+        since = execution_mark(spark)
+        assert run().collect()
+        return sum(
+            plan.count("conv(substring(md5(")
+            for _, plan in executed_plans(spark, since)
+        )
+
+    new, index = docs.where("doc_id % 2 = 1"), docs.where("doc_id % 2 = 0")
+    assert shingle_hashes_executed(lambda: incremental_near_dup(new, index)) == 2
+    # hex_lt="g" samples every document (md5 hex digits are all below it)
+    assert shingle_hashes_executed(lambda: dedup_eval(docs, hex_lt="g")) == 1

@@ -63,7 +63,6 @@ ALLOWED = {
     "weighted_sample": ("BNLJ,SinglePart", "broadcast weight-sum scalar"),
     "doc_keywords": ("BNLJ,SinglePart", "broadcast corpus doc-count scalar"),
     "vocab_stats": ("BNLJ,SinglePart", "broadcast vocab totals (3 scalars)"),
-    "incremental_dedup_bloom": ("BNLJ,SinglePart", "broadcast aggregated Bloom bitmap"),
     "kmeans_cells": ("BNLJ,SinglePart", "broadcast k centroids"),
     "host_reciprocity": ("BNLJ,SinglePart", "broadcast edge-count scalar"),
     "dedup_eval": ("BNLJ,SinglePart", "sample-confined truth pairs (documented O(sample^2))"),

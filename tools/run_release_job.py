@@ -178,7 +178,9 @@ def clean_flags(
     if apply_c4:
         chain = ts.with_c4_rules(chain, preserve=True)
         keeps.append(F.col("c4_keep"))
-    chain = blocklist_gate(chain, blocklist or DEFAULT_BLOCKLIST, preserve=True)
+    if blocklist is None:
+        blocklist = DEFAULT_BLOCKLIST
+    chain = blocklist_gate(chain, blocklist, preserve=True)
     keeps.append(F.col("bl_keep"))
     if full_gates:
         chain = ts.with_gopher_rules(
@@ -487,7 +489,7 @@ def run_release(
         "pages_path": pages_path,
         "apply_c4": apply_c4,
         "full_gates": full_gates,
-        "blocklist": list(blocklist or DEFAULT_BLOCKLIST),
+        "blocklist": list(DEFAULT_BLOCKLIST if blocklist is None else blocklist),
     }
     if resume:
         _check_resume(spark, out_path, params)
