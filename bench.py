@@ -13,8 +13,10 @@ tokenize → score → strip → span-extract pipeline to a noop sink (full
 materialization, no driver collect).
 
 Scaling-efficiency evidence (north_rule N vs 4N executors, sandbox proxy
-local[8] vs local[32]) is produced by tools/bench_scaling.py and recorded
-in BENCH.md — not here, to keep the driver's per-round bench single-config.
+local[N] vs local[4N]) comes from running a harness under
+``tools/core_ladder.py`` (``python tools/core_ladder.py python3 bench.py``
+for this one) and is recorded in BENCH.md; this harness stays
+single-config.
 """
 
 from __future__ import annotations
@@ -81,8 +83,10 @@ def main() -> None:
         app_name="narowi-bench",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
-        # sandbox corpus is ~3 KB/page: shrink split size so the scan
-        # exposes full parallelism (see tools/bench_scaling.py note)
+        # the synthesized pages are ~3 KB each (~60 MB at 20k pages) and
+        # the cached corpus keeps the file count of the run that wrote
+        # it; 8 MB splits give the scan several tasks per core whatever
+        # that count (Spark's 128 MB default would leave cores idle)
         extra_conf={"spark.sql.files.maxPartitionBytes": "8m"},
     )
     spark.sparkContext.setLogLevel("ERROR")

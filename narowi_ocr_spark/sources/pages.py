@@ -90,8 +90,8 @@ def _filler(i: int, k: int, vocab_scale: int = 1, prose: bool = False) -> str:
     ``prose=True`` (vocab_scale > 1 only) shapes the same diverse text
     like organic English so the FULL curation gate stack (language ID,
     quality score, Gopher rules, C4 line rules) passes at realistic
-    rates instead of rejecting the corpus wholesale — see the
-    full-gates release ladder in tools/bench_scaling.py."""
+    rates instead of rejecting the corpus wholesale (BENCH.md's
+    full-gate release ladder ran on it)."""
     n_words = 20 + _h(i, 10 + k) % 60
     words = []
     for j in range(n_words):

@@ -1,4 +1,5 @@
-"""heavy_hitters (sketch-then-verify), dsir_weights, gemm_topk tests."""
+"""heavy_hitters (sketch-then-verify), host-key salting, dsir_weights,
+gemm_topk tests."""
 
 import hashlib
 import math
@@ -9,6 +10,12 @@ import pytest
 from narowi_ocr_spark.operators.corpus import DSIR_SCALE, dsir_weights
 from narowi_ocr_spark.operators.similarity import Q_SCALE, gemm_topk
 from narowi_ocr_spark.operators.skew import heavy_hitters
+from narowi_ocr_spark.sources.pages import synth_pages
+from narowi_ocr_spark.sources.sink import (
+    collect_partition_histogram,
+    salted_repartition,
+    url_host,
+)
 
 
 def test_heavy_hitters_exact_over_partitions(spark):
@@ -37,6 +44,21 @@ def test_heavy_hitters_none(spark):
 
 def _bucket(term: str, n: int = 256) -> int:
     return int(hashlib.md5(term.encode()).hexdigest()[:4], 16) % n
+
+
+def test_salted_host_key_flattens_hot_host_partitions(spark):
+    # synth_pages puts about 20% of its pages on three hot hosts. Split
+    # 32 ways by the raw host, each hot host fills one partition; the
+    # salted key spreads each over 8 keys.
+    pages = synth_pages(spark, 4000, partitions=4).select("url")
+
+    def max_over_mean(df):
+        rows = [h["rows"] for h in collect_partition_histogram(df)]
+        return max(rows) / (sum(rows) / 32)
+
+    raw = max_over_mean(pages.repartition(32, url_host("url")))
+    salted = max_over_mean(salted_repartition(pages, "url", 32))
+    assert salted < raw
 
 
 def test_dsir_weights_matches_python_replica(spark):

@@ -3,8 +3,8 @@
 # the extraction job over an Iceberg pages table at N executors.
 #
 # The same job rerun with 4N executors on the same input is the scaling
-# measurement; the sandbox proxy (local[N] vs local[4N], no cluster here)
-# is tools/bench_scaling.py — see BENCH.md / BASELINE.md.
+# measurement; the single-host proxy (local[N] vs local[4N]) is
+# tools/core_ladder.py over a benchmark harness — see BENCH.md / BASELINE.md.
 #
 # Usage: tools/submit_cluster.sh <master> <num_executors> <pages_path> <out_path> [job]
 #   job: extraction (default) | release | training — selects
