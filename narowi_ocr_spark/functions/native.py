@@ -6,6 +6,8 @@ trees.
 
 from __future__ import annotations
 
+from math import floor
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -44,9 +46,7 @@ def round4(col: Column) -> Column:
 
 def round4_py(x: float) -> float:
     """Python mirror of ``round4`` — same IEEE ops, bit-identical."""
-    import math
-
-    return math.floor(x * 10000.0 + 0.5) / 10000.0
+    return floor(x * 10000.0 + 0.5) / 10000.0
 
 # Accepted formats of validate_temperature_format
 # (reference pattern_matcher.py:300-305). Java and Python regex agree on

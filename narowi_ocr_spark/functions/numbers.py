@@ -31,9 +31,8 @@ from narowi_ocr_spark.functions.patterns import (
     NUMBER_UNIT_RANGES,
     READING_PATTERNS,
     compiled_number_patterns,
+    has_digit,
 )
-
-_HAS_DIGIT = _re.compile(r"\d").search
 
 # Category iteration order == dict insertion order in the pattern table,
 # matching the reference's dict iteration (number_extractor.py:90).
@@ -41,13 +40,11 @@ _HAS_DIGIT = _re.compile(r"\d").search
 
 def extract_numbers_py(text: str, confidence: float) -> list[dict]:
     """Pure-Python single-document kernel; runs inside Arrow batches only."""
-    if text is None:
-        return []
-    normalized = text.replace("\r\n", "\n").replace("\r", "\n")
     # Every numeric pattern requires digits; digit-free documents (most
     # web text) short-circuit — semantics-preserving fast path.
-    if not _HAS_DIGIT(normalized):
+    if text is None or not has_digit(text):
         return []
+    normalized = text.replace("\r\n", "\n").replace("\r", "\n")
     spans: list[dict] = []
     for category, patterns in compiled_number_patterns().items():
         for pattern in patterns:

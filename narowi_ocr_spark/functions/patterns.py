@@ -247,3 +247,20 @@ def compiled_line_dispatch() -> tuple[re.Pattern, re.Pattern, re.Pattern]:
         re.compile(*LINE_PREFIX_P),
         re.compile(*PAIN_HINT),
     )
+
+
+_ANY_DIGIT = re.compile(r"\d").search
+
+
+def has_digit(text: str) -> bool:
+    """Whether ``text`` holds a ``\\d`` (any Unicode decimal digit). Every
+    reading and numeric pattern needs one, so a text without is an exact
+    skip. On ASCII text (``str.isascii`` is O(1)) ``\\d`` is exactly 0-9,
+    and ten substring scans cost a fraction of one regex scan."""
+    if text.isascii():
+        return (
+            "0" in text or "1" in text or "2" in text or "3" in text
+            or "4" in text or "5" in text or "6" in text or "7" in text
+            or "8" in text or "9" in text
+        )
+    return _ANY_DIGIT(text) is not None

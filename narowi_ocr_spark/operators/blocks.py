@@ -42,8 +42,9 @@ _NOISE_RE = re.compile(
 )
 
 # Block-level open tags define segment boundaries (R1 — contour detection).
+# (?!/) only skips closing tags early: no alternative starts with "/".
 _BLOCK_OPEN_RE = re.compile(
-    r"<(p|div|li|h[1-6]|td|th|title|nav|footer|header|article|section"
+    r"<(?!/)(p|div|li|h[1-6]|td|th|title|nav|footer|header|article|section"
     r"|blockquote|pre|ul|ol|tr|table)\b[^>]*>",
     re.IGNORECASE,
 )
@@ -52,42 +53,47 @@ _ANCHOR_RE = re.compile(r"<a\b[^>]*>(.*?)</a\s*>", re.IGNORECASE | re.DOTALL)
 _TAG_RE = re.compile(r"<[^>]*>")
 
 
-def _block_text(fragment: str) -> str:
-    # tag-strip only when a tag can exist (anchor inner texts usually
-    # can't) — html.unescape already fast-paths the no-"&" case
-    if "<" in fragment:
-        fragment = _TAG_RE.sub("", fragment)
-    return _html.unescape(fragment).strip()
+def iter_blocks(payload: bytes | str | None) -> Iterator[tuple[str, str, int, int]]:
+    """The one block walk: ``(tag, text, text_len, link_len)`` for each
+    non-empty DOM block of one document, in document order. A block is
+    the span from a block-level open tag to the next one (text before
+    the first is not a block); its text is tag-stripped, unescaped and
+    stripped, and its link length sums its anchors' texts, capped at
+    the block's length."""
+    if payload is None:
+        return
+    doc = payload.decode("utf-8", errors="replace") if isinstance(payload, bytes) else payload
+    # [lead, tag, fragment, tag, fragment, ...]
+    parts = _BLOCK_OPEN_RE.split(_NOISE_RE.sub("", doc))
+    tag_sub = _TAG_RE.sub
+    unescape = _html.unescape
+    anchors = _ANCHOR_RE.findall
+    for i in range(2, len(parts), 2):
+        fragment = parts[i]
+        text = unescape(tag_sub("", fragment) if "<" in fragment else fragment).strip()
+        if not text:
+            continue  # P8: drop empty specks, as morphological opening does
+        tl = len(text)
+        link_len = 0
+        if "<a" in fragment or "<A" in fragment:
+            for a in anchors(fragment):
+                link_len += len(unescape(tag_sub("", a) if "<" in a else a).strip())
+        yield parts[i - 1].lower(), text, tl, link_len if link_len < tl else tl
 
 
 def tokenize_html_py(payload: bytes | str | None) -> list[dict]:
     """Pure-Python single-document tokenizer; runs inside Arrow batches."""
-    if payload is None:
-        return []
-    doc = payload.decode("utf-8", errors="replace") if isinstance(payload, bytes) else payload
-    doc = _NOISE_RE.sub("", doc)
-
-    opens = list(_BLOCK_OPEN_RE.finditer(doc))
-    blocks: list[dict] = []
-    for i, m in enumerate(opens):
-        start = m.end()
-        end = opens[i + 1].start() if i + 1 < len(opens) else len(doc)
-        fragment = doc[start:end]
-        text = _block_text(fragment)
-        if not text:
-            continue  # P8: drop empty specks, as morphological opening does
-        link_len = sum(len(_block_text(a)) for a in _ANCHOR_RE.findall(fragment))
-        blocks.append(
-            {
-                "block_idx": len(blocks),
-                "tag": m.group(1).lower(),
-                "text": text,
-                "text_len": len(text),
-                "link_len": min(link_len, len(text)),
-                "word_count": len(text.split()),
-            }
-        )
-    return blocks
+    return [
+        {
+            "block_idx": i,
+            "tag": tag,
+            "text": text,
+            "text_len": tl,
+            "link_len": ll,
+            "word_count": len(text.split()),
+        }
+        for i, (tag, text, tl, ll) in enumerate(iter_blocks(payload))
+    ]
 
 
 @pandas_udf(BLOCKS_SCHEMA)
@@ -102,23 +108,31 @@ def tokenize_html(html_col: Column | str) -> Column:
     return _tokenize_udf(col)
 
 
+def block_score_py(text_len: int, link_len: int) -> float:
+    """Python mirror of block_score_expr — same IEEE arithmetic in the
+    same order; rounding via round4_py (IEEE-exact floor form,
+    identical to the JVM round4 expression and the DuckDB oracles)."""
+    ld = link_len / (text_len if text_len > 1 else 1.0)
+    raw = 0.7 * (1.0 - ld) + 0.3 * (
+        text_len / LENGTH_SATURATION if text_len < LENGTH_SATURATION else 1.0
+    )
+    return round4_py(100.0 * (raw if 0.0 <= raw <= 1.0 else (0.0 if raw < 0.0 else 1.0)))
+
+
 def _score_block_py(
     b: dict,
     max_link_density: float | None = None,
     min_text_len: int | None = None,
 ) -> dict:
-    """Python mirror of block_score_expr/is_content_expr — same IEEE
-    arithmetic; rounding via round4_py (IEEE-exact floor form, identical
-    to the JVM round4 expression and the DuckDB oracles). The classifier
+    """Python mirror of block_score_expr/is_content_expr. The classifier
     thresholds default to the module constants and accept per-document
     overrides (T2 extraction modes)."""
     mld = MAX_LINK_DENSITY if max_link_density is None else max_link_density
     mtl = MIN_TEXT_LEN if min_text_len is None else min_text_len
-    ld = float(b["link_len"]) / max(float(b["text_len"]), 1.0)
-    raw = 0.7 * (1.0 - ld) + 0.3 * min(float(b["text_len"]) / LENGTH_SATURATION, 1.0)
-    score = 100.0 * min(max(raw, 0.0), 1.0)
-    b["score"] = round4_py(score)
-    b["is_content"] = ld < mld and b["text_len"] >= mtl and b["tag"] in CONTENT_TAGS
+    tl = b["text_len"]
+    b["score"] = block_score_py(tl, b["link_len"])
+    ld = b["link_len"] / (tl if tl > 1 else 1.0)
+    b["is_content"] = ld < mld and tl >= mtl and b["tag"] in _CONTENT_TAG_SET
     return b
 
 
@@ -127,59 +141,14 @@ def tokenize_and_score_py(
     max_link_density: float | None = None,
     min_text_len: int | None = None,
 ) -> list[dict]:
-    """Fused single-pass tokenize + score: one loop, one dict build per
-    block — ~17% faster than composing tokenize_html_py with
-    _score_block_py (95.7 → 80.0 µs/page on the synth corpus), with the
-    same IEEE arithmetic in the same order. Equivalence to the composed
-    form (and to the JVM expressions and the DuckDB oracles) is pinned
-    by tests/test_pipeline_fused.py."""
-    if payload is None:
-        return []
-    mld = MAX_LINK_DENSITY if max_link_density is None else max_link_density
-    mtl = MIN_TEXT_LEN if min_text_len is None else min_text_len
-    doc = payload.decode("utf-8", errors="replace") if isinstance(payload, bytes) else payload
-    doc = _NOISE_RE.sub("", doc)
-    opens = list(_BLOCK_OPEN_RE.finditer(doc))
-    blocks: list[dict] = []
-    tag_sub = _TAG_RE.sub
-    unescape = _html.unescape
-    n = len(doc)
-    for i, m in enumerate(opens):
-        start = m.end()
-        end = opens[i + 1].start() if i + 1 < len(opens) else n
-        fragment = doc[start:end]
-        if "<" in fragment:
-            text = unescape(tag_sub("", fragment)).strip()
-        else:
-            text = unescape(fragment).strip()
-        if not text:
-            continue  # P8: drop empty specks
-        link_len = 0
-        for a in _ANCHOR_RE.findall(fragment):
-            la = unescape(tag_sub("", a) if "<" in a else a).strip()
-            link_len += len(la)
-        tl = len(text)
-        if link_len > tl:
-            link_len = tl
-        tag = m.group(1).lower()
-        # same float ops in the same order as _score_block_py (tl >= 1
-        # always holds here, so max(tl, 1.0) == tl)
-        ld = link_len / tl
-        raw = 0.7 * (1.0 - ld) + 0.3 * (tl / LENGTH_SATURATION if tl < LENGTH_SATURATION else 1.0)
-        score = 100.0 * (raw if 0.0 <= raw <= 1.0 else (0.0 if raw < 0.0 else 1.0))
-        blocks.append(
-            {
-                "block_idx": len(blocks),
-                "tag": tag,
-                "text": text,
-                "text_len": tl,
-                "link_len": link_len,
-                "word_count": len(text.split()),
-                "score": round4_py(score),
-                "is_content": ld < mld and tl >= mtl and tag in _CONTENT_TAG_SET,
-            }
-        )
-    return blocks
+    """Tokenize + score: the scored block dicts of one document, as
+    ``score_blocks(tokenize_html(c))`` builds them (pinned by
+    tests/test_pipeline_fused.py). The fused page kernel does not build
+    these dicts; it reads ``iter_blocks`` directly."""
+    return [
+        _score_block_py(b, max_link_density, min_text_len)
+        for b in tokenize_html_py(payload)
+    ]
 
 
 @pandas_udf(SCORED_BLOCKS_SCHEMA)

@@ -29,8 +29,12 @@ from pyspark.sql import types as T
 from narowi_ocr_spark.functions.readings import extract_readings, extract_readings_py
 from narowi_ocr_spark.operators.assemble import main_text, mean_content_score
 from narowi_ocr_spark.operators.blocks import (
+    _CONTENT_TAG_SET,
+    MAX_LINK_DENSITY,
+    MIN_TEXT_LEN,
+    block_score_py,
+    iter_blocks,
     round4_py,
-    tokenize_and_score_py,
     tokenize_scored,
 )
 from narowi_ocr_spark.operators.results import with_status
@@ -52,26 +56,28 @@ def extract_page_py(
     objects (operators/pdftext.py) — everything downstream of
     tokenization (scoring, classification, assembly, reading kernels)
     is shared."""
+    mld = MAX_LINK_DENSITY if max_link_density is None else max_link_density
+    mtl = MIN_TEXT_LEN if min_text_len is None else min_text_len
     if parser == 1:
-        from narowi_ocr_spark.operators.blocks import _score_block_py
         from narowi_ocr_spark.operators.pdftext import tokenize_pdf_py
 
-        blocks = [
-            _score_block_py(b, max_link_density, min_text_len)
+        blocks = (
+            (b["tag"], b["text"], b["text_len"], b["link_len"])
             for b in tokenize_pdf_py(payload)
-        ]
+        )
     else:
-        blocks = tokenize_and_score_py(payload, max_link_density, min_text_len)
-    text = "\n".join(b["text"] for b in blocks if b["is_content"]).strip()
-    nonempty = [b for b in blocks if b["text"]]
-    if nonempty:
-        # fold order + rounding mirror the JVM mean_content_score exactly
-        acc = 0.0
-        for b in nonempty:
-            acc += b["score"]
-        confidence = round4_py(acc / float(len(nonempty)))
-    else:
-        confidence = 0.0
+        blocks = iter_blocks(payload)
+    content: list[str] = []
+    # fold order + rounding mirror the JVM mean_content_score exactly
+    acc = 0.0
+    n = 0
+    for tag, text, tl, ll in blocks:  # every block has text, so tl >= 1
+        acc += block_score_py(tl, ll)
+        n += 1
+        if ll / tl < mld and tl >= mtl and tag in _CONTENT_TAG_SET:
+            content.append(text)
+    text = "\n".join(content).strip()
+    confidence = round4_py(acc / float(n)) if n else 0.0
     return text, confidence, extract_readings_py(text)
 
 
@@ -102,31 +108,18 @@ def _extract_arrow(batches):
         ]
     )
     for b in batches:
-        texts: list[str] = []
-        confs: list[float] = []
-        reads: list[list[dict]] = []
-        # optional per-row T2 mode thresholds (absent on the default path)
-        has_modes = "_mld" in b.schema.names
-        mlds = b.column("_mld").to_pylist() if has_modes else None
-        mtls = b.column("_mtl").to_pylist() if has_modes else None
-        parsers = (
-            b.column("_parser").to_pylist()
-            if "_parser" in b.schema.names
-            else None
-        )
-        for i, payload in enumerate(b.column("html")):
-            if has_modes:
-                t, c, r = extract_page_py(
-                    payload.as_py(),
-                    mlds[i],
-                    mtls[i],
-                    parsers[i] if parsers else 0,
-                )
-            else:
-                t, c, r = extract_page_py(payload.as_py())
-            texts.append(t)
-            confs.append(c)
-            reads.append(r)
+        # per-row T2 mode thresholds and parser (absent on the default
+        # path); payloads convert one at a time, never a whole batch
+        modes = [
+            b.column(c).to_pylist()
+            for c in ("_mld", "_mtl", "_parser")
+            if c in b.schema.names
+        ]
+        rows = [
+            extract_page_py(p.as_py(), *m)
+            for p, *m in zip(b.column("html"), *modes)
+        ]
+        texts, confs, reads = zip(*rows) if rows else ((), (), ())
         yield pa.RecordBatch.from_arrays(
             [
                 b.column("url"),

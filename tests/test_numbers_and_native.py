@@ -121,6 +121,58 @@ def test_numbers_equal_pinned_digests():
         assert g == p, repr(text)
 
 
+def _span(v, unit, raw):
+    return {"value": v, "unit": unit, "confidence": 0.8, "raw_text": raw}
+
+
+def _reading(t, v, unit):
+    return {"type": t, "value": v, "unit": unit, "is_valid": True}
+
+
+# (text, readings, number spans): texts whose only digits are non-ASCII
+# (``\d`` matches any Unicode decimal digit), expected values taken
+# from the per-line and whole-text regex scans before the shared digit
+# gate; plus digit-free ASCII, which yields nothing.
+UNICODE_DIGIT_CASES = [
+    ("T: ٣٧ C", [_reading("TEMPERATURE", 37.0, "C")], []),
+    ("３７ kg", [_reading("WEIGHT", 37.0, "kg")], []),
+    (
+        "१२०/८० mmHg",
+        [_reading("BLOOD_PRESSURE", 120.0, "120/80 mmHg")],
+        [
+            _span(120.0, "mmHg", "१२०/८०"),
+            _span(80.0, "mmHg", "१२०/८०"),
+            _span(120.0, "mmHg", "१२०/८० mmHg"),
+            _span(80.0, "mmHg", "१२०/८० mmHg"),
+        ],
+    ),
+    (
+        "PULSE: ७२\nRESP: ١٦\nno digit line",
+        [
+            _reading("HEART_RATE", 72.0, "BPM"),
+            _reading("RESPIRATORY_RATE", 16.0, "breaths/min"),
+        ],
+        [],
+    ),
+    (
+        "Größe ５'１０\"\r\nΘ: ٣٩.٥C",
+        [_reading("HEIGHT", 70.0, "in"), _reading("TEMPERATURE", 39.5, "C")],
+        [_span(39.5, "°C", "٣٩.٥C"), _span(39.5, "°C", "٣٩.٥C")],
+    ),
+    ("no digits\nat all\r\nhere\rnor here", [], []),
+]
+
+
+@pytest.mark.parametrize("text,readings,numbers", UNICODE_DIGIT_CASES)
+def test_digit_gate_exact_on_unicode_digits(text, readings, numbers):
+    """The digit gate both kernels share must pass every Unicode decimal
+    digit, not only 0-9: non-ASCII digits still yield spans."""
+    from narowi_ocr_spark.functions.readings import extract_readings_py
+
+    assert extract_readings_py(text) == readings
+    assert extract_numbers_py(text, 0.8) == numbers
+
+
 TEMP_FORMAT_CASES = [
     # (text, is_valid, adjustment, reason, correction)
     ("98.6F", True, 0.0, None, None),

@@ -233,3 +233,89 @@ def test_readings_equal_pinned_digests():
     assert len(got) == len(pinned) == len(GOLDEN) + 502
     for text, g, p in zip(corpus, got, pinned):
         assert g == p, repr(text)
+
+
+def page_kernel_corpus() -> list[tuple]:
+    """The page kernel's pinned cases: (payload, max_link_density,
+    min_text_len, parser). Fixture pages, release-style prose pages and
+    pathological payloads under the default thresholds and under each
+    extraction mode's threshold set, plus PDF documents under the PDF
+    parser."""
+    from narowi_ocr_spark.plans.pipeline import EXTRACTION_MODES
+    from narowi_ocr_spark.sources.pages import build_page, build_pdf_page
+
+    odd = [
+        None,
+        b"",
+        b"<p>",
+        "<p>a str payload, not bytes: 98.6F</p>",
+        b"\xff\xfe<p>bad \xc3( utf-8 98.6F</p><div>\x80\x81 72 BPM</div>",
+        b"<p>Fish &amp; chips &lt;b&gt; &#x31;&#50;0/80 mmHg &nbsp;</p>"
+        b"<p>&<a>amp;</a></p>",
+        b'<P>see <A HREF="/x">Upper Link</A> and <a href=y>low</a> text</P>'
+        b"<DIV>PULSE: 72</DIV><Li><A>only a link</A></Li>",
+        b"lead text 120/80 mmHg before any block<p>body 72 BPM</p>",
+        "<div>T: ٣٧ C</div><p>３７ kg</p>"
+        "<li>१२०/८० mmHg</li>".encode(),
+        b"<pre>line one\r\nPULSE: 72\rR: 16\n\nno digits here</pre>",
+        b"<SCRIPT>var a = '<p>72 BPM</p>'</SCRIPT><STYLE>p{}</STYLE>"
+        b"<p>ok 98.6F</p><!-- <p>120/80 mmHg</p> -->",
+        b"<p> </p><div>\n\t</div><td><b></b></td><h2>Title only</h2>",
+        b"<!-- never closed <p>SpO2: 98%</p>",
+        b"<p>multi\nline\nprose without a single digit\nat all</p>",
+    ]
+    html = (
+        [build_page(i)[2] for i in range(160)]
+        + [build_page(i, 64, True)[2] for i in range(80)]
+        + odd
+    )
+    thresholds = [(None, None)] + [
+        (m["max_link_density"], m["min_text_len"]) for m in EXTRACTION_MODES.values()
+    ]
+    cases = [(p, mld, mtl, 0) for mld, mtl in thresholds for p in html]
+    pdf = EXTRACTION_MODES["pdf"]
+    cases += [
+        (build_pdf_page(i)[2], pdf["max_link_density"], pdf["min_text_len"], 1)
+        for i in range(30)
+    ]
+    return cases
+
+
+def page_kernel_digests(cases) -> list[str]:
+    """One 16-hex digest per case over (case, text, confidence as
+    float64 bits, readings) as sorted-key JSON."""
+    import hashlib
+    import json
+    import struct
+
+    from narowi_ocr_spark.plans.pipeline import extract_page_py
+
+    out = []
+    for payload, mld, mtl, parser in cases:
+        if parser:
+            text, conf, reads = extract_page_py(payload, mld, mtl, parser)
+        elif mld is None:
+            text, conf, reads = extract_page_py(payload)
+        else:
+            text, conf, reads = extract_page_py(payload, mld, mtl)
+        row = [repr(payload), mld, mtl, parser, text, struct.pack(">d", conf).hex(), reads]
+        out.append(hashlib.sha256(json.dumps(row, sort_keys=True).encode()).hexdigest()[:16])
+    return out
+
+
+def test_page_kernel_equals_pinned_digests():
+    """Byte identity of the fused page kernel: extracted text,
+    confidence bits and readings over page_kernel_corpus() must equal
+    the digests in fixtures/kernel_digests.json, written from the kernel
+    that test_fused_equals_modular and the oracle-column test verified."""
+    import json
+
+    from test_numbers_and_native import DIGESTS
+
+    with open(DIGESTS) as f:
+        pinned = json.load(f)["extract_page_py"]
+    cases = page_kernel_corpus()
+    got = page_kernel_digests(cases)
+    assert len(got) == len(pinned) == len(cases)
+    for case, g, p in zip(cases, got, pinned):
+        assert g == p, repr(case)[:300]

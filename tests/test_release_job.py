@@ -447,6 +447,37 @@ def test_release_job_width_invariant_and_counts_stage_jobs(spark, tmp_path):
     assert m1["stage_jobs"]["01_clean_ids"] == mw["stage_jobs"]["01_clean_ids"] == 1
 
 
+def test_release_job_accounting_py4j_calls_do_not_grow(spark, tmp_path):
+    """The py4j traffic of counting each step's jobs (the job-id lookups
+    and every Java-array command) is the same on the 2nd and 3rd
+    release in one session, though the session keeps every earlier
+    run's jobs; the two resumed runs count the same jobs."""
+    from run_release_job import run_release
+
+    src = str(tmp_path / "pages")
+    _write_near_dup_corpus(spark, src, n=60)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(command, *args, **kwargs):
+        if command.startswith("a\n") or "\ngetJobIdsForGroup\n" in command:
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    per_run = []
+    try:
+        for _ in range(3):
+            calls[0] = 0
+            m = run_release(spark, src, str(tmp_path / "release"), apply_c4=False)
+            per_run.append((calls[0], m["stage_jobs"]))
+    finally:
+        del client.send_command
+    assert per_run[1][0] > 0
+    assert per_run[1] == per_run[2]
+
+
 def test_release_outputs_match_pinned_digests(spark, tmp_path):
     """A full-gate release of the benchmark's warm-up slice (every
     planted class) delivers exactly the pinned outputs: the id set of

@@ -50,6 +50,7 @@ import operator
 import os
 import sys
 import time
+import uuid
 from functools import reduce, wraps
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -74,8 +75,9 @@ DEFAULT_BLOCKLIST = ["slow", "dup"]  # demo terms; deployments load the
 # run parameters a checkpoint depends on, written next to checkpoints/
 PARAMS_FILE = "release_params.json"
 
-# Spark job group of each run_release step (manifest ``stage_jobs``)
-JOB_GROUP = "run_release:{}"
+# Spark job group of each run_release step (manifest ``stage_jobs``):
+# run_release:<run token>:<step>, unique to one run
+JOB_GROUP = "run_release:{}:{}"
 # the description of each step's jobs and SQL executions (tools/plan_audit.py
 # groups the executed plans by it)
 STEP_DESCRIPTION = "release step {}"
@@ -458,12 +460,13 @@ def run_release(
     and the work feeding it, such as the near-dedup connected-components
     checkpoints; a resumed stage's count) and
     ``lineage`` (the partition histogram of the delivered shards). Every
-    step runs under its own job group, ``run_release:<step>``, described
-    as ``release step <step>`` (``STEP_DESCRIPTION``, which also labels
-    the step's SQL executions), and the count is read from
-    ``statusTracker().getJobIdsForGroup``. The
-    manifest itself is written from the driver, not by a job. The
-    caller's job group is restored on exit.
+    step runs under its own job group, ``run_release:<run>:<step>``
+    with a token unique to the run, described as ``release step
+    <step>`` (``STEP_DESCRIPTION``, which also labels the step's SQL
+    executions), and the count is the length of the group's job id
+    array (two py4j calls per step). The manifest itself is written
+    from the driver, not by a job. The caller's job group is restored
+    on exit.
 
     ``codegen_compiles`` is the number of generated-code classes the
     run compiled: the delta of Spark's ``CodegenMetrics`` compilation
@@ -501,16 +504,13 @@ def run_release(
     stage_s: dict[str, float] = {}
     partitions: dict[str, int] = {}
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    # job ids each group held before this run (an earlier run in the
-    # same session used the same group ids)
-    prior_jobs: dict[str, set[int]] = {}
+    run = uuid.uuid4().hex
+    steps: list[str] = []
 
     def group(name: str) -> None:
         """Attribute every Spark job from here on to step ``name``."""
-        gid = JOB_GROUP.format(name)
-        prior_jobs[name] = set(tracker.getJobIdsForGroup(gid))
-        sc.setJobGroup(gid, STEP_DESCRIPTION.format(name))
+        steps.append(name)
+        sc.setJobGroup(JOB_GROUP.format(run, name), STEP_DESCRIPTION.format(name))
 
     # once a stage recomputes, every later stage recomputes too: its
     # checkpoint was derived from the replaced one
@@ -642,9 +642,13 @@ def run_release(
     # the status store learns of jobs from the listener bus: drain it
     # so every job started above is in the counts
     sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # the length of the Java id array: two py4j calls a step however many
+    # jobs the session kept (PySpark's getJobIdsForGroup fetches the ids
+    # one call each)
+    tracker = sc.statusTracker()._jtracker
     stage_jobs = {
-        name: len(set(tracker.getJobIdsForGroup(JOB_GROUP.format(name))) - ids)
-        for name, ids in prior_jobs.items()
+        name: len(tracker.getJobIdsForGroup(JOB_GROUP.format(run, name)))
+        for name in steps
     }
     manifest = {
         "ts": time.time(),
